@@ -22,6 +22,7 @@ Determinism notes:
 from __future__ import annotations
 
 import datetime as dt
+import glob
 import os
 import sys
 import threading
@@ -648,7 +649,8 @@ def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The two branches are independent until the union; overlap their
     # construction-phase driver actions (guide §2.6 — the ann_search
     # precedent). Plan unchanged; interleaved 7-pass race median
-    # 1.243 -> 1.127 s at sf0.1 (tools/ab_branch_threads.py).
+    # 1.243 -> 1.127 s at sf0.1
+    # (`git show dccf085:tools/ab_branch_threads.py`).
     with ThreadPoolExecutor(max_workers=2) as pool:
         fj = pool.submit(
             ngram_jaccard_pairs, docs,
@@ -1346,6 +1348,26 @@ def text_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _parquet_footer_rows(path: str) -> Optional[int]:
+    """Row count summed over the parquet footers of a file or a directory
+    of part files (no scan); None when pyarrow is missing or any footer
+    is unreadable, so callers fall back instead of failing."""
+    try:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+    except ImportError:
+        return None
+    parts = (
+        sorted(glob.glob(os.path.join(path, "*.parquet")))
+        if os.path.isdir(path)
+        else [path]
+    )
+    try:
+        return sum(pq.ParquetFile(p).metadata.num_rows for p in parts)
+    except (OSError, pa.ArrowException):
+        return None
+
+
 def q_stream_cdc_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful streaming CDC view under the value oracle.
 
@@ -1380,23 +1402,16 @@ def q_stream_cdc_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from the stream's row volume (parquet footer, no scan) at ~6k
     # events per partition, capped at defaultParallelism once the
     # volume saturates the cores. Quiet-window races
-    # (tools/ab_cdc_partitions.py): sf0.1 (100k events) — 16 parts
-    # 1.504 s vs 32 parts 2.023 s vs 8 parts 1.706 s; sf1 (1M events)
-    # — 32 parts 2.892 s vs 16 parts 3.526 s; the formula lands on the
-    # measured winner at both SFs and on full parallelism at cluster
-    # volumes. Results are partition-count-independent (the state
-    # merge is per-key).
-    try:
-        import pyarrow.parquet as pq
-
-        n_events = pq.ParquetFile(
-            os.path.join(sf_dir, "events.parquet")
-        ).metadata.num_rows
-        state_parts = min(
-            spark.sparkContext.defaultParallelism, max(8, n_events // 6250)
-        )
-    except (ImportError, OSError):
-        state_parts = spark.sparkContext.defaultParallelism
+    # (`git show dccf085:tools/ab_cdc_partitions.py`): sf0.1 (100k
+    # events) — 16 parts 1.504 s vs 32 parts 2.023 s vs 8 parts
+    # 1.706 s; sf1 (1M events) — 32 parts 2.892 s vs 16 parts 3.526 s;
+    # the formula lands on the measured winner at both SFs and on full
+    # parallelism at cluster volumes. Results are partition-count-
+    # independent (the state merge is per-key).
+    n_events = _parquet_footer_rows(os.path.join(sf_dir, "events.parquet"))
+    state_parts = spark.sparkContext.defaultParallelism
+    if n_events is not None:
+        state_parts = min(state_parts, max(8, n_events // 6250))
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(state_parts))
     try:
@@ -1756,7 +1771,7 @@ def ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # runs concurrent jobs fine; job descriptions are thread-local);
     # the returned plan is byte-identical to the serial build.
     # Interleaved 7-pass race: serial median 2.023 s / threaded 1.330 s
-    # at sf0.1 (tools/ab_ann_threads.py).
+    # at sf0.1 (`git show dccf085:tools/ab_ann_threads.py`).
     with ThreadPoolExecutor(max_workers=4) as pool:
         futs = [
             pool.submit(fn, spark, sf_dir)
@@ -1780,7 +1795,8 @@ def dedup_embedding_both(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Overlap the two branches' construction actions (guide §2.6, the
     # ann_search precedent): interleaved 7-pass race median
-    # 0.573 -> 0.498 s at sf0.1 (tools/ab_branch_threads.py).
+    # 0.573 -> 0.498 s at sf0.1
+    # (`git show dccf085:tools/ab_branch_threads.py`).
     with ThreadPoolExecutor(max_workers=2) as pool:
         fe = pool.submit(dedup_embedding, spark, sf_dir)
         fl = pool.submit(dedup_embedding_lsh, spark, sf_dir)
@@ -2393,9 +2409,9 @@ def text_unigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the arpa broadcast-gate count rides under lm_quality_scores'
     # stats aggregates — guide §2.6, the ann_search precedent). Plan
     # unchanged; interleaved 7-pass race median 4.097 -> 3.634 s at
-    # sf0.1 (tools/ab_branch_threads.py). The artifact lookup stays on
-    # the caller thread: build-once mutation of _ANN_INDEX_CACHE
-    # belongs to one thread.
+    # sf0.1 (`git show dccf085:tools/ab_branch_threads.py`). The
+    # artifact lookup stays on the caller thread: build-once mutation of
+    # _ANN_INDEX_CACHE belongs to one thread.
     lm = _arpa_lm_for(spark, sf_dir)
     with ThreadPoolExecutor(max_workers=2) as pool:
         fs = pool.submit(

@@ -106,16 +106,6 @@ def Field(
     return PydanticField(default, json_schema_extra=extra or None, **kwargs)
 
 
-def _is_optional(annotation: Any) -> bool:
-    return get_origin(annotation) in (Union,) or str(get_origin(annotation)) in (
-        "types.UnionType",
-    ) or (
-        hasattr(annotation, "__args__")
-        and get_origin(annotation) is not None
-        and type(None) in get_args(annotation)
-    )
-
-
 def _unwrap_optional(annotation: Any) -> tuple[Any, bool]:
     """Return (inner_type, nullable) for a possibly-Optional annotation."""
     origin = get_origin(annotation)

@@ -202,12 +202,3 @@ def connected_components(
         )
     return labels
 
-
-def dedup_cluster_representatives(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
-    """``node, component`` for every clustered doc; keep rows where
-    ``node == component`` (the minimum id) as the canonical survivor."""
-    return connected_components(pairs, id_a=id_a, id_b=id_b)

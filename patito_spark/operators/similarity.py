@@ -22,7 +22,7 @@ these hot paths (~100-1000× slower than codegen/numpy per op).
 
 from __future__ import annotations
 
-from typing import Iterator, Optional, Sequence
+from typing import Iterator, Optional
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql import types as T
@@ -152,35 +152,6 @@ def _deterministic_hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[
     planes = rng.normal(size=(n_planes, dim))
     planes /= np.linalg.norm(planes, axis=1, keepdims=True)
     return planes.tolist()
-
-
-def hyperplane_bucket(
-    vec: Column, planes: Sequence[Sequence[float]]
-) -> Column:
-    """Sign-random-projection bucket id (bigint) for a vector column.
-
-    Expression formulation (interpreted higher-order functions) — kept for
-    callers that need a pure-Column API, e.g. inside a larger expression.
-    Prefer :func:`hyperplane_lsh_buckets` (Arrow-batched numpy) on any
-    per-row hot path.
-    """
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        dot = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(float(p)) for p in plane]),
-                lambda x, p: x.cast("double") * p,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket.bitwiseOR(
-            F.when(dot > 0, F.lit(1 << i).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return bucket
 
 
 def hyperplane_lsh_buckets(

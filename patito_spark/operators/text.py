@@ -161,39 +161,6 @@ def detect_language(text: Union[str, Column]) -> Column:
     return F.when(_text(text).isNull(), F.lit(langs[0])).otherwise(argmax)
 
 
-def detect_language_agg(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Language-ID as a codegen aggregate — the scale formulation.
-
-    Same votes/tie-order semantics as :func:`detect_language`, but tokens
-    are exploded to rows and scored with conditional counts in ONE hash
-    aggregate (map-side combined) instead of per-row interpreted array
-    lambdas (~1000× slower per op). Returns ``<id_col>, lang_pred``.
-    """
-    exploded = df.select(
-        F.col(id_col), F.explode(tokens(text_col)).alias("__tok")
-    )
-    scores = exploded.groupBy(id_col).agg(
-        *[
-            F.count(F.when(F.col("__tok").isin(*markers), 1)).alias(
-                f"__s_{lang}"
-            )
-            for lang, markers in LANG_MARKERS.items()
-        ]
-    )
-    langs = list(LANG_MARKERS)
-    result = F.lit(langs[0])
-    best = F.col(f"__s_{langs[0]}")
-    for lang in langs[1:]:
-        is_better = F.col(f"__s_{lang}") > best
-        result = F.when(is_better, F.lit(lang)).otherwise(result)
-        best = F.when(is_better, F.col(f"__s_{lang}")).otherwise(best)
-    return scores.select(F.col(id_col), result.alias("lang_pred"))
-
-
 #: Unicode block ranges per writing system (BMP; the blocks that cover
 #: the overwhelming mass of web text). CJK groups Han + kana + hangul.
 SCRIPT_RANGES: dict[str, str] = {

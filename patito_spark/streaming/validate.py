@@ -12,6 +12,7 @@ from __future__ import annotations
 from typing import Optional, TYPE_CHECKING
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import types as T
 
 if TYPE_CHECKING:
     from patito_spark.model import Model
@@ -31,6 +32,13 @@ def row_validity_column(schema: type["Model"]) -> Column:
         col = F.col(name)
         if not spec.nullable:
             predicate = predicate & col.isNotNull()
+        # Batch validate()'s "missing value in lists" check, per row.
+        if isinstance(spec.spark_type, T.ArrayType) and not (
+            spec.spark_type.containsNull
+        ):
+            predicate = predicate & (
+                col.isNull() | F.forall(col, lambda x: x.isNotNull())
+            )
         if spec.enum_values is not None:
             predicate = predicate & (col.isNull() | col.isin(spec.enum_values))
         checks = _bound_checks(spec, col)

@@ -153,6 +153,27 @@ def test_events_ts_normalizes_both_representations(spark, tmp_path):
         spark.conf.set("spark.sql.session.timeZone", tz)
 
 
+def test_parquet_footer_rows_sums_parts_and_falls_back(tmp_path):
+    """The CDC state-partition probe reads row counts from footers: a
+    directory of parts sums, and a corrupt or missing file yields None
+    (the caller falls back to defaultParallelism) instead of raising."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    parts = tmp_path / "events.parquet"
+    parts.mkdir()
+    pq.write_table(pa.table({"x": [1, 2, 3]}), parts / "part-0.parquet")
+    pq.write_table(pa.table({"x": [4, 5]}), parts / "part-1.parquet")
+    (parts / "_SUCCESS").write_text("")
+    assert entry_mod._parquet_footer_rows(str(parts)) == 5
+    assert entry_mod._parquet_footer_rows(str(parts / "part-1.parquet")) == 2
+
+    corrupt = tmp_path / "corrupt.parquet"
+    corrupt.write_bytes(b"PAR1 this is not a parquet file")
+    assert entry_mod._parquet_footer_rows(str(corrupt)) is None
+    assert entry_mod._parquet_footer_rows(str(tmp_path / "gone.parquet")) is None
+
+
 def test_text_token_counts_fused_encode(spark):
     """The entry's one-stage dual encode is row-identical to composing
     the standalone with_unigram_token_ids / with_bpe_token_ids

@@ -62,6 +62,20 @@ def test_row_validity_column(spark):
     validity = {r.event_id: r.ok for r in out}
     assert validity == {1: True, 3: False, 4: False}
 
+    class Tagged(pt.Model):
+        tag_id: int
+        xs: list[int]
+
+    lists = spark.createDataFrame(
+        [(1, [1, 2]), (2, [1, None]), (3, [])],
+        schema="tag_id long, xs array<long>",
+    )
+    out = lists.withColumn("ok", row_validity_column(Tagged)).collect()
+    assert {r.tag_id: r.ok for r in out} == {1: True, 2: False, 3: True}
+    # Same verdict as batch validation.
+    with pytest.raises(pt.DataFrameValidationError, match="missing value in lists"):
+        Tagged.validate_df(lists.filter("tag_id = 2"))
+
 
 def test_read_stream_drop_invalid(spark, event_parquet):
     stream = read_stream(event_parquet, Event, spark=spark, drop_invalid=True)

@@ -26,23 +26,14 @@ def main() -> None:
     a = ap.parse_args()
 
     import duckdb
-    from pyspark.sql import SparkSession
 
     import __spark_entry__ as em
     from patito_spark.functions.cache import release_caches
+    from patito_spark.session import get_session
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.appName("ab-sf1")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", "48g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    # The suite's session-lived ANN caches need bench.py's heap (see there).
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "48g")
+    spark = get_session("ab-sf1")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

@@ -36,20 +36,15 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from patito_spark.session import get_session
+
     # warehouse.dir is a static conf — set it before session creation.
     wh = _tf.mkdtemp(prefix="pt_bucket_wh_")
     SparkSession.builder.config("spark.sql.warehouse.dir", wh)
-    spark = (
-        SparkSession.builder.appName("bucketing-bench")
-        .master(f"local[{os.cpu_count() or 4}]")
-        .config("spark.sql.warehouse.dir", wh)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_session("bucketing-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    # The plain join shuffles into as many partitions as there are buckets.
+    spark.conf.set("spark.sql.shuffle.partitions", str(BUCKETS))
     # Disable broadcast so the plain join actually shuffles (at real scale
     # neither fact side fits in a broadcast).
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -1,8 +1,16 @@
 """Regenerate docs/plans.md: formatted physical plans of headline queries.
 
 Run from the repo root: ``python tools/dump_plans.py``
+
+With ``--round rNN [--suffix before|after] [--only a,b]`` it instead
+captures ``.explain("formatted")`` of every declared query at
+$SPARK_GRAFT_SF_DIR (default sf0.1, the bench scale) into
+``plans/rNN/<query>_<suffix>.txt``. Plans are captured WITHOUT executing
+(the initial AdaptiveSparkPlan), which is what ``.explain("formatted")``
+prints.
 """
 
+import argparse
 import os
 import re
 import sys
@@ -10,7 +18,8 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
-from patito_spark.plans import executed_plan
+from patito_spark.functions.cache import release_caches
+from patito_spark.plans import executed_plan, formatted_explain
 from patito_spark.session import get_session
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -99,9 +108,40 @@ HEADLINERS = {
 }
 
 
+def dump_round(spark, round_id: str, suffix: str, only) -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    out_dir = os.path.join(os.path.dirname(__file__), "..", "plans", round_id)
+    os.makedirs(out_dir, exist_ok=True)
+    prev = spark.conf.get("spark.sql.maxMetadataStringLength", "100")
+    spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
+    try:
+        for name, fn in entry_mod.queries().items():
+            if only and name not in only:
+                continue
+            spark.sparkContext.setJobDescription(f"plan-dump: {name}")
+            text = formatted_explain(fn(spark, sf_dir))
+            path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+            with open(path, "w") as fh:
+                fh.write(text)
+            release_caches()
+            print(f"wrote {path} ({len(text)} bytes)")
+    finally:
+        spark.conf.set("spark.sql.maxMetadataStringLength", prev)
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--round", dest="round_id")
+    ap.add_argument("--suffix", default="before")
+    ap.add_argument("--only")
+    a = ap.parse_args()
     spark = get_session("plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
+    if a.round_id:
+        dump_round(
+            spark, a.round_id, a.suffix, set(a.only.split(",")) if a.only else None
+        )
+        return
     queries = entry_mod.queries()
     out = [
         "# Physical plans of headline queries (auto-generated)",

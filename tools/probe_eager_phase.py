@@ -23,28 +23,11 @@ def main() -> None:
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as em
     from patito_spark.functions.cache import release_caches
+    from patito_spark.session import get_session
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
-    spark = (
-        SparkSession.builder.appName("probe-eager")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.files.openCostInBytes", str(256 * 1024))
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_DRIVER_MEMORY", "48g"),
-        )
-        .config("spark.sql.codegen.cache.maxEntries", "10000")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_session("probe-eager")
     spark.sparkContext.setLogLevel("ERROR")
 
     queries = em.queries()

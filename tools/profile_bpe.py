@@ -27,18 +27,11 @@ def main() -> None:
     ap.add_argument("--train-docs", type=int, default=2000)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.codegen.cache.maxEntries", "10000")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "48g")
-        .getOrCreate()
-    )
+    from patito_spark.session import get_session
+
+    spark = get_session("profile-bpe")
     spark.sparkContext.setLogLevel("ERROR")
 
     from patito_spark.operators.tokenizer import train_bpe

@@ -23,7 +23,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
+
+from patito_spark.session import get_session
 
 SF_SMALL = "/root/testdata/sf0.1"
 SF_BIG = "/root/repo/.localdata/sf1"
@@ -84,14 +86,7 @@ def main():
     ap.add_argument("--runs", type=int, default=3)
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.cpu_count()}]")
-        .config("spark.sql.shuffle.partitions", str(os.cpu_count()))
-        .config("spark.sql.files.openCostInBytes", str(256 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_session("profile-embedding-lsh")
     spark.sparkContext.setLogLevel("ERROR")
     for sf_dir in (SF_SMALL, SF_BIG):
         if not os.path.isdir(sf_dir):

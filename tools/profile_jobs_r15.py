@@ -18,31 +18,15 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
 import __spark_entry__ as entry_mod
 from patito_spark.functions.cache import release_caches
+from patito_spark.session import get_session
 
 
 def main() -> None:
     only = set(sys.argv[1].split(",")) if len(sys.argv) > 1 else None
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
-    spark = (
-        SparkSession.builder.appName("patito_spark-job-profile")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.files.openCostInBytes", str(256 * 1024))
-        .config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g")
-        )
-        .config("spark.sql.codegen.cache.maxEntries", "10000")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_session("patito_spark-job-profile")
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
     tracker = sc.statusTracker

@@ -12,9 +12,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
+from patito_spark.session import get_session
 
 
 def timeit(label, fn, runs=3):
@@ -29,17 +30,7 @@ def timeit(label, fn, runs=3):
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = (
-        SparkSession.builder.appName("profile-minhash")
-        .master("local[32]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_session("profile-minhash")
     spark.sparkContext.setLogLevel("ERROR")
 
     from patito_spark.functions.cache import release_caches

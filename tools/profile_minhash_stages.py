@@ -18,7 +18,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
+
+from patito_spark.session import get_session
 
 SF_SMALL = "/root/testdata/sf0.1"
 SF_BIG = "/root/repo/.localdata/sf1"
@@ -126,17 +128,7 @@ def main():
     ap.add_argument("--runs", type=int, default=2)
     a = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.appName("profile-minhash-stages")
-        .master("local[32]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.files.openCostInBytes", str(256 * 1024))
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_session("profile-minhash-stages")
     spark.sparkContext.setLogLevel("ERROR")
 
     for sf_dir in (SF_SMALL, SF_BIG):

@@ -27,7 +27,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from patito_spark.session import get_session
 
 SF_DIRS = ("/root/testdata/sf0.1", "/root/repo/.localdata/sf1")
 
@@ -91,18 +91,7 @@ def main():
     thresholds = [float(x) for x in args.thresholds.split(",")]
     tables = [int(x) for x in args.tables.split(",")]
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.cpu_count()}]")
-        .config("spark.sql.shuffle.partitions", str(os.cpu_count()))
-        .config("spark.sql.files.openCostInBytes", str(256 * 1024))
-        .config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g")
-        )
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
+    spark = get_session("recall-embedding-lsh")
     spark.sparkContext.setLogLevel("ERROR")
 
     from patito_spark.operators.dedup import (

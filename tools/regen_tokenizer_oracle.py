@@ -30,7 +30,7 @@ def main() -> None:
     ap.add_argument("--print", action="store_true", dest="emit")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
     import __spark_entry__ as em
     from patito_spark.operators.tokenizer import (
@@ -41,14 +41,9 @@ def main() -> None:
         build_unigram_vocab,
         viterbi_segment,
     )
+    from patito_spark.session import get_session
 
-    spark = (
-        SparkSession.builder.appName("regen-tokenizer-oracle")
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_session("regen-tokenizer-oracle")
     spark.sparkContext.setLogLevel("ERROR")
 
     logp, merges, vocab = em._tokenizer_artifacts_for(spark, args.sf_dir)

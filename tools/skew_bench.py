@@ -35,7 +35,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
+
+from patito_spark.session import get_session
 
 
 def timeit(fn, runs):
@@ -59,16 +61,7 @@ def main():
     ap.add_argument("--runs", type=int, default=3)
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.cpu_count()}]")
-        .config("spark.sql.shuffle.partitions", str(os.cpu_count()))
-        .config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g")
-        )
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_session("skew-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     from patito_spark.operators.skew import salted_aggregate, salted_join

@@ -30,7 +30,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from patito_spark.session import get_session
 
 
 def state_rows(query) -> int:
@@ -100,16 +100,7 @@ def main():
     ap.add_argument("--events", type=int, default=1_000_000)
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.cpu_count()}]")
-        .config("spark.sql.shuffle.partitions", str(os.cpu_count()))
-        .config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g")
-        )
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_session("streaming-throughput")
     spark.sparkContext.setLogLevel("ERROR")
     work = tempfile.mkdtemp(prefix="stream_tp_")
     out = {}

@@ -27,29 +27,29 @@ from patito_spark.functions.cache import release_caches
 from patito_spark.session import get_session
 
 
+def frame_diff(sdf, odf) -> dict:
+    """Compare two pandas frames as the driver's hash does: columns
+    sorted by name, rows sorted, values stringified."""
+    scols, ocols = sorted(sdf.columns), sorted(odf.columns)
+    if scols != ocols:
+        return {"ok": False, "err": f"schema {scols} != {ocols}"}
+    sdf = sdf[scols].sort_values(scols).reset_index(drop=True)
+    odf = odf[scols].sort_values(scols).reset_index(drop=True)
+    if len(sdf) != len(odf):
+        return {"ok": False, "err": f"rows {len(sdf)} != {len(odf)}"}
+    mism = sum(
+        int((sdf[c].astype(str).values != odf[c].astype(str).values).sum())
+        for c in scols
+    )
+    return {"ok": mism == 0, "rows": len(sdf), "mismatched_values": mism}
+
+
 def compare(spark, con, name: str, sf_dir: str) -> dict:
     t0 = time.time()
     try:
         sdf = em.queries()[name](spark, sf_dir).toPandas()
         odf = con.execute(em.oracle_sql()[name]).df()
-        scols, ocols = sorted(sdf.columns), sorted(odf.columns)
-        if scols != ocols:
-            return {"ok": False, "err": f"schema {scols} != {ocols}"}
-        sdf = sdf[scols].sort_values(scols).reset_index(drop=True)
-        odf = odf[scols].sort_values(scols).reset_index(drop=True)
-        if len(sdf) != len(odf):
-            return {"ok": False,
-                    "err": f"rows {len(sdf)} != {len(odf)}"}
-        mism = sum(
-            int((sdf[c].astype(str).values != odf[c].astype(str).values).sum())
-            for c in scols
-        )
-        return {
-            "ok": mism == 0,
-            "rows": len(sdf),
-            "mismatched_values": mism,
-            "sec": round(time.time() - t0, 2),
-        }
+        return {**frame_diff(sdf, odf), "sec": round(time.time() - t0, 2)}
     except Exception as exc:  # surface, don't abort the sweep
         return {"ok": False, "err": f"{type(exc).__name__}: {exc}"}
 
