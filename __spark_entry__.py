@@ -617,11 +617,12 @@ def dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from patito_spark.operators.spans import duplicate_span_intervals
 
     docs = _t(spark, sf_dir, "documents")
-    # first_mode="packed": doc_id is a non-negative sequence well under
-    # 2^31 at every SF, so min((id<<32)|pos) == min(struct(id,pos)) and
-    # the stats aggregate stays HashAggregate (no gram-stream sorts) —
-    # results identical, equivalence property-tested
-    # (test_operators_spans.py::test_first_mode_packed_equals_struct).
+    # first_mode="packed": doc_id fits in int32 at every SF, so
+    # min((id<<32)+pos) == min(struct(id,pos)) and the stats aggregate
+    # stays HashAggregate (no gram-stream sorts) — results identical,
+    # equivalence property-tested
+    # (test_operators_spans.py::test_first_mode_packed_equals_struct);
+    # an id outside int32 fails the query instead.
     return duplicate_span_intervals(
         docs, span_tokens=4, hash_mode="portable", first_mode="packed"
     ).select(

@@ -33,7 +33,6 @@ def ngram_contamination(
     min_shared: int = 1,
     hash_mode: str = "xxhash64",
     broadcast_benchmark: bool = True,
-    gram_mode: str = "zip",
     strategy: str = "auto",
     max_broadcast_grams: int = 2_000_000,
     bloom_fpp: float = 1e-4,
@@ -44,7 +43,7 @@ def ngram_contamination(
     Returns ``doc_id, n_shared_grams`` (one row per contaminated corpus
     document). Grams are word ``n``-grams; documents shorter than ``n``
     tokens contribute their whole text as one gram (so short exact copies
-    are still caught).
+    are still caught); NULL text, on either side, contributes no grams.
 
     ``strategy`` picks the physical shape (A/B-raced at sf0.1,
     docs/perf.md):
@@ -85,12 +84,8 @@ def ngram_contamination(
       hundred MB per worker), else ``"join"``.
 
     ``hash_mode``/``broadcast_benchmark`` only affect the join and
-    bloom strategies (both gram-hash JVM-side). ``gram_mode`` applies
-    to the join strategy's two gram builds and to bloom's BENCHMARK
-    side; bloom's corpus side is always ``gram_mode="map"`` — it needs
-    ``distinct=True`` per document, which only the map build provides
-    without an extra shuffle (array_distinct inside the row), keeping
-    the corpus path at one exchange total.
+    bloom strategies (both gram-hash JVM-side through
+    :func:`shingle_hash_rows`).
     """
     if strategy == "bloom":
         return _bloom_contamination(
@@ -101,28 +96,17 @@ def ngram_contamination(
             n=n,
             min_shared=min_shared,
             hash_mode=hash_mode,
-            gram_mode=gram_mode,
             fpp=bloom_fpp,
         )
-    # distinct=False on BOTH sides: the corpus side's duplicates collapse
-    # in the post-join count_distinct (so the full corpus gram stream is
-    # never shuffled — the contract of this operator), and the benchmark
-    # side dedups on __h alone below. gram_mode="map" (default) builds
-    # grams per row with no exchange at all, so the corpus flows
-    # scan → gram explode → broadcast join → one map-side-combined
-    # aggregate: a single shuffle (the final per-doc combine) end to end.
     if strategy in ("auto", "set"):
-        from patito_spark.operators.dedup import gram_array
+        from patito_spark.operators.dedup import shingles
 
         # Distinct benchmark grams, bounded collect: an eval set is tiny
         # by definition — if it is not, fall back to the join strategy
         # ("auto") or fail loudly ("set").
         bench_grams_df = (
-            benchmark.select(
-                F.explode(
-                    gram_array(F.col(text_col), n, distinct=True)
-                ).alias("__g")
-            )
+            benchmark.filter(F.col(text_col).isNotNull())
+            .select(F.explode(shingles(text_col, n)).alias("__g"))
             .distinct()
             .limit(max_broadcast_grams + 1)
         )
@@ -151,6 +135,8 @@ def ngram_contamination(
                 for pdf in batches:
                     ids, counts = [], []
                     for i, txt in zip(pdf[id_col], pdf[text_col]):
+                        if txt is None:
+                            continue
                         toks = txt.split(" ")
                         if len(toks) < n:
                             grams = {txt}
@@ -171,32 +157,23 @@ def ngram_contamination(
                 shared_counts, out_schema
             )
 
-    if gram_mode == "map":
-        # Per-row array_distinct makes each doc's hash stream unique
-        # BEFORE the join, so the post-join count is count(*) instead of
-        # count_distinct — Spark plans count_distinct as TWO exchanges
-        # ((id, h) dedup then (id) count); this shape has exactly one.
-        corpus_grams = shingle_hash_rows(
-            corpus, id_col=id_col, text_col=text_col, n=n,
-            hash_mode=hash_mode, distinct=True, gram_mode="map",
-        )
-        count_expr = F.count("*")
-    else:
-        corpus_grams = shingle_hash_rows(
-            corpus, id_col=id_col, text_col=text_col, n=n,
-            hash_mode=hash_mode, distinct=False, gram_mode=gram_mode,
-        )
-        count_expr = F.count_distinct("__h")
+    # distinct=False on BOTH sides: the corpus side's repeats collapse in
+    # the post-join count_distinct, and the benchmark side dedups on __h
+    # alone below. The gram build itself never exchanges.
+    corpus_grams = shingle_hash_rows(
+        corpus, id_col=id_col, text_col=text_col, n=n,
+        hash_mode=hash_mode, distinct=False,
+    )
     bench_grams = shingle_hash_rows(
         benchmark, id_col=id_col, text_col=text_col, n=n, hash_mode=hash_mode,
-        distinct=False, gram_mode=gram_mode,
+        distinct=False,
     ).select("__h").distinct()
     if broadcast_benchmark:
         bench_grams = F.broadcast(bench_grams)
     shared = corpus_grams.join(bench_grams, on="__h")
     return (
         shared.groupBy(F.col("__id").alias(id_col))
-        .agg(count_expr.alias("n_shared_grams"))
+        .agg(F.count_distinct("__h").alias("n_shared_grams"))
         .filter(F.col("n_shared_grams") >= min_shared)
     )
 
@@ -209,7 +186,6 @@ def _bloom_contamination(
     n: int,
     min_shared: int,
     hash_mode: str,
-    gram_mode: str,
     fpp: float,
 ) -> DataFrame:
     """``strategy="bloom"`` body — see :func:`ngram_contamination`.
@@ -225,20 +201,18 @@ def _bloom_contamination(
 
     bench_hashes = shingle_hash_rows(
         benchmark, id_col=id_col, text_col=text_col, n=n,
-        hash_mode=hash_mode, distinct=False, gram_mode=gram_mode,
+        hash_mode=hash_mode, distinct=False,
     ).select("__h")
     bloom = BloomBits.build(bench_hashes, "__h", fpp=fpp)
     bc = corpus.sparkSession.sparkContext.broadcast(
         (bloom.words, bloom.m, bloom.k)
     )
 
-    # distinct=True + gram_mode="map": each doc's hash stream is unique
-    # before the filter, so the per-doc tally is count(*) after ONE
-    # map-side-combined shuffle (same single-exchange shape as the join
-    # strategy).
+    # Per-row distinct: each doc's hash stream is unique before the
+    # filter, so the per-doc tally is count(*) after ONE map-side-
+    # combined shuffle.
     corpus_hashes = shingle_hash_rows(
-        corpus, id_col=id_col, text_col=text_col, n=n,
-        hash_mode=hash_mode, distinct=True, gram_mode="map",
+        corpus, id_col=id_col, text_col=text_col, n=n, hash_mode=hash_mode
     )
     out_schema = T.StructType(
         [T.StructField("__id", corpus.schema[id_col].dataType)]

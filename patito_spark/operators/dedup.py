@@ -132,26 +132,62 @@ def minhash_signature_expr(base_col: str, perms_col: str = "__perms") -> Column:
     )
 
 
-def gram_array(
-    text: Union[str, Column], n: int, distinct: bool = False
-) -> Column:
-    """All word ``n``-grams of a text column as an array (map-only).
+def gram_hash_rows(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    hash_mode: str,
+    positioned: bool = False,
+    distinct: bool = False,
+) -> DataFrame:
+    """The one word-``n``-gram hash build: 64-bit hashes of the grams of
+    ``text_col`` split on single spaces, one row per gram.
 
-    Like :func:`shingles` but keeps duplicate grams by default (repetition
-    statistics need occurrence counts). Documents shorter than ``n``
-    tokens contribute their whole text as the single gram.
+    ``arrays_zip`` of ``n`` parallel token slices, exploded and hashed
+    row-level: all codegen and zero exchanges (no per-document sort, no
+    interpreted lambda). ``positioned`` picks the short-document rule:
+
+    * ``False`` (shingles) — ``(__id, __h)``; a document shorter than
+      ``n`` tokens hashes its whole text as one gram, ``k = max(size -
+      n + 1, 1)`` (``concat_ws`` skips the padded zip struct's nulls).
+    * ``True`` (spans) — ``(__id, __pos, __h)`` with ``__pos`` the
+      gram's 0-based start token; a short document emits no rows,
+      ``k = max(size - n + 1, 0)``.
+
+    ``distinct`` (shingles only) drops repeated hashes per row with
+    ``array_distinct`` over the row's hash array — zero exchanges, at the
+    cost of one interpreted hash lambda per gram. Rows are documents:
+    per-row distinct equals the ``(__id, __h)`` distinct only when ids
+    are unique, which is the caller's contract.
+
+    NULL text contributes no rows in every shape.
     """
-    text = F.col(text) if isinstance(text, str) else text
-    toks = F.split(text, " ")
-    k = F.size(toks) - F.lit(n - 1)
-    grams = F.when(
-        k > 0,
-        F.transform(
-            F.sequence(F.lit(1), k),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", toks)))
-    return F.array_distinct(grams) if distinct else grams
+    from patito_spark.functions.hashing import hash64
+
+    toks = F.split(F.col(text_col), " ")
+    k = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0 if positioned else 1))
+    zipped = F.arrays_zip(
+        *[F.slice(toks, F.lit(j + 1), k) for j in range(n)]
+    )
+
+    def gram_hash(g: Column) -> Column:
+        return hash64(
+            F.concat_ws(" ", *[g.getField(str(j)) for j in range(n)]),
+            mode=hash_mode,
+        )
+
+    doc_id = F.col(id_col).alias("__id")
+    if distinct:
+        hashes = F.array_distinct(F.transform(zipped, gram_hash))
+        return df.select(doc_id, F.explode(hashes).alias("__h"))
+    if positioned:
+        rows = df.select(doc_id, F.posexplode(zipped).alias("__pos", "__g"))
+        keys = ["__id", "__pos"]
+    else:
+        rows = df.select(doc_id, F.explode(zipped).alias("__g"))
+        keys = ["__id"]
+    return rows.select(*keys, gram_hash(F.col("__g")).alias("__h"))
 
 
 def shingle_hash_rows(
@@ -161,106 +197,22 @@ def shingle_hash_rows(
     n: int = 3,
     hash_mode: str = "xxhash64",
     distinct: bool = True,
-    gram_mode: str = "window",
 ) -> DataFrame:
-    """(``__id``, ``__h``) rows: 64-bit hash of each distinct word n-gram.
+    """(``__id``, ``__h``) rows: 64-bit hash of each word n-gram.
 
-    Three formulations, selected by ``gram_mode``:
-
-    * ``"zip"`` (round 10) — ``arrays_zip`` of ``n`` parallel token
-      slices, exploded and hashed row-level: ALL codegen AND zero
-      exchanges (no per-doc lead()-window sort, no interpreted lambda
-      — the :mod:`.spans` gram-build trick). The short-doc whole-text
-      fallback falls out of ``concat_ws`` null-skipping over the
-      padded zip struct. ``distinct=True`` on this path costs a
-      dropDuplicates exchange — prefer ``distinct=False`` with a
-      duplicate-insensitive consumer (bin-min signatures, collect_set
-      verify arrays), which is how the MinHash family calls it.
-    * ``"window"`` (default) — tokens explode to rows and n-grams build
-      with ``lead()`` windows: everything stays codegen, at the cost of
-      one exchange+sort of the token stream (partitioned by document) and,
-      with ``distinct=True``, a second exchange for the dedup.
-    * ``"map"`` — n-grams build per row with an interpreted
-      ``transform``/``slice`` lambda (:func:`gram_array`) and explode:
-      ZERO exchanges — ``distinct`` resolves per row via
-      ``array_distinct`` (per-document distinct ≡ the (id, gram)
-      distinct the window path shuffles for). Interpreted lambdas cost
-      more CPU per gram, but no shuffle: kept for consumers that need
-      per-row distinct without any exchange (contamination tallies).
+    The shingle shape of :func:`gram_hash_rows`: documents shorter than
+    ``n`` tokens hash their whole text as one gram, NULL text emits no
+    rows, and no shape of it exchanges. ``distinct`` (default) keeps each
+    hash once per row; ``distinct=False`` keeps repeats and skips the
+    per-row hash lambda — use it with a duplicate-insensitive consumer
+    (bin-min signatures, ``collect_set`` verify arrays), which is how
+    the MinHash family calls it.
 
     ``hash_mode="portable"`` (md5-derived, engine-reproducible — see
     :mod:`patito_spark.functions.hashing`) lets a SQL oracle replay the
     whole MinHash pipeline; the default ``xxhash64`` is the fast path.
     """
-    from pyspark.sql import Window
-
-    from patito_spark.functions.hashing import hash64
-
-    if gram_mode == "zip":
-        toks = F.split(F.col(text_col), " ")
-        # length max(size-n+1, 1): >= n tokens -> every gram start;
-        # shorter docs -> ONE padded struct whose concat_ws (null-
-        # skipping) is exactly the whole text — the gram_array fallback.
-        k = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1))
-        zipped = F.arrays_zip(
-            *[F.slice(toks, F.lit(j + 1), k) for j in range(n)]
-        )
-        g = F.col("__g")
-        out = df.select(
-            F.col(id_col).alias("__id"), F.explode(zipped).alias("__g")
-        ).select(
-            "__id",
-            hash64(
-                F.concat_ws(" ", *[g.getField(str(j)) for j in range(n)]),
-                mode=hash_mode,
-            ).alias("__h"),
-        )
-        return out.dropDuplicates(["__id", "__h"]) if distinct else out
-
-    if gram_mode == "map":
-        # Hash INSIDE the array and distinct the hash array per row:
-        # identical semantics to the window path's (__id, __h) distinct
-        # (distinct-by-hash), with zero exchanges. Consumers can then
-        # treat a document's hash stream as already-unique — e.g.
-        # count(*) after a join ≡ count_distinct (distinctness survives
-        # filtering).
-        hashes = F.transform(
-            gram_array(F.col(text_col), n, distinct=False),
-            lambda g: hash64(g, mode=hash_mode),
-        )
-        if distinct:
-            hashes = F.array_distinct(hashes)
-        return df.select(
-            F.col(id_col).alias("__id"),
-            F.explode(hashes).alias("__h"),
-        )
-
-    toks = df.select(
-        F.col(id_col).alias("__id"),
-        F.col(text_col).alias("__text"),
-        F.posexplode(F.split(F.col(text_col), " ")).alias("__pos", "__tok"),
-    )
-    w = Window.partitionBy("__id").orderBy("__pos")
-    gram_cols = [F.col("__tok")] + [
-        F.lead("__tok", i).over(w) for i in range(1, n)
-    ]
-    is_full_gram = gram_cols[-1].isNotNull() if n > 1 else F.lit(True)
-    is_short_doc = (F.col("__pos") == 0) & (
-        F.size(F.split(F.col("__text"), " ")) < n
-    )
-    grams = toks.select(
-        "__id",
-        # documents shorter than n tokens contribute their whole text as
-        # the single shingle (otherwise they could never be candidates)
-        F.when(is_full_gram, F.concat_ws(" ", *gram_cols))
-        .when(is_short_doc, F.col("__text"))
-        .alias("__gram"),
-    ).filter(F.col("__gram").isNotNull())
-    out = grams.select("__id", hash64("__gram", mode=hash_mode).alias("__h"))
-    # ``distinct=False`` skips the dedup shuffle for consumers whose
-    # downstream aggregate is duplicate-insensitive (min, count_distinct):
-    # at 100 TB the distinct exchanges the full gram stream a second time.
-    return out.distinct() if distinct else out
+    return gram_hash_rows(df, id_col, text_col, n, hash_mode, distinct=distinct)
 
 
 def _minhash_doc_features_arrow(
@@ -276,21 +228,21 @@ def _minhash_doc_features_arrow(
 
     Emits one row per non-null-text document: ``__id``, ``__jtokens``
     (the sorted DISTINCT portable gram hashes — exactly
-    ``array_sort(collect_set(__h))`` of the zip-mode shingle rows) and
+    ``array_sort(collect_set(__h))`` of the shingle rows) and
     ``__bands`` (one ``{band, __key}`` struct per band, where
     ``__key`` is the same ``'bin:min,bin:min'`` string
     :func:`banded_signatures` builds — callers apply ``xxhash64`` to
     it JVM-side so bucket values are bit-identical).
 
     Round 15, the simhash/tf_idf precedent: every stage of the
-    signature build is doc-local — gram construction (zip semantics:
-    ``k = max(len - n + 1, 1)`` grams, short docs contribute their
-    whole text), the md5 gram hash (memoized per distinct gram per
-    batch via ``pd.factorize`` — the JVM lane pays md5-hex + base-16
-    ``conv`` per gram occurrence), the OPH bin mins, rotation
-    densification (Shrivastava & Li 2014: an empty bin borrows the
-    next occupied bin's value, circularly — ``np.searchsorted`` over
-    the occupied bins) and the band keys. The exploded gram stream,
+    signature build is doc-local — gram construction (the
+    :func:`gram_hash_rows` shingle shape: ``k = max(len - n + 1, 1)``
+    grams, short docs contribute their whole text), the md5 gram hash
+    (memoized per distinct gram per batch via ``pd.factorize`` — the
+    JVM lane pays md5-hex + base-16 ``conv`` per gram occurrence), the
+    OPH bin mins, rotation densification (Shrivastava & Li 2014: an
+    empty bin borrows the next occupied bin's value, circularly —
+    ``np.searchsorted`` over the occupied bins) and the band keys. The exploded gram stream,
     its persist, and BOTH per-doc aggregates (bin-min + collect_set)
     disappear; the only exchange left in the LSH pipeline is the
     (band, bucket) stage, which is inherent. Rows are documents:
@@ -350,7 +302,7 @@ def _minhash_doc_features_arrow(
             np.cumsum(lens[:-1], out=starts[1:])
             doc_idx = np.repeat(np.arange(len(lens), dtype=np.int64), lens)
             pos = np.arange(len(flat), dtype=np.int64) - starts[doc_idx]
-            # zip-mode grams: docs with >= n tokens emit len-n+1 grams;
+            # shingle grams: docs with >= n tokens emit len-n+1 grams;
             # shorter docs emit their whole text as the single gram
             # (" ".join inverts the single-space split exactly).
             long_start = (lens[doc_idx] >= n) & (pos <= lens[doc_idx] - n)
@@ -728,14 +680,13 @@ def minhash_dedup_pairs(
             F.col("__id").alias("__jid"), "__jtokens"
         )
     else:
-        # gram_mode="zip" + distinct=False (round 10): the zero-exchange
-        # codegen gram build. Every consumer is duplicate-insensitive —
-        # the bin-min signature aggregate is idempotent under repeats,
-        # and the verify arrays below use collect_set — so the dedup
-        # exchange the distinct would cost is skipped entirely.
+        # distinct=False: every consumer is duplicate-insensitive — the
+        # bin-min signature aggregate is idempotent under repeats, and
+        # the verify arrays below use collect_set — so the per-row hash
+        # lambda the distinct would cost is skipped entirely.
         shingle_rows = shingle_hash_rows(
             df, id_col=id_col, text_col=text_col, n=shingle_size,
-            hash_mode=hash_mode, distinct=False, gram_mode="zip",
+            hash_mode=hash_mode, distinct=False,
         )
         if materialize_shingles:
             shingle_rows = tracked_persist(shingle_rows)
@@ -1719,14 +1670,13 @@ def minhash_dedup_against(
     corpus_sh = tracked_persist(
         shingle_hash_rows(
             df, id_col=id_col, text_col=text_col, n=shingle_size,
-            hash_mode=hash_mode, distinct=False, gram_mode="zip",
+            hash_mode=hash_mode, distinct=False,
         )
     )
     ref_sh = tracked_persist(
         shingle_hash_rows(
             reference, id_col=ref_id_col, text_col=ref_text_col,
             n=shingle_size, hash_mode=hash_mode, distinct=False,
-            gram_mode="zip",
         )
     )
 

@@ -12,23 +12,21 @@ document pair crosses a near-dup threshold.
 
 Lee et al. build a corpus-wide suffix array — a sequential,
 single-machine construction. The Spark-first equivalent used here:
-every ``span_tokens``-gram is 64-bit-hashed with positions (codegen
-``lead()`` windows over the exploded token stream by default — see
-:func:`_gram_hash_positions` for the measured trade vs the shuffle-
-free interpreted build), and a single window over the gram hash
-yields both the corpus-wide occurrence count and the global
-first-occurrence rank in ONE shuffle of the gram stream. A
+every ``span_tokens``-gram is 64-bit-hashed with its position by the
+zero-exchange ``arrays_zip`` slice build
+(:func:`..dedup.gram_hash_rows`, which halved the gram build against a
+``lead()``-window build in the sf1 race: 1.8 s -> 0.9 s warm), and one
+mergeable aggregate per gram hash yields both the corpus-wide
+occurrence count and the global first occurrence. A
 maximal duplicated run of L >= n tokens is exactly a run of L-n+1
 consecutive duplicated n-grams, so merging the surviving grams'
 ``[pos, pos+n-1]`` intervals (gaps-and-islands over candidates only)
 reconstructs the full span without ever materializing it.
 
 Scale shape at 100 TB: the heavy object — the gram stream, ~1 row
-per corpus token — crosses the network twice in the default codegen
-formulation (token stream by document for the gram windows, gram
-stream by hash for the count+rank window; ``gram_mode="map"`` trades
-the first exchange for ~2x gram-build CPU) and the duplicated-run
-semantics pay exactly ONE hash-partitioned window.
+per corpus token — is built without an exchange and crosses the
+network by gram hash only: once as map-side-combined partials for the
+count + first-occurrence aggregate, once as rows for the join back.
 Everything downstream operates on *duplicated occurrences only*
 (a tiny fraction of a healthy corpus): the interval merge windows,
 the per-doc interval collect, and the join back to documents. The
@@ -47,93 +45,11 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
-from patito_spark.functions.hashing import hash64
+from patito_spark.operators.dedup import gram_hash_rows
 
 __all__ = ["duplicate_span_intervals", "dedup_spans", "scrub_spans"]
-
-
-def _gram_hash_positions(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int,
-    hash_mode: str,
-    gram_mode: str = "zip",
-) -> DataFrame:
-    """(``__id``, ``__pos``, ``__h``) — hash of the n-gram starting at
-    each 0-based token position. Documents shorter than ``n`` tokens
-    emit no rows (they cannot contain an ``n``-token duplicated run —
-    unlike the near-dup shingle convention, a short doc is simply
-    never cut).
-
-    Three formulations:
-
-    * ``"zip"`` (default, round 10) — ``arrays_zip`` of ``n`` parallel
-      token slices, posexploded and hashed: ALL codegen AND zero
-      exchanges — no per-doc sort (the window mode's cost) and no
-      interpreted lambda (the map mode's). Strictly dominates both in
-      the sf1 race (gram build 1.8 s -> 0.9 s warm); ``slice`` length
-      ``greatest(k, 0)`` makes short docs emit no rows with no
-      ``when()`` branch.
-    * ``"window"`` — tokens explode to rows and grams build with
-      ``lead()`` windows: all-codegen, at the cost of one
-      exchange+sort of the token stream by document.
-    * ``"map"`` — per-row interpreted lambda, zero exchanges: kept for
-      comparison; the HOF lambda costs ~2x the window's exchange
-      (docs/perf.md), and "zip" beats both.
-    """
-    if gram_mode == "zip":
-        toks = F.split(F.col(text_col), " ")
-        k = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0))
-        zipped = F.arrays_zip(
-            *[F.slice(toks, F.lit(j + 1), k) for j in range(n)]
-        )
-        g = F.col("__g")
-        return df.select(
-            F.col(id_col).alias("__id"),
-            F.posexplode(zipped).alias("__pos", "__g"),
-        ).select(
-            "__id",
-            "__pos",
-            hash64(
-                F.concat_ws(" ", *[g.getField(str(j)) for j in range(n)]),
-                mode=hash_mode,
-            ).alias("__h"),
-        )
-    if gram_mode == "map":
-        toks = F.split(F.col(text_col), " ")
-        k = F.size(toks) - F.lit(n - 1)
-        hashes = F.when(
-            k > 0,
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(k, F.lit(1))),
-                lambda i: hash64(
-                    F.concat_ws(" ", F.slice(toks, i, n)), mode=hash_mode
-                ),
-            ),
-        ).otherwise(F.array().cast("array<bigint>"))
-        return df.select(
-            F.col(id_col).alias("__id"),
-            F.posexplode(hashes).alias("__pos", "__h"),
-        )
-    toks = df.select(
-        F.col(id_col).alias("__id"),
-        F.posexplode(F.split(F.col(text_col), " ")).alias("__pos", "__tok"),
-    )
-    w = Window.partitionBy("__id").orderBy("__pos")
-    parts = [F.col("__tok")] + [
-        F.lead("__tok", i).over(w) for i in range(1, n)
-    ]
-    valid = parts[-1].isNotNull() if n > 1 else F.lit(True)
-    return toks.select(
-        "__id",
-        "__pos",
-        F.when(valid, hash64(F.concat_ws(" ", *parts), mode=hash_mode)).alias(
-            "__h"
-        ),
-    ).filter(F.col("__h").isNotNull())
 
 
 def duplicate_span_intervals(
@@ -144,7 +60,6 @@ def duplicate_span_intervals(
     min_count: int = 2,
     keep_first: bool = True,
     hash_mode: str = "xxhash64",
-    gram_mode: str = "zip",
     materialize_grams: bool = True,
     first_mode: str = "struct",
 ) -> DataFrame:
@@ -165,10 +80,8 @@ def duplicate_span_intervals(
     web scale) therefore collapses to one row per map task before the
     exchange, and the join-back probe side streams (AQE can split a
     skewed probe partition; a ``row_number`` window partition cannot be
-    split and must sort the whole hot key in one task). Gram building
-    defaults to the zero-exchange ``arrays_zip`` slice build
-    (``gram_mode="zip"`` — see :func:`_gram_hash_positions`; ``"lead"``
-    keeps the codegen lead()-window build as the fallback).
+    split and must sort the whole hot key in one task). Grams come from
+    the zero-exchange positioned :func:`..dedup.gram_hash_rows` build.
 
     The gram stream feeds both the stats aggregate and the join probe;
     ``materialize_grams`` (default, the ``minhash_dedup_pairs``
@@ -177,42 +90,53 @@ def duplicate_span_intervals(
     scale to trade a second gram build for zero cache footprint.
 
     ``first_mode="packed"`` (round 16) tracks the first occurrence as
-    ``min((id << 32) | pos)`` instead of ``min(struct(id, pos))`` —
-    identical results whenever ``0 <= id < 2^31`` (the caller's
-    precondition; ``pos`` is a token index and always fits), and the
-    stats aggregate becomes HashAggregate-eligible instead of paying a
-    SortAggregate's full sort of the gram stream on both sides of the
-    exchange. The default stays ``"struct"``, which is exact for ANY
-    id values.
+    ``min((id << 32) + pos)`` instead of ``min(struct(id, pos))`` —
+    identical results whenever the id fits in int32 (``pos`` is a token
+    index and always fits; an id outside that range fails the job
+    rather than keep the wrong copy), and the stats aggregate becomes
+    HashAggregate-eligible instead of paying a SortAggregate's full sort
+    of the gram stream on both sides of the exchange. The default stays
+    ``"struct"``, which is exact for ANY id values.
     """
     if first_mode not in ("struct", "packed"):
         raise ValueError(
             f"first_mode must be 'struct' or 'packed', got {first_mode!r}"
         )
-    grams = _gram_hash_positions(
-        df, id_col, text_col, span_tokens, hash_mode, gram_mode=gram_mode
+    grams = gram_hash_rows(
+        df, id_col, text_col, span_tokens, hash_mode, positioned=True
     )
     if materialize_grams:
         from patito_spark.functions.cache import tracked_persist
 
         grams = tracked_persist(grams)
     if first_mode == "packed":
-        # (id << 32) | pos orders exactly like struct(id, pos) when
-        # 0 <= id < 2^31 and 0 <= pos < 2^32 (pos is a token index, so
-        # only the id bound is a real precondition — the CALLER asserts
-        # it). The payoff: min() over a BIGINT keeps the whole stats
+        # (id << 32) + pos orders exactly like struct(id, pos) when id
+        # fits in int32 and 0 <= pos < 2^32 (pos is a token index, so
+        # only the id bound is a real precondition). An id outside it
+        # fails the job through raise_error inside the stats aggregate's
+        # input — no extra job, and never a silently wrong keep-first.
+        # The payoff: min() over a BIGINT keeps the whole stats
         # aggregate HashAggregate-eligible, where min(struct(...))
         # plans as SortAggregate and pays a full sort of the gram
         # stream on BOTH sides of the exchange (guide §2.4).
         # The cast to long is LOAD-BEARING: shiftleft on an IntegerType
         # id is a Java int shift (distance masked mod 32 — a silent
         # no-op) and packed keys would collide.
-        packed = F.shiftleft(F.col("__id").cast("long"), 32) + F.col(
-            "__pos"
-        )
+        doc_id = F.col("__id").cast("long")
+        packed = F.shiftleft(doc_id, 32) + F.col("__pos")
+        checked = F.when(
+            ~doc_id.between(-(2**31), 2**31 - 1),
+            F.raise_error(
+                F.concat(
+                    F.lit("first_mode='packed' needs ids that fit in int32,"
+                          " got "),
+                    doc_id.cast("string"),
+                )
+            ),
+        ).otherwise(packed)
         stats = grams.groupBy("__h").agg(
             F.count(F.lit(1)).alias("__cnt"),
-            F.min(packed).alias("__first_pk"),
+            F.min(checked).alias("__first_pk"),
         )
         dup_stats = stats.filter(F.col("__cnt") >= min_count).select(
             "__h", "__first_pk"
@@ -343,7 +267,6 @@ def dedup_spans(
     keep_first: bool = True,
     min_remaining_tokens: Optional[int] = 1,
     hash_mode: str = "xxhash64",
-    gram_mode: str = "window",
 ) -> DataFrame:
     """Cut duplicated >= ``span_tokens``-token runs out of every document.
 
@@ -356,8 +279,9 @@ def dedup_spans(
     same whitespace normalization as :func:`..packing.chunk_documents`);
     documents left with fewer than ``min_remaining_tokens`` tokens are
     dropped (``None`` keeps them). Documents containing no duplicated
-    span pass through with their text untouched, byte-for-byte. All
-    other columns are preserved.
+    span pass through with their text untouched, byte-for-byte; NULL
+    text contributes no grams and passes through as NULL. All other
+    columns are preserved.
 
     The cut itself is one ``aggregate`` fold over each affected doc's
     sorted merged-interval array: the accumulator walks a cursor
@@ -373,7 +297,6 @@ def dedup_spans(
         min_count=min_count,
         keep_first=keep_first,
         hash_mode=hash_mode,
-        gram_mode=gram_mode,
     )
     return _apply_cut(df, intervals, id_col, text_col, min_remaining_tokens)
 
@@ -387,7 +310,6 @@ def scrub_spans(
     span_tokens: int = 8,
     min_remaining_tokens: Optional[int] = 1,
     hash_mode: str = "xxhash64",
-    gram_mode: str = "window",
     max_broadcast_grams: Optional[int] = 5_000_000,
 ) -> DataFrame:
     """Cut every token run that appears verbatim in ``reference``.
@@ -413,15 +335,15 @@ def scrub_spans(
     ``hash_mode`` the corpus uses.
     """
     ref_text = ref_text_col or text_col
-    ref_grams = _gram_hash_positions(
-        reference.select(F.col(ref_text).alias("__rtext")),
-        # constant key: we only need the hash set, not positions
-        id_col="__rtext",
-        text_col="__rtext",
-        n=span_tokens,
-        hash_mode=hash_mode,
-        gram_mode="map",
-    ).select("__h").distinct()
+    ref_grams = (
+        # the text doubles as the id: only the hash set is needed
+        gram_hash_rows(
+            reference, ref_text, ref_text, span_tokens, hash_mode,
+            positioned=True,
+        )
+        .select("__h")
+        .distinct()
+    )
     if max_broadcast_grams is not None:
         # Persist before the eligibility count so the split+hash+distinct
         # lineage is not evaluated a second time by the join below
@@ -434,8 +356,8 @@ def scrub_spans(
             ref_grams = F.broadcast(ref_grams)
     else:
         ref_grams = F.broadcast(ref_grams)
-    grams = _gram_hash_positions(
-        df, id_col, text_col, span_tokens, hash_mode, gram_mode=gram_mode
+    grams = gram_hash_rows(
+        df, id_col, text_col, span_tokens, hash_mode, positioned=True
     )
     matched = grams.join(ref_grams, on="__h", how="left_semi")
     intervals = _merge_islands(matched, span_tokens, id_col)

@@ -2,10 +2,9 @@
 
 Almost all operators are single-projection expressions (no shuffle, no
 UDF): at 100 TB each runs as a map-only stage fused into the parquet
-scan by whole-stage codegen. The one exception is
-:func:`repetition_stats`, whose gram counting pays one map-side-
-combined shuffle (the round-10 ``zip`` formulation — see its
-docstring for the A/B race).
+scan by whole-stage codegen. Per-document gram statistics such as
+:func:`repetition_stats` run as one map-only Arrow stage; corpus-wide
+ones such as :func:`cross_doc_repetition` shuffle the gram stream.
 """
 
 from __future__ import annotations
@@ -296,7 +295,6 @@ def repetition_stats(
     id_col: str = "doc_id",
     text_col: str = "text",
     ngram: int = 2,
-    gram_mode: str = "pandas",
 ) -> DataFrame:
     """Gopher-style repetition metrics per document.
 
@@ -305,146 +303,57 @@ def repetition_stats(
     repeats (1 - distinct/total) and ``top_gram_frac`` the share of the
     single most frequent n-gram — the repetition filters from the Gopher
     data pipeline (Rae et al. 2021, table A1). Documents shorter than
-    ``ngram`` tokens emit no row.
+    ``ngram`` tokens, and documents with NULL text, emit no row.
 
-    Four formulations, A/B-raced (docs/perf.md; re-raced round 11):
-
-    * ``"pandas"`` (default) — ONE Arrow-batched ``mapInPandas`` stage
-      computing each document's gram ``Counter`` in-batch: ZERO
-      shuffles, bounded per-document memory, no per-gram rows ever
-      materialize. This is also the right 100x shape for a strictly
-      per-document statistic — the alternative modes shuffle the full
-      corpus gram stream for what is embarrassingly doc-local work.
-      Round-11 interleaved race: 0.34 vs zip's 0.77 s at sf1, 0.28 vs
-      0.55 at sf0.1 (the round-10 race that crowned zip at sf1 did not
-      reproduce; see BASELINE.md round-11 notes).
-    * ``"zip"`` — ``arrays_zip`` of parallel token slices, exploded and
-      counted with two map-side-combined hash aggregates: all-JVM,
-      zero Python lanes, no per-doc sort, no interpreted lambda.
-      Bit-identical output to the other modes (equality-tested at
-      sf1); use when Python worker lanes are the constrained resource.
-    * ``"window"`` — all-JVM: tokens explode to rows, n-grams via
-      ``lead()`` windows (codegen, one token-stream exchange+sort),
-      then the same two aggregates.
-    * ``"map"`` — per-row interpreted ``transform``/``slice`` gram
-      build + explode. Measured 4-5× slower (interpreted HOF lambdas);
-      retained for measurement only.
+    ONE Arrow-batched ``mapInPandas`` stage computes each document's
+    gram ``Counter`` in-batch: zero shuffles, bounded per-document
+    memory, and no per-gram rows ever materialize — the right shape for
+    a strictly per-document statistic. Round-11 interleaved race: 0.34 s
+    against 0.77 s for the all-JVM ``arrays_zip`` gram build plus two
+    hash aggregates at sf1, 0.28 s against 0.55 s at sf0.1
+    (docs/perf.md).
     """
-    from pyspark.sql import Window
+    import pandas as pd
 
-    from patito_spark.operators.dedup import gram_array
-
-    if gram_mode == "pandas":
-        import pandas as pd
-
-        out_schema = T.StructType(
-            [
-                T.StructField(id_col, df.schema[id_col].dataType),
-                T.StructField("n_grams", T.LongType()),
-                T.StructField("dup_gram_frac", T.DoubleType()),
-                T.StructField("top_gram_frac", T.DoubleType()),
-            ]
-        )
-
-        def stats(batches):
-            from collections import Counter
-
-            for pdf in batches:
-                ids, n_grams, dup_frac, top_frac = [], [], [], []
-                for i, txt in zip(pdf[id_col], pdf[text_col]):
-                    toks = txt.split(" ")
-                    if len(toks) < ngram:
-                        continue
-                    counts = Counter(
-                        tuple(toks[j : j + ngram])
-                        for j in range(len(toks) - ngram + 1)
-                    )
-                    total = sum(counts.values())
-                    ids.append(i)
-                    n_grams.append(total)
-                    dup_frac.append(1.0 - len(counts) / total)
-                    top_frac.append(max(counts.values()) / total)
-                yield pd.DataFrame(
-                    {
-                        id_col: ids,
-                        "n_grams": n_grams,
-                        "dup_gram_frac": dup_frac,
-                        "top_gram_frac": top_frac,
-                    }
-                )
-
-        return df.select(id_col, text_col).mapInPandas(stats, out_schema)
-
-    if gram_mode == "map":
-        if ngram > 1:
-            # Gopher repetition counts FULL n-grams only (docs shorter
-            # than ngram emit no row), unlike gram_array's whole-text
-            # fallback — filter short docs out up front.
-            grams = df.filter(F.size(tokens(text_col)) >= ngram).select(
-                F.col(id_col).alias("__id"),
-                F.explode(gram_array(_text(text_col), ngram)).alias(
-                    "__gram"
-                ),
-            )
-        else:
-            grams = df.select(
-                F.col(id_col).alias("__id"),
-                F.explode(tokens(text_col)).alias("__gram"),
-            )
-    elif gram_mode == "zip" and ngram > 1:
-        # arrays_zip of parallel slices (the round-10 gram-build trick):
-        # all codegen, zero exchanges, no per-doc sort. slice length
-        # greatest(k, 0) drops short docs (no whole-text fallback — the
-        # Gopher convention this operator uses).
-        toks = tokens(text_col)
-        k = F.greatest(F.size(toks) - F.lit(ngram - 1), F.lit(0))
-        zipped = F.arrays_zip(
-            *[F.slice(toks, F.lit(j + 1), k) for j in range(ngram)]
-        )
-        g = F.col("__g")
-        grams = df.select(
-            F.col(id_col).alias("__id"), F.explode(zipped).alias("__g")
-        ).select(
-            "__id",
-            F.concat_ws(
-                " ", *[g.getField(str(j)) for j in range(ngram)]
-            ).alias("__gram"),
-        )
-    elif ngram > 1:
-        toks = df.select(
-            F.col(id_col).alias("__id"),
-            F.posexplode(tokens(text_col)).alias("__pos", "__tok"),
-        )
-        w = Window.partitionBy("__id").orderBy("__pos")
-        gram_cols = [F.col("__tok")] + [
-            F.lead("__tok", i).over(w) for i in range(1, ngram)
+    out_schema = T.StructType(
+        [
+            T.StructField(id_col, df.schema[id_col].dataType),
+            T.StructField("n_grams", T.LongType()),
+            T.StructField("dup_gram_frac", T.DoubleType()),
+            T.StructField("top_gram_frac", T.DoubleType()),
         ]
-        grams = toks.select(
-            "__id",
-            F.when(
-                gram_cols[-1].isNotNull(), F.concat_ws(" ", *gram_cols)
-            ).alias("__gram"),
-        ).filter(F.col("__gram").isNotNull())
-    else:
-        grams = df.select(
-            F.col(id_col).alias("__id"),
-            F.explode(tokens(text_col)).alias("__gram"),
-        )
-    per_gram = grams.groupBy("__id", "__gram").agg(F.count("*").alias("__n"))
-    return per_gram.groupBy(F.col("__id").alias(id_col)).agg(
-        F.sum("__n").alias("n_grams"),
-        (
-            F.lit(1.0) - F.count("*").cast("double") / F.sum("__n").cast("double")
-        ).alias("dup_gram_frac"),
-        (F.max("__n").cast("double") / F.sum("__n").cast("double")).alias(
-            "top_gram_frac"
-        ),
     )
 
+    def stats(batches):
+        from collections import Counter
 
-# ---------------------------------------------------------------------- #
-# Corpus cleaning (all codegen regexp/translate — no UDFs)                #
-# ---------------------------------------------------------------------- #
+        for pdf in batches:
+            ids, n_grams, dup_frac, top_frac = [], [], [], []
+            for i, txt in zip(pdf[id_col], pdf[text_col]):
+                if txt is None:
+                    continue
+                toks = txt.split(" ")
+                if len(toks) < ngram:
+                    continue
+                counts = Counter(
+                    tuple(toks[j : j + ngram])
+                    for j in range(len(toks) - ngram + 1)
+                )
+                total = sum(counts.values())
+                ids.append(i)
+                n_grams.append(total)
+                dup_frac.append(1.0 - len(counts) / total)
+                top_frac.append(max(counts.values()) / total)
+            yield pd.DataFrame(
+                {
+                    id_col: ids,
+                    "n_grams": n_grams,
+                    "dup_gram_frac": dup_frac,
+                    "top_gram_frac": top_frac,
+                }
+            )
+
+    return df.select(id_col, text_col).mapInPandas(stats, out_schema)
 
 
 def strip_html(text: Union[str, Column]) -> Column:
@@ -2338,14 +2247,15 @@ def cross_doc_repetition(
     documents (including this one). Documents shorter than ``ngram``
     tokens hash their whole text as one gram (the
     :func:`..dedup.shingle_hash_rows` convention), so every document
-    emits a row.
+    with non-NULL text emits a row; NULL text contributes no grams and
+    emits none.
 
     Scale shape: the corpus' distinct (doc, gram-hash) rows are built
-    shuffle-free (``gram_mode="map"``). ``df_mode="aggregate"`` (the
-    default, the 100x-safe shape) computes each gram's doc-frequency as
-    a MERGEABLE ``groupBy(hash).count()`` — a web-ubiquitous gram
-    collapses to one row per map task before the exchange — then joins
-    the frequency back onto the gram stream (the probe side streams,
+    shuffle-free (per-row distinct, so ids must be unique).
+    ``df_mode="aggregate"`` (the default, the 100x-safe shape) computes
+    each gram's doc-frequency as a MERGEABLE ``groupBy(hash).count()``
+    — a web-ubiquitous gram collapses to one row per map task before the
+    exchange — then joins the frequency back onto the gram stream (the probe side streams,
     and AQE can split a skewed probe partition). ``df_mode="window"``
     uses a single ``count() over (partition by hash)`` window instead:
     one shuffle and one gram-build pass, measurably faster on
@@ -2368,8 +2278,7 @@ def cross_doc_repetition(
             f"df_mode must be 'aggregate' or 'window', got {df_mode!r}"
         )
     grams = shingle_hash_rows(
-        df, id_col=id_col, text_col=text_col, n=ngram,
-        hash_mode=hash_mode, distinct=True, gram_mode="map",
+        df, id_col=id_col, text_col=text_col, n=ngram, hash_mode=hash_mode
     )
     if df_mode == "aggregate" and materialize_grams:
         from patito_spark.functions.cache import tracked_persist

@@ -58,22 +58,31 @@ def test_contamination_plan_broadcasts_benchmark(corpus, bench_docs):
 
 
 def test_contamination_strategies_agree(corpus, bench_docs):
-    """set (default), join+map and join+window must all agree."""
-    results = []
-    for kw in (
-        dict(strategy="set"),
-        dict(strategy="join", gram_mode="map"),
-        dict(strategy="join", gram_mode="window"),
-    ):
-        results.append(
-            {
-                r["doc_id"]: r["n_shared_grams"]
-                for r in ngram_contamination(
-                    corpus, bench_docs, n=5, **kw
-                ).collect()
-            }
-        )
+    """set (default), join and bloom must all agree."""
+    results = [
+        {
+            r["doc_id"]: r["n_shared_grams"]
+            for r in ngram_contamination(
+                corpus, bench_docs, n=5, strategy=strategy
+            ).collect()
+        }
+        for strategy in ("set", "join", "bloom")
+    ]
     assert results[0] == results[1] == results[2], results
+
+
+@pytest.mark.parametrize("strategy", ["set", "join", "bloom"])
+def test_contamination_null_text_contributes_no_grams(spark, strategy):
+    """NULL text is neither a crash (set) nor the "" gram (bloom): it
+    contributes no grams on either side, so only doc 11 is flagged."""
+    corpus = spark.createDataFrame(
+        [(10, None), (11, "p q r s")], "doc_id long, text string"
+    )
+    benchmark = spark.createDataFrame(
+        [(1, "p q r"), (2, ""), (3, None)], "doc_id long, text string"
+    )
+    out = ngram_contamination(corpus, benchmark, n=3, strategy=strategy)
+    assert sorted(tuple(r) for r in out.collect()) == [(11, 1)]
 
 
 def test_contamination_set_strategy_no_shuffle(corpus, bench_docs):
@@ -107,18 +116,3 @@ def test_contamination_set_strategy_cap(corpus, bench_docs):
         ).collect()
     }
     assert got == want
-
-
-def test_contamination_join_map_mode_single_corpus_exchange(
-    corpus, bench_docs
-):
-    """join+map: per-row array_distinct hashing removes both the
-    lead()-window token sort and the count_distinct pre-dedup exchange —
-    the corpus stream passes exactly one shuffle (the per-doc count);
-    the second Exchange below is the tiny benchmark-side gram distinct."""
-    out = ngram_contamination(
-        corpus, bench_docs, n=5, strategy="join", gram_mode="map"
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange hashpartitioning") == 2, plan
-    assert "Window" not in plan, plan

@@ -181,16 +181,18 @@ def test_portable_hash_mode_agrees(docs):
 # -------------------------------------------------------------------- plans
 
 def test_gram_stream_shuffles_once(docs):
-    """The full gram stream is exchanged exactly once (the count+rank
-    window); every other Exchange operates on duplicated candidates or
-    the document table — pinned by total Exchange count."""
+    """The gram build never exchanges: the only Exchanges are the gram
+    stream by hash (stats partials + join probe) and the duplicated
+    candidates / document table — pinned by the exact Exchange count,
+    so a gram build that shuffles (a lead() window over the token
+    stream adds one) cannot come back unnoticed."""
     plan = executed_plan(dedup_spans(docs, span_tokens=3))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    # 1 gram-hash window + 1 island window (same __id exchange reused by
-    # the groupBy where possible) + interval collect + doc-side join:
-    # anything beyond 6 means a stage started re-shuffling the big side.
-    assert plan.count("Exchange") <= 6, plan
+    assert "Window [lead" not in plan
+    # stats aggregate by __h + join probe by __h + island windows by
+    # __id + doc-side join by doc_id.
+    assert plan.count("Exchange") == 4, plan
 
 
 def test_within_document_repetition(spark):
@@ -216,12 +218,6 @@ def test_periodic_token_run(spark):
     out = by_id(dedup_spans(docs, span_tokens=3))
     assert out == ref_dedup_spans({1: "x x x x x"}, n=3)
     assert out[1] == "x"
-
-
-def test_gram_modes_agree(docs):
-    a = by_id(dedup_spans(docs, span_tokens=3, gram_mode="window"))
-    b = by_id(dedup_spans(docs, span_tokens=3, gram_mode="map"))
-    assert a == b
 
 
 class TestScrubSpans:
@@ -303,18 +299,20 @@ class TestScrubSpans:
 
 def test_first_mode_packed_equals_struct(spark):
     """first_mode='packed' (min over (id<<32)|pos, HashAggregate) must
-    produce exactly the intervals of first_mode='struct' for
-    non-negative ids — including duplicate grams within one doc, ties
-    across docs, and keep_first=False."""
+    produce exactly the intervals of first_mode='struct' for ids that
+    fit in int32, negatives included — with duplicate grams within one
+    doc, ties across docs, and keep_first=False."""
     import random
 
     from patito_spark.operators.spans import duplicate_span_intervals
 
     rng = random.Random(416)
     vocab = [f"w{i}" for i in range(12)]
+    # ids span the whole int32 range, negatives and both bounds included
+    ids = [-(2**31), 2**31 - 1] + list(range(-29, 29))
     rows = [
         (d, " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 40))))
-        for d in range(60)
+        for d in ids
     ]
     # BOTH id types: an IntegerType id exercises the load-bearing
     # cast-to-long in the packed expression (shiftleft on an int column
@@ -358,3 +356,20 @@ def test_first_mode_packed_plans_hash_aggregate(spark):
         .toString()
     )
     assert "SortAggregate" not in plan
+
+
+@pytest.mark.parametrize("bad_id", [2**31, -(2**31) - 1])
+def test_first_mode_packed_rejects_ids_outside_int32(spark, bad_id):
+    """Outside int32 the packed key no longer orders like (id, pos) —
+    ids [1, 2^31 + 1] would keep the wrong copy — so the lane fails the
+    job instead of answering."""
+    from pyspark.errors import PySparkException
+    from py4j.protocol import Py4JJavaError
+
+    df = spark.createDataFrame(
+        [(1, "a b c d"), (bad_id, "a b c d")], "doc_id long, text string"
+    )
+    with pytest.raises((PySparkException, Py4JJavaError), match="int32"):
+        duplicate_span_intervals(
+            df, span_tokens=3, first_mode="packed"
+        ).collect()

@@ -92,9 +92,7 @@ def test_minhash_feature_lanes_agree(spark, texts):
     arrow_toks = {
         r["__id"]: tuple(r["__jtokens"]) for r in feats.collect()
     }
-    rows = shingle_hash_rows(
-        df, n=3, hash_mode="portable", distinct=False, gram_mode="zip"
-    )
+    rows = shingle_hash_rows(df, n=3, hash_mode="portable", distinct=False)
     sql_bands = {
         (r["__id"], r["band"]): r["bucket"]
         for r in banded_signatures(

@@ -1,4 +1,5 @@
-"""Property tests: build_vocab / tf_idf vs a naive Python recount."""
+"""Property tests: build_vocab / tf_idf vs a naive Python recount, the
+n-gram hash builder and repetition_stats vs pure-Python references."""
 
 from collections import Counter
 
@@ -8,6 +9,12 @@ from hypothesis import HealthCheck, given, settings, strategies as st
 WORD = st.text(alphabet="abcde", min_size=1, max_size=3)
 DOC = st.lists(WORD, min_size=1, max_size=12).map(" ".join)
 CORPUS = st.lists(DOC, min_size=1, max_size=8)
+# Empty tokens make double spaces; "" and NULL are whole documents.
+GRAM_WORD = st.text(alphabet="ab", min_size=0, max_size=2)
+GRAM_DOC = st.one_of(
+    st.none(), st.lists(GRAM_WORD, min_size=0, max_size=10).map(" ".join)
+)
+GRAM_CORPUS = st.lists(GRAM_DOC, min_size=1, max_size=8)
 
 
 def _naive_vocab(texts):
@@ -60,6 +67,93 @@ def test_tf_sums_to_one_per_doc(spark, texts):
     assert set(per_doc) == set(range(len(texts)))
     for doc_id, total in per_doc.items():
         assert total == pytest.approx(1.0, abs=1e-9)
+
+
+# --- n-gram hash builder / repetition_stats ---------------------------- #
+
+def _ref_grams(text, n, positioned):
+    """(start, gram) pairs of ``text`` split on single spaces: a short
+    document is one whole-text gram (shingles) or nothing (spans); NULL
+    text is nothing."""
+    if text is None:
+        return []
+    toks = text.split(" ")
+    if len(toks) < n:
+        return [] if positioned else [(None, text)]
+    return [(p, " ".join(toks[p : p + n])) for p in range(len(toks) - n + 1)]
+
+
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(texts=GRAM_CORPUS, n=st.integers(min_value=1, max_value=5))
+def test_gram_hash_rows_matches_python(spark, texts, n):
+    from pyspark.sql import functions as F
+
+    from patito_spark.functions.hashing import portable_hash64_np
+    from patito_spark.operators.dedup import gram_hash_rows
+
+    df = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+
+    def shape(tag, **kw):
+        rows = gram_hash_rows(df, "doc_id", "text", n, "portable", **kw)
+        pos = "__pos" if kw.get("positioned") else F.lit(None).cast("int")
+        return rows.select(F.lit(tag).alias("tag"), "__id", pos, "__h")
+
+    out = (
+        shape("plain")
+        .unionAll(shape("distinct", distinct=True))
+        .unionAll(shape("positioned", positioned=True))
+        .collect()
+    )
+    got = {tag: sorted(tuple(r)[1:] for r in out if r[0] == tag)
+           for tag in ("plain", "distinct", "positioned")}
+
+    def h(gram):
+        return int(portable_hash64_np([gram])[0])
+
+    want = {"plain": [], "distinct": [], "positioned": []}
+    for i, text in enumerate(texts):
+        grams = _ref_grams(text, n, positioned=False)
+        want["plain"] += [(i, None, h(g)) for _, g in grams]
+        want["distinct"] += [(i, None, hv) for hv in {h(g) for _, g in grams}]
+        want["positioned"] += [
+            (i, p, h(g)) for p, g in _ref_grams(text, n, positioned=True)
+        ]
+    assert got == {tag: sorted(rows) for tag, rows in want.items()}
+
+
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(texts=GRAM_CORPUS, n=st.integers(min_value=1, max_value=5))
+def test_repetition_stats_matches_counter(spark, texts, n):
+    from patito_spark.operators.text import repetition_stats
+
+    df = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    got = {
+        r["doc_id"]: (r["n_grams"], r["dup_gram_frac"], r["top_gram_frac"])
+        for r in repetition_stats(df, ngram=n).collect()
+    }
+    want = {}
+    for i, text in enumerate(texts):
+        counts = Counter(g for _, g in _ref_grams(text, n, positioned=True))
+        if counts:
+            total = sum(counts.values())
+            want[i] = (
+                total,
+                1.0 - len(counts) / total,
+                max(counts.values()) / total,
+            )
+    assert got == want
 
 
 # --- fix_mojibake round-trip ------------------------------------------- #
