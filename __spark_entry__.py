@@ -1372,12 +1372,12 @@ def _parquet_footer_rows(path: str) -> Optional[int]:
 def q_stream_cdc_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful streaming CDC view under the value oracle.
 
-    Replays events as a change stream through applyInPandasWithState
-    (latest change per user wins; errors are deletes) and returns the
-    final state — the custom stateful operator itself is what the DuckDB
-    oracle checks, not a batch re-derivation. Robust to multi-batch
-    execution: the memory sink's update rows are reduced to the
-    max-sequence row per key before returning.
+    Replays events as a change stream through streaming_apply_changes'
+    ``max_by`` state aggregation (latest change per user wins; errors are
+    deletes) and returns the final state — the stateful streaming operator
+    itself is what the DuckDB oracle checks, not a batch re-derivation.
+    Robust to multi-batch execution: the memory sink's update rows are
+    reduced to the max-sequence row per key before returning.
     """
     import uuid
 
@@ -1396,19 +1396,16 @@ def q_stream_cdc_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     merged = streaming_apply_changes(changes, key_cols=["user_id"], seq_col="ts")
     name = f"pt_cdc_{uuid.uuid4().hex[:8]}"
-    # State stores = shuffle.partitions at query start — SCALE-ADAPTIVE
-    # (round 16, verdict item 6): each state partition pays a fixed
-    # per-batch cost (state store instance + one Python worker round
-    # trip) regardless of how few rows it holds, so the count derives
-    # from the stream's row volume (parquet footer, no scan) at ~6k
-    # events per partition, capped at defaultParallelism once the
-    # volume saturates the cores. Quiet-window races
-    # (`git show dccf085:tools/ab_cdc_partitions.py`): sf0.1 (100k
-    # events) — 16 parts 1.504 s vs 32 parts 2.023 s vs 8 parts
-    # 1.706 s; sf1 (1M events) — 32 parts 2.892 s vs 16 parts 3.526 s;
-    # the formula lands on the measured winner at both SFs and on full
-    # parallelism at cluster volumes. Results are partition-count-
-    # independent (the state merge is per-key).
+    # State stores = shuffle.partitions at query start, scaled to the
+    # stream's row volume (parquet footer, no scan): ~6k events per
+    # partition, capped at defaultParallelism once the volume saturates
+    # the cores. Each state partition pays a fixed per-batch cost (load,
+    # commit and delta file of one state store) however few rows it
+    # holds. Race on the JVM max_by aggregate (sf0.1, 4 cores,
+    # `tools/race.py`, 10 pairs): this probe's 4 partitions 1.230 s
+    # median against the session default's 8 at 1.328 s; the probe won
+    # all 10 pairs. Results are partition-count-independent (the state
+    # merge is per-key).
     n_events = _parquet_footer_rows(os.path.join(sf_dir, "events.parquet"))
     state_parts = spark.sparkContext.defaultParallelism
     if n_events is not None:

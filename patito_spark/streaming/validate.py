@@ -303,6 +303,18 @@ def stateful_dedup_stream(
     )
 
 
+def _orderable(dtype: T.DataType) -> bool:
+    """True when Spark can compare values of ``dtype`` (no map or variant
+    anywhere inside it)."""
+    if isinstance(dtype, (T.MapType, T.VariantType)):
+        return False
+    if isinstance(dtype, T.ArrayType):
+        return _orderable(dtype.elementType)
+    if isinstance(dtype, T.StructType):
+        return all(_orderable(f.dataType) for f in dtype.fields)
+    return True
+
+
 def streaming_apply_changes(
     stream: DataFrame,
     key_cols: list[str],
@@ -315,71 +327,50 @@ def streaming_apply_changes(
     The streaming counterpart of
     :func:`patito_spark.operators.temporal.apply_changes`: per key, the
     change with the greatest ``seq_col`` seen so far wins; a winning
-    delete emits a tombstone (``is_deleted=True``). Late, lower-sequence
-    changes are rejected by the state, so the view converges to the same
-    result as the batch operator over the full stream.
+    delete emits a tombstone (``is_deleted=True``; a NULL op is not a
+    delete). Output: keys, payload (all columns but ``op_col``),
+    ``is_deleted``.
 
-    Built on ``applyInPandasWithState``: state holds one row per key
-    (its latest seq + payload) — O(keys) memory, the same state a MERGE
-    sink would keep. Run with ``outputMode("update")``; each batch emits
-    only the keys it changed.
+    One native ``max_by`` streaming aggregation: the state store keeps
+    one buffer per key (O(keys) memory) and no Python runs in the plan.
+    Run with ``outputMode("update")``; each micro-batch emits the current
+    winner of every key it carried, so a late or losing change re-emits
+    the unchanged winner (idempotent for an upsert consumer).
+
+    - A tie on ``seq_col`` goes to the greatest orderable payload (then
+      a delete), so the view depends neither on arrival order nor on the
+      micro-batch split; map/variant columns do not break ties. The final
+      view equals the batch operator whenever (key, seq) is unique, as
+      ``apply_changes`` requires.
+    - Rows with a NULL ``seq_col`` never win; a key with only such rows
+      emits nothing.
+    - A checkpoint from the earlier ``applyInPandasWithState`` version
+      cannot be restarted: ``start()`` returns, then the first batch
+      fails with ``STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA``
+      before processing any rows.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
     value_cols = [c for c in stream.columns if c not in (*key_cols, op_col)]
-    key_fields = [stream.schema[c] for c in key_cols]
-    value_fields = [stream.schema[c] for c in value_cols]
-    out_schema = StructType(
-        key_fields
-        + value_fields
-        + [StructField("is_deleted", BooleanType(), False)]
+    is_deleted = F.coalesce(F.col(op_col) == delete_op, F.lit(False))
+    rank = [
+        c for c in value_cols
+        if c != seq_col and _orderable(stream.schema[c].dataType)
+    ]
+    winner = F.max_by(
+        F.struct(*value_cols, is_deleted.alias("is_deleted")),
+        F.when(
+            F.col(seq_col).isNotNull(),
+            F.struct(seq_col, *rank, is_deleted.alias("is_deleted")),
+        ),
     )
-    state_schema = StructType(
-        value_fields + [StructField("__deleted", BooleanType(), True)]
-    )
-    seq_idx = value_cols.index(seq_col)
-
-    def _py(value):
-        # itertuples yields numpy scalars; state round-trips python values
-        return value.item() if hasattr(value, "item") else value
-
-    def merge(key, batches, state: GroupState):
-        best = None  # tuple of value_cols
-        best_deleted = False
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            # Vectorized winner scan: one numpy argmax per Arrow batch
-            # instead of a Python loop per row (itertuples over a
-            # million-event batch was the entry's hot spot). idxmax
-            # keeps the FIRST occurrence of the max — same winner as
-            # the strict `>` row loop it replaces.
-            row = pdf.loc[pdf[seq_col].idxmax()]
-            values = tuple(_py(row[c]) for c in value_cols)
-            if best is None or values[seq_idx] > best[seq_idx]:
-                best = values
-                best_deleted = _py(row[op_col]) == delete_op
-        if best is None:
-            return
-        if state.exists:
-            current = tuple(state.get)
-            if current[seq_idx] >= best[seq_idx]:
-                # Late data: the state already holds a newer change.
-                return
-        state.update((*best, best_deleted))
-        yield pd.DataFrame(
-            [(*key, *best, best_deleted)],
-            columns=[*key_cols, *value_cols, "is_deleted"],
+    return (
+        stream.groupBy(*key_cols)
+        .agg(winner.alias("__w"))
+        .filter(F.col("__w").isNotNull())
+        .select(
+            *key_cols,
+            *[F.col("__w").getField(c).alias(c) for c in value_cols],
+            F.col("__w.is_deleted"),
         )
-
-    return stream.groupBy(*key_cols).applyInPandasWithState(
-        merge,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -503,9 +494,9 @@ def write_stream_merge(
     per key the greatest ``seq_col`` wins, a winning ``delete_op`` removes
     the key, and a late change older than the target's current row is
     rejected (the target row re-enters the merge carrying its own seq and
-    wins ties — identical to the `state >= batch` guard in
-    :func:`streaming_apply_changes`). The seq column must therefore be
-    part of the change payload, as it is in any CDC feed.
+    wins ties; :func:`streaming_apply_changes` breaks them by payload, so
+    the two agree whenever (key, seq) is unique, as ``apply_changes``
+    requires). The seq column must be part of the change payload.
 
     The target is parquet **hash-partitioned on a key bucket**
     (directory column ``__kb`` = ``xxhash64(keys) mod n_buckets``, an
@@ -587,8 +578,8 @@ def write_stream_merge(
             have_target = False
         if have_target:
             # Target rows re-enter the merge as pseudo-changes with
-            # source-priority 1: on a seq tie the target (already-applied
-            # state) wins, matching streaming_apply_changes' >= guard.
+            # source-priority 1: on a seq tie (a repeated (key, seq)) the
+            # target (already-applied state) wins.
             # Tombstone rows re-enter as deletes, so their seq keeps
             # guarding against late lower-seq re-inserts.
             if keep_tombstones:

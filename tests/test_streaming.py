@@ -206,6 +206,143 @@ def test_streaming_apply_changes_matches_batch(spark, tmp_path):
     assert latest[2].is_deleted  # tombstone emitted for the deleted key
 
 
+_CDC_SCHEMA = "k long, seq long, v string, op string"
+
+
+def _cdc_files(spark, path, files, schema=_CDC_SCHEMA):
+    """Write each row list as one parquet file, with increasing mtimes so
+    ``maxFilesPerTrigger=1`` reads them in list order."""
+    import glob
+    import os
+
+    now = time.time()
+    for i, rows in enumerate(files):
+        before = set(glob.glob(f"{path}/*.parquet"))
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(path)
+        (new,) = set(glob.glob(f"{path}/*.parquet")) - before
+        os.utime(new, (now - 100 + i, now - 100 + i))
+
+
+def _cdc_emissions(spark, path, files_per_trigger=None, schema=_CDC_SCHEMA):
+    """Run streaming_apply_changes over ``path`` to completion; return
+    ``[(batch_id, row), ...]`` and the finished query."""
+    from patito_spark.streaming import streaming_apply_changes
+
+    reader = spark.readStream.schema(schema)
+    if files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(files_per_trigger))
+    view = streaming_apply_changes(reader.parquet(path), ["k"], "seq")
+    emitted = []
+    query = (
+        view.writeStream.outputMode("update")
+        .foreachBatch(
+            lambda b, i: emitted.extend((i, r) for r in b.collect())
+        )
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination(120)
+    assert query.exception() is None
+    return emitted, query
+
+
+def _final_view(emitted):
+    final = {}
+    for _, r in sorted(emitted, key=lambda e: e[0]):
+        final[r.k] = r
+    return final
+
+
+def test_streaming_apply_changes_ties_and_late_changes(spark, tmp_path):
+    """A seq tie goes to the greatest payload, within a batch and against
+    state, whichever arrives first; a late change re-emits the winner."""
+    path = str(tmp_path / "cdc_ties")
+    _cdc_files(spark, path, [
+        [(1, 10, "a", "U"), (1, 10, "b", "U"),
+         (2, 10, "a", "U"), (3, 10, "b", "U"), (4, 20, "new", "U"),
+         (5, 1, "x", None)],
+        [(2, 10, "b", "U"), (3, 10, "a", "U"), (4, 5, "old", "U")],
+    ])
+    emitted, _ = _cdc_emissions(spark, path, files_per_trigger=1)
+    by_key = {}
+    for i, r in sorted(emitted, key=lambda e: e[0]):
+        by_key.setdefault(r.k, []).append((i, r.seq, r.v, r.is_deleted))
+    assert by_key[1] == [(0, 10, "b", False)]
+    assert by_key[2] == [(0, 10, "a", False), (1, 10, "b", False)]
+    assert by_key[3] == [(0, 10, "b", False), (1, 10, "b", False)]
+    assert by_key[4] == [(0, 20, "new", False), (1, 20, "new", False)]
+    assert by_key[5] == [(0, 1, "x", False)]  # NULL op is not a delete
+
+
+def test_streaming_apply_changes_null_seq_never_wins(spark, tmp_path):
+    """A key whose only changes have a NULL seq emits nothing (the pandas
+    state version crashed the query on it)."""
+    path = str(tmp_path / "cdc_null_seq")
+    _cdc_files(spark, path, [
+        [(1, None, "only", "U"), (2, None, "null", "U"), (2, 3, "w", "U"),
+         (3, 1, "x", "U")],
+    ])
+    emitted, _ = _cdc_emissions(spark, path)
+    final = _final_view(emitted)
+    assert sorted(final) == [2, 3]
+    assert (final[2].seq, final[2].v) == (3, "w")
+
+
+def test_streaming_apply_changes_final_view_ignores_batching(spark, tmp_path):
+    """The last emission per key is the same with one file per
+    micro-batch and with every file in one, and it is the contract's
+    winner: greatest (seq, payload), deletes as tombstones. The map
+    column cannot be ordered and must not break the aggregation."""
+    import random
+
+    schema = "k long, seq long, v string, tags map<string,string>, op string"
+    rng = random.Random(7)
+    files = [
+        [
+            (rng.randrange(12), rng.choice([None, *range(6)]),
+             v := rng.choice("abc"), {"v": v}, rng.choice(["U", "U", "D", None]))
+            for _ in range(15)
+        ]
+        for _ in range(5)
+    ]
+    path = str(tmp_path / "cdc_batching")
+    _cdc_files(spark, path, files, schema)
+    one, q_one = _cdc_emissions(spark, path, files_per_trigger=1, schema=schema)
+    assert len(q_one.recentProgress) >= 5
+    every, _ = _cdc_emissions(spark, path, schema=schema)
+
+    def view(emitted):
+        return {
+            k: (r.seq, r.v, r.tags, r.is_deleted)
+            for k, r in _final_view(emitted).items()
+        }
+
+    want = {}
+    for k, seq, v, tags, op in (r for rows in files for r in rows):
+        cand = (seq, v, tags, op == "D")
+        old = want.get(k)
+        if seq is not None and (
+            old is None or (seq, v, op == "D") > (old[0], old[1], old[3])
+        ):
+            want[k] = cand
+    assert view(one) == view(every) == want
+
+
+def test_streaming_apply_changes_plan_has_no_python(spark, tmp_path):
+    """The merge is one JVM streaming aggregation: no pandas state
+    operator and no other Python node in the executed plan."""
+    import re
+
+    path = str(tmp_path / "cdc_plan")
+    _cdc_files(spark, path, [[(1, 1, "a", "U")]])
+    _, query = _cdc_emissions(spark, path)
+    plan = query._jsq.explainInternal(True)
+    assert "StateStoreSave" in plan
+    assert not re.search(r"InPandas|InArrow|Python", plan), plan
+
+
 def test_stream_stream_join(spark, tmp_path):
     from patito_spark.streaming import stream_stream_join
 
