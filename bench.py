@@ -16,6 +16,36 @@ import __spark_entry__ as entry_mod
 from patito_spark.session import get_session
 
 
+def load_floor(path: str) -> dict:
+    """Read a floor file, failing loudly on a malformed one.
+
+    ``queries`` must map entry names to positive seconds; ``sf`` and
+    ``cpus``, when present, must be numbers (a missing one means no
+    guard, see ``main``). The ValueError names the bad field.
+    """
+    with open(path) as fh:
+        doc = json.load(fh)
+    if not isinstance(doc, dict):
+        raise ValueError(f"{path}: expected a JSON object, got {type(doc).__name__}")
+    queries = doc.get("queries")
+    if not isinstance(queries, dict):
+        raise ValueError(f"{path}: 'queries' must map entry names to seconds")
+    for name, floor in queries.items():
+        if not _is_number(floor) or floor <= 0:
+            raise ValueError(
+                f"{path}: 'queries' entry {name!r} must be a positive number, "
+                f"got {floor!r}"
+            )
+    for field in ("sf", "cpus"):
+        if field in doc and not _is_number(doc[field]):
+            raise ValueError(f"{path}: {field!r} must be a number, got {doc[field]!r}")
+    return doc
+
+
+def _is_number(value) -> bool:
+    return isinstance(value, (int, float)) and not isinstance(value, bool)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
@@ -101,8 +131,7 @@ def main() -> None:
     drift = 1.0
     floor_path = os.path.join(os.path.dirname(__file__), "BENCH_FLOOR.json")
     if os.path.exists(floor_path):
-        with open(floor_path) as fh:
-            floor_doc = json.load(fh)
+        floor_doc = load_floor(floor_path)
         # Floors are per (scale factor, core count): comparing an sf1 run
         # against sf0.1 floors flags every data-proportional entry, and an
         # 8-core floor is unreachable at 32 cores for the suite's

@@ -16,15 +16,20 @@ def active_session() -> SparkSession:
 
 
 def get_session(app_name: str = "patito_spark") -> SparkSession:
-    """Create (or get) a SparkSession with scale-sane defaults.
+    """Create (or get) a local SparkSession with scale-sane defaults.
 
-    On a real cluster users bring their own session; these settings only
-    apply when patito_spark has to bootstrap one (tests, bench, local use):
+    Library code reaches this only through :func:`active_session`, when
+    no session is active; on a cluster users bring their own session and
+    keep its settings. A direct call while a session exists applies the
+    runtime-settable options below to that session (``getOrCreate``
+    does). The settings:
 
     * AQE on — runtime coalescing + skew-join handling,
-    * shuffle partitions sized to cores locally (cluster default 200 stands
-      when a session already exists),
-    * Arrow enabled for the pandas-UDF operators.
+    * shuffle partitions sized to cores (``max(cpus, 8)``),
+    * Arrow enabled for the pandas-UDF operators,
+    * streaming checkpoints written through the Hadoop ``FileSystem``
+      API (``FileSystemBasedCheckpointFileManager``) rather than
+      ``FileContext``; the checkpoint files on disk are the same.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     builder = (
@@ -42,6 +47,21 @@ def get_session(app_name: str = "patito_spark") -> SparkSession:
         # 2.12 s -> 0.37 s from this alone); multi-file cluster layouts
         # size splits from maxPartitionBytes regardless.
         .config("spark.sql.files.openCostInBytes", str(256 * 1024))
+        # Spark's default FileContext checkpoint manager resolves links
+        # through RawLocalFileSystem.getFileLinkStatus; without native
+        # Hadoop that execs `readlink` once per offset, commit and
+        # state-store file (512 forks per stream_ingest pass, docs/perf.md).
+        # The FileSystem manager forks none. Safe here: a local session
+        # has a single writer per checkpoint, a POSIX rename is atomic,
+        # and the checkpoint format on disk is unchanged, so a checkpoint
+        # written under Spark's default restarts under this one. HDFS and
+        # object-store users bring their own session, which keeps
+        # Spark's default.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         # A varied pipeline session compiles hundreds of whole-stage-
         # codegen classes; the 100-entry default class cache evicts and
         # re-pays 1-2 s of Janino compilation per re-run of a plan

@@ -1,8 +1,10 @@
 """Model-aware readers/writers (ref polars.py:614-679 generalized).
 
-Scale notes: the model schema is handed to the Spark reader so parquet scans
-prune to exactly the model's columns (``ReadSchema`` in the plan) and CSV/JSON
-parsing skips schema inference (which costs an extra full pass at 100 TB).
+Scale notes: parquet/ORC reads keep the file's own schema (so validation
+sees its dtypes; for parquet, reading it runs one Spark job per call) and
+project to the model's columns, so scans prune to them (``ReadSchema`` in the
+plan). CSV/JSON parsing skips schema inference (which costs an extra full
+pass at 100 TB).
 """
 
 from __future__ import annotations

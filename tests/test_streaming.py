@@ -1,6 +1,7 @@
 """Structured Streaming helper tests (memory/rate sources, availableNow)."""
 
 import time
+from contextlib import contextmanager
 from typing import Literal, Optional
 
 import pytest
@@ -225,7 +226,9 @@ def _cdc_files(spark, path, files, schema=_CDC_SCHEMA):
         os.utime(new, (now - 100 + i, now - 100 + i))
 
 
-def _cdc_emissions(spark, path, files_per_trigger=None, schema=_CDC_SCHEMA):
+def _cdc_emissions(
+    spark, path, files_per_trigger=None, schema=_CDC_SCHEMA, checkpoint=None
+):
     """Run streaming_apply_changes over ``path`` to completion; return
     ``[(batch_id, row), ...]`` and the finished query."""
     from patito_spark.streaming import streaming_apply_changes
@@ -235,14 +238,12 @@ def _cdc_emissions(spark, path, files_per_trigger=None, schema=_CDC_SCHEMA):
         reader = reader.option("maxFilesPerTrigger", str(files_per_trigger))
     view = streaming_apply_changes(reader.parquet(path), ["k"], "seq")
     emitted = []
-    query = (
-        view.writeStream.outputMode("update")
-        .foreachBatch(
-            lambda b, i: emitted.extend((i, r) for r in b.collect())
-        )
-        .trigger(availableNow=True)
-        .start()
+    writer = view.writeStream.outputMode("update").foreachBatch(
+        lambda b, i: emitted.extend((i, r) for r in b.collect())
     )
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    query = writer.trigger(availableNow=True).start()
     query.awaitTermination(120)
     assert query.exception() is None
     return emitted, query
@@ -343,6 +344,71 @@ def test_streaming_apply_changes_plan_has_no_python(spark, tmp_path):
     assert not re.search(r"InPandas|InArrow|Python", plan), plan
 
 
+_CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_MANAGERS = "org.apache.spark.sql.execution.streaming.checkpointing."
+
+
+@contextmanager
+def _checkpoint_manager(spark, cls):
+    """Run the block with ``cls`` as the session's checkpoint manager."""
+    prev = spark.conf.get(_CHECKPOINT_MANAGER)
+    spark.conf.set(_CHECKPOINT_MANAGER, cls)
+    try:
+        yield
+    finally:
+        spark.conf.set(_CHECKPOINT_MANAGER, prev)
+
+
+def _input_rows(query):
+    return sum(p["numInputRows"] for p in query.recentProgress)
+
+
+def test_get_session_writes_checkpoints_through_filesystem(spark, tmp_path):
+    """The bootstrap session uses the FileSystem checkpoint manager (no
+    `readlink` fork per checkpoint file), and the setting is read when a
+    query starts, so the resume tests below really switch managers."""
+    from patito_spark.session import get_session
+
+    assert get_session("patito_spark-tests") is spark
+    assert spark.conf.get(_CHECKPOINT_MANAGER) == (
+        _MANAGERS + "FileSystemBasedCheckpointFileManager"
+    )
+    path = str(tmp_path / "cdc_bogus")
+    _cdc_files(spark, path, [[(1, 1, "a", "U")]])
+    with _checkpoint_manager(spark, _MANAGERS + "NoSuchCheckpointFileManager"):
+        with pytest.raises(Exception, match="NoSuchCheckpointFileManager"):
+            _cdc_emissions(spark, path, checkpoint=str(tmp_path / "ckpt"))
+
+
+def test_streaming_apply_changes_resumes_filecontext_checkpoint(spark, tmp_path):
+    """A CDC checkpoint written by Spark's default FileContext manager
+    restarts under the session's FileSystem manager: the second run reads
+    only the new file, and the last emission per key is batch
+    apply_changes over both files."""
+    from patito_spark.operators.temporal import apply_changes
+
+    path, ckpt = str(tmp_path / "cdc_resume"), str(tmp_path / "ckpt")
+    first = [(1, 10, "a", "U"), (2, 10, "b", "U"), (3, 10, "c", "U")]
+    second = [(1, 20, "a2", "U"), (2, 5, "late", "U"), (3, 30, None, "D"),
+              (4, 1, "d", "U")]
+    _cdc_files(spark, path, [first])
+    with _checkpoint_manager(spark, _MANAGERS + "FileContextBasedCheckpointFileManager"):
+        before, _ = _cdc_emissions(spark, path, checkpoint=ckpt)
+    _cdc_files(spark, path, [second])
+    after, query = _cdc_emissions(spark, path, checkpoint=ckpt)
+
+    assert _input_rows(query) == len(second)
+    assert min(i for i, _ in after) > max(i for i, _ in before)
+    final = _final_view(before + after)
+    batch = apply_changes(
+        None, spark.createDataFrame(first + second, _CDC_SCHEMA), ["k"], "seq"
+    )
+    assert {k: (r.seq, r.v) for k, r in final.items() if not r.is_deleted} == {
+        r.k: (r.seq, r.v) for r in batch.collect()
+    }
+    assert final[3].is_deleted
+
+
 def test_stream_stream_join(spark, tmp_path):
     from patito_spark.streaming import stream_stream_join
 
@@ -412,6 +478,45 @@ def test_write_stream_validated_inline_filter(spark, tmp_path):
     q = write_stream_validated(stream, Reading, out, ckpt, trigger_available_now=True)
     q.awaitTermination(120)
     assert {r.k for r in spark.read.parquet(out).collect()} == {1}
+
+
+def test_write_stream_validated_resumes_filecontext_checkpoint(spark, tmp_path):
+    """A dead-letter sink checkpoint written by the FileContext manager
+    restarts under the session default: the second run reads only the
+    appended file, and good + dead rows are the input rows, once each."""
+    import patito_spark as pt
+    from patito_spark.streaming import write_stream_validated
+
+    class Reading(pt.Model):
+        k: int
+        v: float = pt.Field(ge=0)
+
+    src = str(tmp_path / "wsv_resume_src")
+    good, bad, ckpt = (str(tmp_path / d) for d in ("good", "bad", "ckpt"))
+
+    def run():
+        stream = spark.readStream.schema("k long, v double").parquet(src)
+        q = write_stream_validated(
+            stream, Reading, good, ckpt, dead_letter_path=bad,
+            trigger_available_now=True,
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+        return q
+
+    spark.sql("select * from values (1, 1.0), (2, -1.0) as t(k, v)").write.parquet(src)
+    with _checkpoint_manager(spark, _MANAGERS + "FileContextBasedCheckpointFileManager"):
+        run()
+    spark.sql(
+        "select * from values (3, 2.0), (4, cast(null as double)), (5, -5.0) as t(k, v)"
+    ).write.mode("append").parquet(src)
+    query = run()
+
+    assert _input_rows(query) == 3
+    good_keys = sorted(r.k for r in spark.read.parquet(good).collect())
+    bad_keys = sorted(r.k for r in spark.read.parquet(bad).collect())
+    assert good_keys == [1, 3]
+    assert bad_keys == [2, 4, 5]
 
 
 def test_stream_stream_join_left_outer(spark, tmp_path):
