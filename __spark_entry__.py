@@ -905,15 +905,11 @@ def _ivf_cells_for(sf_dir: str) -> int:
     from patito_spark.operators.similarity import auto_n_centroids
 
     path = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        import pyarrow.parquet as pq
-
-        n = pq.ParquetFile(path).metadata.num_rows
-    except (ImportError, OSError) as exc:
+    n = _parquet_footer_rows(path)
+    if n is None:
         n = 500
         print(
-            f"[_ivf_cells_for] cell-count fallback n={n}: "
-            f"cannot read {path} ({exc})",
+            f"[_ivf_cells_for] cell-count fallback n={n}: cannot read {path}",
             file=sys.stderr,
         )
     return auto_n_centroids(n)
@@ -2651,25 +2647,18 @@ def _lsh_auto_planes_at_compare_sf() -> int:
     calling oracle_sql() so both engines bucket with the same plane
     count (verdict r8 what's-wrong #1: a sf0.01-pinned count handed
     DuckDB 2 planes vs Spark's 7 at sf1 — a fake 10x win)."""
-    import os
-    import sys as _sys
-
     from patito_spark.operators.similarity import auto_n_planes
 
     path = os.path.join(
         os.environ.get("PATITO_ORACLE_SF_DIR", "/root/testdata/sf0.01"),
         "embeddings.parquet",
     )
-    try:
-        import pyarrow.parquet as pq
-
-        n = pq.ParquetFile(path).metadata.num_rows
-    except (ImportError, OSError) as exc:
+    n = _parquet_footer_rows(path)
+    if n is None:
         n = 500
         print(
-            f"[oracle_sql] plane-count fallback n={n}: "
-            f"cannot read {path} ({exc})",
-            file=_sys.stderr,
+            f"[oracle_sql] plane-count fallback n={n}: cannot read {path}",
+            file=sys.stderr,
         )
     return auto_n_planes(n)
 

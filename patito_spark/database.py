@@ -722,9 +722,14 @@ class Database:
 
     @classmethod
     def default(cls) -> "Database":
-        """Process-wide default database (ref duckdb.py:2396)."""
-        if cls._default is None:
-            cls._default = cls()
+        """Default database of the active session (ref duckdb.py:2396);
+        rebound when the active session changes, e.g. after a restart.
+        A thread with no active session keeps the current default."""
+        active = SparkSession.getActiveSession()
+        if cls._default is None or (
+            active is not None and cls._default.spark is not active
+        ):
+            cls._default = cls(active)
         return cls._default
 
     @classmethod
@@ -734,13 +739,17 @@ class Database:
         return cls(spark)
 
     def _read_path(self, path: str) -> SparkDataFrame:
+        from patito_spark.sources.readers import read_inferred
+
         lower = path.lower()
         if lower.endswith(".parquet"):
-            return self.spark.read.parquet(path)
+            return read_inferred(self.spark, "parquet", path)
         if lower.endswith(".csv"):
-            return self.spark.read.csv(path, header=True, inferSchema=True)
+            return read_inferred(
+                self.spark, "csv", path, header=True, inferSchema=True
+            )
         if lower.endswith(".json"):
-            return self.spark.read.json(path)
+            return read_inferred(self.spark, "json", path)
         raise TypeError(f"Unsupported file type for Relation source: {path}")
 
     def to_relation(self, derived_from: RelationSource) -> Relation:

@@ -73,8 +73,12 @@ def release_caches() -> int:
     """Unpersist every tracked intermediate; returns how many were freed.
 
     Non-blocking: Spark drops the blocks asynchronously, the DataFrames
-    stay usable (uncached).
+    stay usable (uncached). Also forgets the file schemas inferred by
+    :func:`patito_spark.sources.readers.read_inferred` (not counted).
     """
+    from patito_spark.sources.readers import _SCHEMAS
+
+    _SCHEMAS.clear()
     n = 0
     while _TRACKED:
         _TRACKED.pop().unpersist()

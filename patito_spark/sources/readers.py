@@ -1,17 +1,22 @@
 """Model-aware readers/writers (ref polars.py:614-679 generalized).
 
 Scale notes: parquet/ORC reads keep the file's own schema (so validation
-sees its dtypes; for parquet, reading it runs one Spark job per call) and
-project to the model's columns, so scans prune to them (``ReadSchema`` in the
-plan). CSV/JSON parsing skips schema inference (which costs an extra full
-pass at 100 TB).
+sees its dtypes) and project to the model's columns, so scans prune to
+them (``ReadSchema`` in the plan). The schema is inferred once per file
+version per session (:func:`read_inferred`); for parquet that inference is
+a Spark job, which later reads of the unchanged file skip. CSV/JSON
+parsing skips schema inference (which costs an extra full pass at 100 TB).
 """
 
 from __future__ import annotations
 
 from typing import Any, Optional, Sequence, TYPE_CHECKING
 
-from pyspark.sql import SparkSession
+from py4j.java_gateway import JavaClass
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame as SparkDataFrame, SparkSession
+from pyspark.sql.types import StructType
+from pyspark.sql.utils import to_str
 
 if TYPE_CHECKING:
     from patito_spark.dataframe import DataFrame
@@ -22,6 +27,105 @@ def _session(spark: Optional[SparkSession]) -> SparkSession:
     from patito_spark.session import active_session
 
     return spark or active_session()
+
+
+# Session confs that change what schema inference returns for a path.
+_INFERENCE_CONFS = (
+    "spark.sql.caseSensitive",
+    "spark.sql.files.ignoreCorruptFiles",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.legacy.timeParserPolicy",
+    "spark.sql.orc.mergeSchema",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.timestampType",
+)
+
+# Inferred schemas by file version; emptied by release_caches().
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _schema_key(
+    spark: SparkSession, fmt: str, path: str, options: dict[str, str]
+) -> Optional[tuple]:
+    """Everything an inferred schema depends on: the application, format,
+    qualified path or glob, reader options, inference confs, and
+    (file, size, mtime) of every leaf file the path covers.
+
+    The files are listed through Hadoop's ``FileSystem`` with the conf
+    Spark's own read builds (session conf plus reader options), so any
+    scheme Spark reads is fingerprinted the way Spark will list it.
+    Returns None when nothing matches or the listing fails; the caller
+    then reads uncached and Spark reports the error, if any.
+    """
+    try:
+        jsession = spark._jsparkSession
+        hadoop_conf = jsession.sessionState().newHadoopConf()
+        for k, v in options.items():
+            if k not in ("path", "paths"):
+                hadoop_conf.set(k, v)
+        # A JavaClass by name skips the per-package py4j lookups of
+        # spark._jvm.org.apache... (6.6 ms a read on a 4-core host).
+        jpath = JavaClass(
+            "org.apache.hadoop.fs.Path", spark.sparkContext._gateway._gateway_client
+        )(path)
+        fs = jpath.getFileSystem(hadoop_conf)
+        todo = list(fs.globStatus(jpath) or ())
+        files = []
+        while todo:
+            status = todo.pop()
+            if status.isDirectory():
+                todo.extend(fs.listStatus(status.getPath()))
+            else:
+                files.append(
+                    (
+                        status.getPath().toString(),
+                        status.getLen(),
+                        status.getModificationTime(),
+                    )
+                )
+        if not files:
+            return None
+        sql_conf = jsession.sessionState().conf()
+        return (
+            spark.sparkContext.applicationId,
+            fmt,
+            fs.makeQualified(jpath).toString(),
+            tuple(sorted(options.items())),
+            tuple(sql_conf.getConfString(k) for k in _INFERENCE_CONFS),
+            tuple(sorted(files)),
+        )
+    except Py4JError:
+        return None
+
+
+def read_inferred(
+    spark: SparkSession, fmt: str, path: str, **options: Any
+) -> SparkDataFrame:
+    """``spark.read.format(fmt).options(**options).load(path)``, inferring
+    the schema once per file version per session.
+
+    A miss reads as Spark does and keeps ``df.schema``; a hit reads with
+    ``.schema(kept)``, which runs no inference job (a parquet inference
+    is one Spark job). The kept schema is the file's own, so ``validate()``
+    still sees its dtypes. A file rewritten with the same size inside the
+    filesystem's mtime resolution keeps the old schema until
+    ``release_caches()``.
+    """
+    options = {k: to_str(v) for k, v in options.items()}
+    reader = spark.read.format(fmt).options(**options)
+    key = _schema_key(spark, fmt, path, options)
+    schema = _SCHEMAS.get(key) if key is not None else None
+    if schema is not None:
+        return reader.schema(schema).load(path)
+    df = reader.load(path)
+    if key is not None:
+        _SCHEMAS[key] = df.schema
+    return df
 
 
 def _finalize(sdf, model: type["Model"]) -> "DataFrame":
@@ -66,8 +170,6 @@ def read_csv(
             for name, spec in model.column_specs.items()
             if name not in derived
         ]
-        from pyspark.sql.types import StructType
-
         sdf = reader.csv(path, header=False, schema=StructType(schema_fields))
     return _finalize(sdf, model)
 
@@ -80,18 +182,7 @@ def read_parquet(
     **options: Any,
 ) -> "DataFrame":
     """Read parquet; project to the model's columns so the scan prunes."""
-    spark = _session(spark)
-    sdf = spark.read.options(**options).parquet(path)
-    derived = set(model.derived_columns)
-    if prune:
-        keep = [c for c in model.columns if c in sdf.columns and c not in derived]
-        extra_sources = {
-            src for src in model.derived_columns.values() if isinstance(src, str)
-        }
-        keep += [c for c in sdf.columns if c in extra_sources and c not in keep]
-        if keep:
-            sdf = sdf.select(*keep)
-    return _finalize(sdf, model)
+    return _read_pruned("parquet", path, model, spark, prune, options)
 
 
 def read_orc(
@@ -102,8 +193,18 @@ def read_orc(
     **options: Any,
 ) -> "DataFrame":
     """Read ORC; project to the model's columns so the scan prunes."""
-    spark = _session(spark)
-    sdf = spark.read.options(**options).orc(path)
+    return _read_pruned("orc", path, model, spark, prune, options)
+
+
+def _read_pruned(
+    fmt: str,
+    path: str,
+    model: type["Model"],
+    spark: Optional[SparkSession],
+    prune: bool,
+    options: dict[str, Any],
+) -> "DataFrame":
+    sdf = read_inferred(_session(spark), fmt, path, **options)
     derived = set(model.derived_columns)
     if prune:
         keep = [c for c in model.columns if c in sdf.columns and c not in derived]
@@ -148,8 +249,6 @@ def read_json(
     """Read JSON-lines with the model schema (no inference pass)."""
     spark = _session(spark)
     derived = set(model.derived_columns)
-    from pyspark.sql.types import StructType
-
     schema = StructType(
         [
             spec.struct_field

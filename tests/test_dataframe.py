@@ -260,3 +260,28 @@ def test_model_validate_dispatch(spark):
     # non-dataframe argument falls through to pydantic model validation
     inst = Item.validate({"k": 1, "v": 2.0})
     assert inst.k == 1
+
+
+def test_read_parquet_reinfers_a_rewritten_file(spark, tmp_path):
+    """read_parquet infers each file version's schema once per session: a
+    file rewritten with a new column type reads with the new type, and
+    validate() reports the mismatch."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    class M(pt.Model):
+        a: int
+
+    path = str(tmp_path / "rewritten.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    first = M.DataFrame.read_parquet(path)
+    assert first.inner.schema == spark.read.parquet(path).schema
+    first.validate()
+
+    pq.write_table(pa.table({"a": ["x", "yy", "zzz"]}), path)
+    again = M.DataFrame.read_parquet(path)
+    assert again.inner.schema == spark.read.parquet(path).schema
+    assert again.inner.schema["a"].dataType == T.StringType()
+    with pytest.raises(DataFrameValidationError) as exc_info:
+        again.validate()
+    assert [e["type"] for e in exc_info.value.errors()] == ["type_error.columndtype"]

@@ -174,6 +174,26 @@ def test_parquet_footer_rows_sums_parts_and_falls_back(tmp_path):
     assert entry_mod._parquet_footer_rows(str(tmp_path / "gone.parquet")) is None
 
 
+def test_footer_sized_knobs_fall_back_on_a_corrupt_file(tmp_path, monkeypatch):
+    """The IVF cell count and the oracle's LSH plane count read the
+    embeddings row count from the parquet footer; a corrupt footer takes
+    the n=500 fallback instead of failing the entry or the oracle."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from patito_spark.operators.similarity import auto_n_centroids, auto_n_planes
+
+    monkeypatch.setenv("PATITO_ORACLE_SF_DIR", str(tmp_path))
+    emb = tmp_path / "embeddings.parquet"
+    pq.write_table(pa.table({"x": list(range(5000))}), emb)
+    assert entry_mod._ivf_cells_for(str(tmp_path)) == auto_n_centroids(5000)
+    assert entry_mod._lsh_auto_planes_at_compare_sf() == auto_n_planes(5000)
+
+    emb.write_bytes(b"PAR1 this is not a parquet file")
+    assert entry_mod._ivf_cells_for(str(tmp_path)) == auto_n_centroids(500)
+    assert entry_mod._lsh_auto_planes_at_compare_sf() == auto_n_planes(500)
+
+
 def test_text_token_counts_fused_encode(spark):
     """The entry's one-stage dual encode is row-identical to composing
     the standalone with_unigram_token_ids / with_bpe_token_ids
