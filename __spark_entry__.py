@@ -617,14 +617,12 @@ def dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from patito_spark.operators.spans import duplicate_span_intervals
 
     docs = _t(spark, sf_dir, "documents")
-    # first_mode="packed": doc_id fits in int32 at every SF, so
-    # min((id<<32)+pos) == min(struct(id,pos)) and the stats aggregate
-    # stays HashAggregate (no gram-stream sorts) — results identical,
-    # equivalence property-tested
-    # (test_operators_spans.py::test_first_mode_packed_equals_struct);
-    # an id outside int32 fails the query instead.
+    # doc_id is a BIGINT that fits in int32 at every SF, so the operator
+    # packs (id, pos) into one BIGINT and the stats aggregate stays
+    # HashAggregate (no gram-stream sorts); an id outside int32 fails
+    # the query instead.
     return duplicate_span_intervals(
-        docs, span_tokens=4, hash_mode="portable", first_mode="packed"
+        docs, span_tokens=4, hash_mode="portable"
     ).select(
         "doc_id",
         F.col("span_start").cast("long"),
@@ -2214,12 +2212,11 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     # Round-12 addition: the published Gopher + C4 rule sets ride the
     # same slot. Round 15: the whole profile moved into ONE Arrow
-    # stage (heuristics.document_profile, engine="arrow") — C-speed
-    # string counts + one token pass for all language votes instead of
-    # the JVM regexp battery; value-identical (bit-exact doubles,
-    # test-pinned vs engine="sql") and measured 4-5x faster at sf1,
-    # landing the slot at ~1.0x its DuckDB oracle.
-    per_doc = document_profile(docs, engine="arrow").select(
+    # stage (heuristics.document_profile) — C-speed string counts + one
+    # token pass for all language votes instead of the JVM regexp
+    # battery; value-identical (bit-exact doubles, test-pinned vs the
+    # codegen composition of the rule operators).
+    per_doc = document_profile(docs).select(
         "doc_id",
         "quality",
         "fp",

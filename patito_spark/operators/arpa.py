@@ -88,10 +88,12 @@ class ArpaLm:
 
     @classmethod
     def read(cls, spark, path: str, materialize: bool = True) -> "ArpaLm":
-        meta = spark.read.parquet(f"{path}/meta").first()
+        from patito_spark.sources.readers import read_inferred
+
+        meta = read_inferred(spark, "parquet", f"{path}/meta").first()
         tables, counts = {}, {}
         for k in range(1, meta["order"] + 1):
-            t = spark.read.parquet(f"{path}/order={k}")
+            t = read_inferred(spark, "parquet", f"{path}/order={k}")
             if materialize:
                 t = t.persist()
             tables[k] = t

@@ -3,25 +3,23 @@
 A document is contaminated when it shares long n-grams with an evaluation
 benchmark — the standard decontamination test (e.g. GPT-3's 13-gram
 filter) run before training. The benchmark side is tiny by definition
-(an eval set), so both physical strategies broadcast it and stream the
-corpus exactly once with no corpus shuffle before the result:
-
-* ``"set"`` (default via ``"auto"``) — broadcast the benchmark's
-  distinct gram set, intersect per document in one Arrow-batched
-  ``mapInPandas`` stage (zero shuffles, zero joins);
-* ``"join"`` — gram-hash both sides with
-  :func:`patito_spark.operators.dedup.shingle_hash_rows` and resolve the
-  overlap as a broadcast hash equi-join + per-doc count (all-JVM).
-
-``hash_mode="portable"`` makes the join pipeline SQL-replayable.
+(an eval set), so it is broadcast and the corpus streams exactly once
+with no corpus shuffle before the result: the benchmark's distinct gram
+set is intersected per document in one Arrow-batched ``mapInPandas``
+stage (zero shuffles, zero joins). Past the set's size cap the
+benchmark is gram-hashed with
+:func:`patito_spark.operators.dedup.shingle_hash_rows` and the overlap
+resolved as a broadcast hash equi-join + per-doc count (all-JVM).
 """
 
 from __future__ import annotations
 
+from typing import Optional
+
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-from patito_spark.operators.dedup import shingle_hash_rows
+from patito_spark.operators.dedup import shingle_hash_rows, shingles
 
 
 def ngram_contamination(
@@ -33,9 +31,8 @@ def ngram_contamination(
     min_shared: int = 1,
     hash_mode: str = "xxhash64",
     broadcast_benchmark: bool = True,
-    strategy: str = "auto",
     max_broadcast_grams: int = 2_000_000,
-    bloom_fpp: float = 1e-4,
+    bloom_fpp: Optional[float] = None,
 ) -> DataFrame:
     """Corpus documents sharing ≥ ``min_shared`` distinct n-grams with the
     benchmark.
@@ -45,49 +42,43 @@ def ngram_contamination(
     tokens contribute their whole text as one gram (so short exact copies
     are still caught); NULL text, on either side, contributes no grams.
 
-    ``strategy`` picks the physical shape (A/B-raced at sf0.1,
-    docs/perf.md):
+    The exact answer (``bloom_fpp=None``, the default) takes one of two
+    shapes, picked by the size of the benchmark's gram set:
 
-    * ``"set"`` (0.27 s) — the benchmark's distinct grams are collected
-      once (bounded by ``max_broadcast_grams``) and shipped as a
-      broadcast variable; the corpus runs ONE Arrow-batched
-      ``mapInPandas`` stage intersecting each document's gram set
-      in-batch. Zero shuffles, no join: the corpus is a pure map-only
-      scan — the GPT-3-style decontamination shape (broadcast the eval
-      set, stream the corpus). Exact string matching (no hash
-      collisions at all).
-    * ``"join"`` (0.72 s) — all-JVM: both sides through
-      :func:`shingle_hash_rows`, broadcast hash equi-join on the gram
-      hash, map-side-combined per-doc count. Use when Python worker
-      lanes are saturated, or the benchmark exceeds the broadcast cap.
-    * ``"bloom"`` — the bounded-MEMORY shape for a LARGE benchmark
-      suite (many eval sets decontaminated at once): the benchmark's
-      distinct gram hashes are folded into a packed Bloom bitset
-      (:class:`patito_spark.functions.bloom.BloomBits`, ~2.4 bytes per
-      gram at the default ``bloom_fpp=1e-4`` — vs 8+ for the join's
-      hash broadcast, ~50× less than the string set), built in one
-      distributed pass and broadcast once per executor; the corpus runs
-      scan → JVM gram-hash → vectorized-numpy membership → one
-      map-side-combined per-doc count. No false negatives (contaminated
-      documents are never missed). Over-flagging is per-PROBE: expected
-      falsely-flagged docs ≈ total distinct corpus grams × fpp at
-      ``min_shared=1`` — at 1M docs × 8 grams the default 1e-4 costs
-      ~0.08% of the corpus, while fpp=0.01 costs 8% (measured; that is
-      why the default is 1e-4 — size fpp to the corpus gram count, not
-      to intuition). Measured at 1M docs / 100k-gram benchmark, where
-      the join still fits: join 3.4 s, bloom ~4.5 s — bloom trades ~1.3×
-      wall for an ~3× smaller broadcast that stays feasible when the
-      benchmark outgrows the join (docs/perf.md).
-    * ``"auto"`` (default) — ``"set"`` unless the benchmark's distinct
-      gram count exceeds ``max_broadcast_grams`` (each Python worker
-      holds one copy of the set — at the default 2M cap that is a few
-      hundred MB per worker), else ``"join"``.
+    * up to ``max_broadcast_grams`` distinct grams — the set is collected
+      once and shipped as a broadcast variable; the corpus runs ONE
+      Arrow-batched ``mapInPandas`` stage intersecting each document's
+      gram set in-batch. Zero shuffles, no join: the GPT-3-style
+      decontamination shape (broadcast the eval set, stream the corpus).
+      Exact string matching (no hash collisions at all). The all-JVM
+      join below lost to it at sf1, at sf3 and on 1M documents against
+      a 100k-gram benchmark (docs/perf.md).
+    * past the cap (each Python worker would hold a copy of a set of a
+      few hundred MB) — both sides through :func:`shingle_hash_rows`, a
+      hash equi-join on the gram hash (broadcast unless
+      ``broadcast_benchmark=False``), and a map-side-combined per-doc
+      count.
 
-    ``hash_mode``/``broadcast_benchmark`` only affect the join and
-    bloom strategies (both gram-hash JVM-side through
-    :func:`shingle_hash_rows`).
+    ``bloom_fpp`` trades exactness for memory, for a LARGE benchmark
+    suite (many eval sets decontaminated at once): the benchmark's
+    distinct gram hashes are folded into a packed Bloom bitset
+    (:class:`patito_spark.functions.bloom.BloomBits`, ~2.4 bytes per
+    gram at ``bloom_fpp=1e-4`` — vs 8+ for the join's hash broadcast,
+    ~50× less than the string set), built in one distributed pass and
+    broadcast once per executor; the corpus runs scan → JVM gram-hash →
+    vectorized-numpy membership → one map-side-combined per-doc count.
+    No false negatives (contaminated documents are never missed).
+    Over-flagging is per-PROBE: expected falsely-flagged docs ≈ total
+    distinct corpus grams × fpp at ``min_shared=1`` — at 1M docs × 8
+    grams, 1e-4 costs ~0.08% of the corpus while 0.01 costs 8%
+    (measured; size fpp to the corpus gram count, not to intuition).
+    Measured at 1M docs / 100k-gram benchmark: join 3.4 s, bloom ~4.5 s
+    (docs/perf.md) — the filter buys a smaller broadcast, not speed.
+
+    ``hash_mode`` only affects the join and the Bloom filter (both
+    gram-hash JVM-side through :func:`shingle_hash_rows`).
     """
-    if strategy == "bloom":
+    if bloom_fpp is not None:
         return _bloom_contamination(
             corpus,
             benchmark,
@@ -98,64 +89,51 @@ def ngram_contamination(
             hash_mode=hash_mode,
             fpp=bloom_fpp,
         )
-    if strategy in ("auto", "set"):
-        from patito_spark.operators.dedup import shingles
+    # Distinct benchmark grams, bounded collect: an eval set is tiny by
+    # definition — if it is not, fall back to the join.
+    bench_grams_df = (
+        benchmark.filter(F.col(text_col).isNotNull())
+        .select(F.explode(shingles(text_col, n)).alias("__g"))
+        .distinct()
+        .limit(max_broadcast_grams + 1)
+    )
+    bench_pdf = bench_grams_df.toPandas()
+    if len(bench_pdf) <= max_broadcast_grams:
+        import pandas as pd
 
-        # Distinct benchmark grams, bounded collect: an eval set is tiny
-        # by definition — if it is not, fall back to the join strategy
-        # ("auto") or fail loudly ("set").
-        bench_grams_df = (
-            benchmark.filter(F.col(text_col).isNotNull())
-            .select(F.explode(shingles(text_col, n)).alias("__g"))
-            .distinct()
-            .limit(max_broadcast_grams + 1)
+        bench_set = set(bench_pdf["__g"])
+        bc = corpus.sparkSession.sparkContext.broadcast(bench_set)
+        out_schema = T.StructType(
+            [
+                T.StructField(id_col, corpus.schema[id_col].dataType),
+                T.StructField("n_shared_grams", T.LongType()),
+            ]
         )
-        bench_pdf = bench_grams_df.toPandas()
-        if len(bench_pdf) > max_broadcast_grams:
-            if strategy == "set":
-                raise ValueError(
-                    f"benchmark has more than {max_broadcast_grams} "
-                    "distinct grams; raise max_broadcast_grams or use "
-                    "strategy='join'"
-                )
-        else:
-            import pandas as pd
 
-            bench_set = set(bench_pdf["__g"])
-            bc = corpus.sparkSession.sparkContext.broadcast(bench_set)
-            out_schema = T.StructType(
-                [
-                    T.StructField(id_col, corpus.schema[id_col].dataType),
-                    T.StructField("n_shared_grams", T.LongType()),
-                ]
-            )
+        def shared_counts(batches):
+            bs = bc.value
+            for pdf in batches:
+                ids, counts = [], []
+                for i, txt in zip(pdf[id_col], pdf[text_col]):
+                    if txt is None:
+                        continue
+                    toks = txt.split(" ")
+                    if len(toks) < n:
+                        grams = {txt}
+                    else:
+                        grams = {
+                            " ".join(toks[j : j + n])
+                            for j in range(len(toks) - n + 1)
+                        }
+                    k = len(grams & bs)
+                    if k >= min_shared:
+                        ids.append(i)
+                        counts.append(k)
+                yield pd.DataFrame({id_col: ids, "n_shared_grams": counts})
 
-            def shared_counts(batches):
-                bs = bc.value
-                for pdf in batches:
-                    ids, counts = [], []
-                    for i, txt in zip(pdf[id_col], pdf[text_col]):
-                        if txt is None:
-                            continue
-                        toks = txt.split(" ")
-                        if len(toks) < n:
-                            grams = {txt}
-                        else:
-                            grams = {
-                                " ".join(toks[j : j + n])
-                                for j in range(len(toks) - n + 1)
-                            }
-                        k = len(grams & bs)
-                        if k >= min_shared:
-                            ids.append(i)
-                            counts.append(k)
-                    yield pd.DataFrame(
-                        {id_col: ids, "n_shared_grams": counts}
-                    )
-
-            return corpus.select(id_col, text_col).mapInPandas(
-                shared_counts, out_schema
-            )
+        return corpus.select(id_col, text_col).mapInPandas(
+            shared_counts, out_schema
+        )
 
     # distinct=False on BOTH sides: the corpus side's repeats collapse in
     # the post-join count_distinct, and the benchmark side dedups on __h
@@ -188,10 +166,10 @@ def _bloom_contamination(
     hash_mode: str,
     fpp: float,
 ) -> DataFrame:
-    """``strategy="bloom"`` body — see :func:`ngram_contamination`.
+    """The ``bloom_fpp`` body of :func:`ngram_contamination`.
 
     Both sides hash grams JVM-side (:func:`shingle_hash_rows`, the same
-    ``hash_mode`` the join strategy uses), so the Python stage touches
+    ``hash_mode`` the join uses), so the Python stage touches
     only int64 hash columns — the membership test is pure vectorized
     numpy over Arrow batches, never per-gram string work.
     """

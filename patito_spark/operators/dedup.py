@@ -608,20 +608,20 @@ def minhash_dedup_pairs(
     hash_mode: str = "xxhash64",
     materialize_shingles: bool = True,
     broadcast_verify_max_docs: Optional[int] = 100_000,
-    engine: str = "auto",
     **lsh_kwargs,
 ) -> DataFrame:
     """Verified duplicate pairs: LSH candidates filtered by true Jaccard.
 
-    ``engine="auto"`` (default) runs the per-document feature build —
-    shingles, gram hashes, OPH bin mins, densification, band keys AND
-    the verify gram-sets — as ONE map-only Arrow stage when
-    ``hash_mode="portable"`` (:func:`_minhash_doc_features_arrow`; the
-    JVM md5 + base-16 conv per gram occurrence was the pipeline's
-    dominant cost, and every one of those stages is doc-local). The
-    cached frame is then one row per document instead of the exploded
-    gram stream. ``engine="sql"`` keeps the codegen spelling;
-    xxhash64 mode always uses it (no numpy xxhash64).
+    The lane follows ``hash_mode``. With ``"portable"`` the per-document
+    feature build — shingles, gram hashes, OPH bin mins, densification,
+    band keys AND the verify gram-sets — is ONE map-only Arrow stage
+    (:func:`_minhash_doc_features_arrow`; the JVM md5 + base-16 conv per
+    gram occurrence was the pipeline's dominant cost, and every one of
+    those stages is doc-local), and the cached frame is one row per
+    document instead of the exploded gram stream. It beat the codegen
+    spelling of the same features at sf1 (docs/perf.md). ``"xxhash64"``
+    keeps the codegen spelling: numpy has no xxhash64, and the JVM hash
+    is already fast.
 
     Verification uses the SAME shingle space as the signatures (so the
     threshold means what the MinHash collision probability estimates), and
@@ -646,16 +646,7 @@ def minhash_dedup_pairs(
     persisted array table so the aggregate is not paid twice. Pass
     ``broadcast_verify_max_docs=None`` to force the shuffle shape.
     """
-    if engine not in ("auto", "sql", "arrow"):
-        raise ValueError(f"engine must be 'auto', 'sql' or 'arrow', got {engine!r}")
-    if engine == "auto":
-        engine = "arrow" if hash_mode == "portable" else "sql"
-    if engine == "arrow":
-        if hash_mode != "portable":
-            raise ValueError(
-                "engine='arrow' requires hash_mode='portable' (xxhash64 "
-                "has no numpy equivalent; the JVM lane is already fast)"
-            )
+    if hash_mode == "portable":
         feats = _minhash_doc_features_arrow(
             df, id_col, text_col, n=shingle_size,
             num_hashes=lsh_kwargs.get("num_hashes", 64),
@@ -831,20 +822,19 @@ def simhash_signatures(
     text_col: str = "text",
     bits: int = 64,
     hash_mode: str = "xxhash64",
-    engine: str = "auto",
 ) -> DataFrame:
     """SimHash signatures (``__id``, ``__sig`` bigint).
 
-    Two execution lanes, identical output:
+    Two execution lanes with identical output, picked by ``hash_mode``:
 
-    - ``engine="sql"`` — codegen hash agg: explode token hashes to
+    - ``"xxhash64"`` — codegen hash agg: explode token hashes to
       rows, then ONE hash aggregate with ``ceil(bits/2)`` packed vote
       counters (two 32-bit ones-count lanes per 64-bit sum; each
       token's hash votes per bit). Everything stays in whole-stage
       codegen — higher-order array functions are interpreted in Spark
       and ~1000× slower per op. Map-side combine reduces each
       partition to one partial-vote row per doc before the shuffle.
-    - ``engine="arrow"`` (portable mode only) — ONE map-only
+    - ``"portable"`` — ONE map-only
       Arrow-batched stage, ZERO exchanges (round 15; the
       repetition_stats/document_profile precedent): each batch
       tokenizes in pandas, `pd.factorize`s the tokens and runs md5
@@ -855,30 +845,26 @@ def simhash_signatures(
       token stream and packs the signature in-kernel. Per-batch
       memoization degrades gracefully with vocabulary size (a
       web-scale batch still amortizes natural-text token repetition);
-      the stage stays map-only at any scale.
+      the stage stays map-only at any scale. It beat the codegen lane
+      over the same md5 hashes at sf1 (docs/perf.md).
 
-    ``engine="auto"`` (default) picks arrow for ``hash_mode=
-    "portable"`` (the md5 lane, where the JVM constant dominates) and
-    sql for ``xxhash64`` (already JVM-vectorized, and xxhash64 has no
-    numpy equivalent).
+    xxhash64 stays in the JVM: it is already vectorized there, and numpy
+    has no xxhash64.
 
     ``hash_mode="portable"`` (60-bit md5-derived) makes signatures
     engine-reproducible for SQL oracles; its top 4 bits are constant 0 so
     the effective signature is 60 bits — fine for near-dup voting.
     """
-    from patito_spark.functions.hashing import hash64
-
-    if engine not in ("auto", "sql", "arrow"):
-        raise ValueError(f"engine must be 'auto', 'sql' or 'arrow', got {engine!r}")
-    if engine == "auto":
-        engine = "arrow" if hash_mode == "portable" else "sql"
-    if engine == "arrow":
-        if hash_mode != "portable":
-            raise ValueError(
-                "engine='arrow' requires hash_mode='portable' (xxhash64 "
-                "has no numpy equivalent; the JVM lane is already fast)"
-            )
+    if hash_mode == "portable":
         return _simhash_signatures_arrow(df, id_col, text_col, bits)
+    return _simhash_signatures_sql(df, id_col, text_col, bits, hash_mode)
+
+
+def _simhash_signatures_sql(
+    df: DataFrame, id_col: str, text_col: str, bits: int, hash_mode: str
+) -> DataFrame:
+    """The codegen lane of :func:`simhash_signatures`."""
+    from patito_spark.functions.hashing import hash64
 
     exploded = df.select(
         F.col(id_col).alias("__id"),

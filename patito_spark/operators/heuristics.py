@@ -458,7 +458,6 @@ def document_profile(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    engine: str = "arrow",
 ) -> DataFrame:
     """The fused per-document profile: quality score, md5 fingerprint,
     marker-vote language ID, the Gopher Table-A1 rule booleans +
@@ -468,36 +467,26 @@ def document_profile(
     ``text.fingerprint`` / ``text.detect_language`` (pinned bit-exact,
     doubles included, by tests/test_heuristics equality sweep).
 
-    ``engine="arrow"`` (default) computes everything in ONE Arrow-batched
-    ``mapInPandas`` stage of C-speed Python string ops — ``str.count``
-    for token/line/sentence/symbol tallies, ``in`` for the contains
-    rules, ``str.translate`` for the punctuation ratio, one token pass
-    for ALL language votes, and three compiled regexes for the
-    line-anchored rules. Zero shuffles, map-only, composes with
-    streams. Measured 4-5x the codegen-regexp projection at sf1 (the
+    Everything is computed in ONE Arrow-batched ``mapInPandas`` stage
+    of C-speed Python string ops — ``str.count`` for
+    token/line/sentence/symbol tallies, ``in`` for the contains rules,
+    ``str.translate`` for the punctuation ratio, one token pass for ALL
+    language votes, and three compiled regexes for the line-anchored
+    rules. Zero shuffles, map-only, composes with streams. It beat the
+    codegen-regexp composition at sf1 by 3x (docs/perf.md; the
     ``repetition_stats`` precedent — the JVM regex engine is the
     constant factor, not the plan: both shapes are one scan
-    projection). ``engine="sql"`` keeps the pure-Catalyst projection
-    (whole-stage codegen, no Python workers) for environments where
-    Arrow workers are unavailable or the plan must stay
-    expression-only.
+    projection).
 
-    Null text mirrors the SQL branch: quality 0.25 (the ``least``
-    null-skipping arithmetic), null fingerprint, default language,
-    every rule False, ``frac_terminal_punct`` 0.0. Thresholds are the
-    papers' published defaults (see the composed operators for the
-    knobs); EMPTY text is a precondition violation under ANSI mode in
-    the SQL branch (division by zero) — the Arrow branch returns the
-    same columns with a 0.0 punctuation ratio instead of raising.
+    Null text mirrors the composed operators: quality 0.25 (the
+    ``least`` null-skipping arithmetic), null fingerprint, default
+    language, every rule False, ``frac_terminal_punct`` 0.0. Thresholds
+    are the papers' published defaults (see the composed operators for
+    the knobs). EMPTY text is a precondition violation under ANSI mode
+    in the composition (division by zero); here it yields a 0.0
+    punctuation ratio instead.
     """
-    if engine not in ("arrow", "sql"):
-        raise ValueError(f"engine must be 'arrow' or 'sql', got {engine!r}")
-    from patito_spark.operators.text import (
-        LANG_MARKERS,
-        detect_language,
-        fingerprint,
-        quality_score,
-    )
+    from patito_spark.operators.text import LANG_MARKERS
 
     out_cols = [
         "quality", "fp", "lang_pred",
@@ -508,15 +497,6 @@ def document_profile(
         "rule_min_sentences", "rule_no_lorem", "rule_no_brace",
         "rule_no_javascript", "pass_c4",
     ]
-    if engine == "sql":
-        return c4_rules(gopher_rules(df, text_col=text_col), text_col=text_col).select(
-            F.col(id_col),
-            quality_score(text_col).alias("quality"),
-            fingerprint(text_col).alias("fp"),
-            detect_language(text_col).alias("lang_pred"),
-            *out_cols[3:],
-        )
-
     import hashlib
     import re as _re
     import string as _string

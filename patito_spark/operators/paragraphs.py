@@ -14,13 +14,8 @@ Scale design (100 TB / 1000 executors):
   codegen normalization — no shuffle, no Python. The standalone
   operators reassemble with ``array_sort(collect_list(struct))
   .getField`` — no interpreted higher-order-function lambda.
-  ``paragraph_passes`` defaults to the same struct lane (one split per
-  document, measured fastest at every locally measurable scale); its
-  ``engine="keys"`` lane instead shuffles only surviving ``para_idx``
-  integers and rebuilds from one ``split()`` per output row with a
-  positional array ``filter`` — text never rides an aggregation
-  exchange — for deployments where network shuffle bytes dominate
-  regex CPU.
+  ``paragraph_passes`` reassembles the same way (one split per
+  document).
 * ``dedup_paragraphs(scope="corpus")`` costs exactly two shuffles on the
   exploded paragraph table (occurrence ranking on the paragraph key,
   then doc reassembly) plus one co-keyed join back to the input. The
@@ -240,7 +235,6 @@ def paragraph_passes(
     drop_empty: bool = True,
     paragraph_rows: Optional[DataFrame] = None,
     mode_col: str = "mode",
-    engine: str = "struct",
 ) -> DataFrame:
     """Both INDEPENDENT paragraph views of a corpus in one fused plan:
     ``mode='dedup'`` rows are :func:`dedup_paragraphs` (corpus scope)
@@ -248,202 +242,27 @@ def paragraph_passes(
     :func:`drop_boilerplate_paragraphs` output — row-identical to
     composing the two operators FOR NON-NULL ``id_col`` VALUES, tagged
     by ``mode_col``. Null ids (they identify documents) are a
-    precondition on BOTH lanes: the fused stats count a null-id group
-    where the composed ``drop_boilerplate_paragraphs`` uses
-    ``count_distinct`` (which skips nulls), and the keys lane's
-    ``min_by`` winner additionally skips null ids where the composed
-    ``min(struct(id, ...))`` ranks one first.
+    precondition: the fused stats count a null-id group where the
+    composed ``drop_boilerplate_paragraphs`` uses ``count_distinct``
+    (which skips nulls).
 
     The use case is the side-by-side attrition report (what would each
     policy do to this corpus?) where running the operators separately
     pays the paragraph machinery twice.
 
-    ``engine`` picks the physical lane (identical rows either way for
-    non-null ids):
-
-    * ``"struct"`` (default): one ``split``+explode of the documents,
-      two stacked MERGEABLE aggregates — ``(para_key, id)`` first (a
-      web-ubiquitous paragraph splits across docs in this exchange, so
-      no hot single key), then ``para_key`` — carrying the paragraph
-      text in the aggregation structs, and ONE shared ``(mode, id)``
-      reassembly shuffle. The winner rule is the composed operators'
-      ``min(struct(id, para_idx, paragraph))`` exactly (null ids rank
-      first, identical to :func:`dedup_paragraphs`). This lane splits
-      each document ONCE and is the measured winner at every locally
-      measurable scale (sf0.1 and sf1, round 15/16 races) — per-task
-      regex CPU, not shuffle bytes, dominates there.
-    * ``"keys"``: the round-15 "decide with small rows" lane — the
-      decision pass shuffles only ``(para_key, id, para_idx)`` ints
-      (``min``/``min_by``/``count`` primitive buffers, both levels
-      HashAggregate), survivors union into one ``(mode, id)`` list
-      aggregate, and the paragraph TEXT crosses exactly one exchange:
-      the survivor lists join back onto ``df`` and a positional
-      ``filter`` over one ``split()`` per output row rebuilds the
-      document. The price is re-splitting each surviving document per
-      mode (~3 regex passes total); the win is that text rides one
-      exchange instead of three. Choose it when network shuffle bytes
-      dominate regex CPU (large clusters, slow interconnects).
-      Caveat: ``min_by(para_idx, id)`` skips null ids where the
-      composed operators' ``min(struct(id, ...))`` ranks a null id
-      first — ids are assumed non-null on this lane.
+    Plan: one ``split``+explode of the documents, two stacked MERGEABLE
+    aggregates — ``(para_key, id)`` first (a web-ubiquitous paragraph
+    splits across docs in this exchange, so no hot single key), then
+    ``para_key`` — carrying the paragraph text in the aggregation
+    structs, and ONE shared ``(mode, id)`` reassembly shuffle. The
+    winner rule is the composed operators' ``min(struct(id, para_idx,
+    paragraph))`` exactly. Each document is split once; per-task regex
+    CPU, not shuffle bytes, dominates at every locally measurable scale
+    (the shuffle-only-keys alternative lost at sf0.1, sf1 and sf3,
+    docs/perf.md).
     """
     if min_docs < 2:
         raise ValueError(f"min_docs must be >= 2, got {min_docs}")
-    if engine not in ("struct", "keys"):
-        raise ValueError(f"engine must be 'struct' or 'keys', got {engine!r}")
-    if engine == "struct":
-        return _paragraph_passes_struct(
-            df,
-            id_col,
-            text_col,
-            sep_pattern,
-            join_sep,
-            min_docs,
-            min_chars,
-            normalize,
-            drop_empty,
-            paragraph_rows,
-            mode_col,
-        )
-    if paragraph_rows is not None:
-        keys = paragraph_rows.select(id_col, "para_idx", "para_key")
-    else:
-        keys = (
-            df.select(
-                F.col(id_col),
-                F.posexplode(F.split(F.col(text_col), sep_pattern)).alias(
-                    "para_idx", "paragraph"
-                ),
-            )
-            .select(
-                id_col,
-                "para_idx",
-                _norm_key(F.col("paragraph"), normalize).alias("para_key"),
-            )
-            .filter(F.length("para_key") >= max(min_chars, 1))
-        )
-
-    per_doc = keys.groupBy("para_key", id_col).agg(
-        F.min("para_idx").alias("__pidx")
-    )
-    stats = per_doc.groupBy("para_key").agg(
-        F.min(id_col).alias("__wid"),
-        F.min_by("__pidx", F.col(id_col)).alias("__widx"),
-        F.count(F.lit(1)).alias("__n_docs"),
-    )
-    from patito_spark.functions.cache import tracked_persist
-
-    stats = tracked_persist(stats)
-
-    dedup_kept = stats.select(
-        F.col("__wid").alias(id_col), F.col("__widx").alias("para_idx")
-    ).withColumn("__mode", F.lit("dedup"))
-    common = stats.filter(F.col("__n_docs") >= min_docs).select("para_key")
-    boiler_kept = (
-        keys.join(common, on="para_key", how="left_anti")
-        .select(id_col, "para_idx")
-        .withColumn("__mode", F.lit("boiler"))
-    )
-    kept = dedup_kept.unionByName(boiler_kept)
-
-    if paragraph_rows is not None:
-        # Caller-provided paragraph stream: the text may not be
-        # re-derivable from df, so fetch the survivors' paragraphs from
-        # the provided rows and reassemble by sorted position.
-        kept_txt = kept.join(
-            paragraph_rows.select(id_col, "para_idx", "paragraph"),
-            on=[id_col, "para_idx"],
-        )
-        rebuilt = kept_txt.groupBy("__mode", id_col).agg(
-            F.concat_ws(
-                join_sep,
-                F.array_sort(
-                    F.collect_list(F.struct("para_idx", "paragraph"))
-                ).getField("paragraph"),
-            ).alias("__rebuilt")
-        )
-    else:
-        surv = kept.groupBy("__mode", id_col).agg(
-            F.collect_list("para_idx").alias("__idxs")
-        )
-        # Pin the survivors join to a shuffled-hash build: the survivor
-        # lists sit near AQE's broadcast threshold at mid scales, and the
-        # sort-merge fallback would SORT the full document text — the one
-        # thing this design exists to avoid. A shuffled-hash build never
-        # sorts either side, and at corpus scale the survivor side is not
-        # broadcastable anyway. (Measured: the unhinted lane is bimodal at
-        # sf1 — 2.4 vs 3.4 s — the hinted lane is stable at 2.5-2.6 s.)
-        rebuilt = (
-            df.select(id_col, text_col)
-            .join(surv.hint("shuffle_hash"), on=id_col, how="inner")
-            .select(
-                "__mode",
-                F.col(id_col),
-                F.concat_ws(
-                    join_sep,
-                    F.filter(
-                        F.split(F.col(text_col), sep_pattern),
-                        lambda x, i: F.array_contains(F.col("__idxs"), i),
-                    ),
-                ).alias("__rebuilt"),
-            )
-        )
-    return _emit_tagged(df, rebuilt, id_col, text_col, mode_col, drop_empty)
-
-
-def _emit_tagged(
-    df: DataFrame,
-    rebuilt: DataFrame,
-    id_col: str,
-    text_col: str,
-    mode_col: str,
-    drop_empty: bool,
-) -> DataFrame:
-    """Shared tail of both :func:`paragraph_passes` lanes: emit the
-    rebuilt ``(__mode, id, __rebuilt)`` rows directly when the frame
-    carries nothing beyond (id, text), else graft them back onto
-    ``df``'s other columns through the per-mode crossJoin (the
-    mode-tagged analogue of :func:`_rebuild_docs`)."""
-    if drop_empty and set(df.columns) == {id_col, text_col}:
-        out = rebuilt.select(
-            F.col("__mode").alias(mode_col),
-            F.col(id_col),
-            F.col("__rebuilt").alias(text_col),
-        )
-        return out.select(mode_col, *df.columns)
-    how = "inner" if drop_empty else "left"
-    modes = df.sparkSession.createDataFrame(
-        [("dedup",), ("boiler",)], f"{mode_col} string"
-    )
-    out = (
-        df.drop(text_col)
-        .crossJoin(F.broadcast(modes))
-        .join(
-            rebuilt.withColumnRenamed("__mode", mode_col),
-            on=[mode_col, id_col],
-            how=how,
-        )
-        .withColumn(text_col, F.coalesce(F.col("__rebuilt"), F.lit("")))
-        .drop("__rebuilt")
-    )
-    return out.select(mode_col, *df.columns)
-
-def _paragraph_passes_struct(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    sep_pattern: str,
-    join_sep: str,
-    min_docs: int,
-    min_chars: int,
-    normalize: bool,
-    drop_empty: bool,
-    paragraph_rows: Optional[DataFrame],
-    mode_col: str,
-) -> DataFrame:
-    """The ``engine="struct"`` lane of :func:`paragraph_passes`: one
-    split/explode, stats aggregates carrying the paragraph text in their
-    buffers, one shared ``(mode, id)`` reassembly shuffle."""
     paras = (
         paragraph_rows
         if paragraph_rows is not None
@@ -491,3 +310,41 @@ def _paragraph_passes_struct(
         ).alias("__rebuilt")
     )
     return _emit_tagged(df, rebuilt, id_col, text_col, mode_col, drop_empty)
+
+
+def _emit_tagged(
+    df: DataFrame,
+    rebuilt: DataFrame,
+    id_col: str,
+    text_col: str,
+    mode_col: str,
+    drop_empty: bool,
+) -> DataFrame:
+    """Tail of :func:`paragraph_passes`: emit the rebuilt ``(__mode, id,
+    __rebuilt)`` rows directly when the frame carries nothing beyond
+    (id, text), else graft them back onto ``df``'s other columns through
+    the per-mode crossJoin (the mode-tagged analogue of
+    :func:`_rebuild_docs`)."""
+    if drop_empty and set(df.columns) == {id_col, text_col}:
+        out = rebuilt.select(
+            F.col("__mode").alias(mode_col),
+            F.col(id_col),
+            F.col("__rebuilt").alias(text_col),
+        )
+        return out.select(mode_col, *df.columns)
+    how = "inner" if drop_empty else "left"
+    modes = df.sparkSession.createDataFrame(
+        [("dedup",), ("boiler",)], f"{mode_col} string"
+    )
+    out = (
+        df.drop(text_col)
+        .crossJoin(F.broadcast(modes))
+        .join(
+            rebuilt.withColumnRenamed("__mode", mode_col),
+            on=[mode_col, id_col],
+            how=how,
+        )
+        .withColumn(text_col, F.coalesce(F.col("__rebuilt"), F.lit("")))
+        .drop("__rebuilt")
+    )
+    return out.select(mode_col, *df.columns)

@@ -571,10 +571,16 @@ class IvfAdcIndex:
 
         import numpy as np
 
-        codes = spark.read.parquet(f"{path}/codes")
+        from patito_spark.sources.readers import read_inferred
+
+        codes = read_inferred(spark, "parquet", f"{path}/codes")
         if materialize:
             codes = codes.persist()
-        meta = spark.read.parquet(f"{path}/meta").orderBy("cell").collect()
+        meta = (
+            read_inferred(spark, "parquet", f"{path}/meta")
+            .orderBy("cell")
+            .collect()
+        )
         centroids = np.array([row["centroid"] for row in meta])
         pq = _json.loads(meta[0]["pq_json"])
         return cls(codes, centroids, pq)

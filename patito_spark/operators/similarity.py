@@ -380,8 +380,14 @@ class LshIndex:
 
     @classmethod
     def read(cls, spark, path: str) -> "LshIndex":
-        table = spark.read.parquet(f"{path}/assignments")
-        meta = spark.read.parquet(f"{path}/planes").orderBy("plane_id").collect()
+        from patito_spark.sources.readers import read_inferred
+
+        table = read_inferred(spark, "parquet", f"{path}/assignments")
+        meta = (
+            read_inferred(spark, "parquet", f"{path}/planes")
+            .orderBy("plane_id")
+            .collect()
+        )
         planes = [row["plane"] for row in meta]
         seed = meta[0]["seed"] if meta else 42
         return cls(table, planes, n_planes=len(planes), seed=seed)
@@ -483,8 +489,14 @@ class IvfIndex:
     def read(cls, spark, path: str) -> "IvfIndex":
         import numpy as np
 
-        table = spark.read.parquet(f"{path}/assignments")
-        meta = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
+        from patito_spark.sources.readers import read_inferred
+
+        table = read_inferred(spark, "parquet", f"{path}/assignments")
+        meta = (
+            read_inferred(spark, "parquet", f"{path}/centroids")
+            .orderBy("cell")
+            .collect()
+        )
         centroids = np.array([row["centroid"] for row in meta])
         metric = meta[0]["assign_metric"] if meta else "l2"
         return cls(table, centroids, assign_metric=metric)
@@ -670,7 +682,6 @@ def ann_ivf_topk(
     centroids_df: Optional[DataFrame] = None,
     assign_metric: str = "l2",
     index: Optional[IvfIndex] = None,
-    score_mode: str = "auto",
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k cosine search.
 
@@ -700,18 +711,10 @@ def ann_ivf_topk(
     fit and corpus assignment entirely — the production shape for repeated
     query batches over one corpus.
 
-    ``score_mode`` picks how probed candidates are scored:
-
-    * ``"arrow"`` (the ``"auto"`` default) — numpy over ``mapInPandas``
-      (one Python-worker stage).
-    * ``"expr"`` — an unrolled JVM expression
-      (:func:`patito_spark.functions.vector.cosine_similarity_unrolled`),
-      eliminating the Python round-trip. Bit-identical to the Arrow path
-      (same left-fold accumulation order), but MEASURED SLOWER at
-      dim=64/sf0.1: 1.84 s steady-state vs 0.80 s (docs/perf.md) — the
-      ~6·dim-node expression tree is too large for effective codegen.
-      Retained for measurement and for clusters whose Python lanes are
-      saturated.
+    Probed candidates are scored with numpy over ``mapInPandas``
+    (:func:`cosine_score_pairs`). An unrolled JVM cosine expression lost
+    to it at sf0.1 and sf1 (docs/perf.md): the ~6·dim-node expression
+    tree is too large for effective codegen.
     """
     import numpy as np
     import pandas as pd
@@ -798,26 +801,12 @@ def ann_ivf_topk(
         probes = q_pruned.mapInPandas(probe, schema=probe_schema)
 
     candidates = inverted.join(F.broadcast(probes), on="cell")
-    dim = int(centroids.shape[1])
-    if score_mode == "auto":
-        score_mode = "arrow"
-    if score_mode == "expr":
-        from patito_spark.functions.vector import cosine_similarity_unrolled
-
-        scored = candidates.select(
-            "query_id",
-            "neighbor_id",
-            cosine_similarity_unrolled("__qvec", "__cvec", dim).alias(
-                "cosine"
-            ),
-        )
-    else:
-        scored = cosine_score_pairs(
-            candidates,
-            vec_a="__qvec",
-            vec_b="__cvec",
-            keep_cols=["query_id", "neighbor_id"],
-        )
+    scored = cosine_score_pairs(
+        candidates,
+        vec_a="__qvec",
+        vec_b="__cvec",
+        keep_cols=["query_id", "neighbor_id"],
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )

@@ -45,7 +45,14 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql.types import (
+    ByteType,
+    DataType,
+    IntegerType,
+    LongType,
+    ShortType,
+)
 
 from patito_spark.operators.dedup import gram_hash_rows
 
@@ -61,7 +68,6 @@ def duplicate_span_intervals(
     keep_first: bool = True,
     hash_mode: str = "xxhash64",
     materialize_grams: bool = True,
-    first_mode: str = "struct",
 ) -> DataFrame:
     """Merged duplicated-run intervals per document.
 
@@ -74,34 +80,27 @@ def duplicate_span_intervals(
     (the aggressive variant — e.g. for scrubbing known-bad spans).
 
     Scale shape: occurrence count and first occurrence are a MERGEABLE
-    hash aggregate per gram hash — ``count`` + ``min(struct(id, pos))``
-    with map-side partial combine — joined back onto the gram stream.
-    A ubiquitous gram (a boilerplate 20-gram occurring 10^8 times at
-    web scale) therefore collapses to one row per map task before the
+    hash aggregate per gram hash, joined back onto the gram stream. A
+    ubiquitous gram (a boilerplate 20-gram occurring 10^8 times at web
+    scale) therefore collapses to one row per map task before the
     exchange, and the join-back probe side streams (AQE can split a
     skewed probe partition; a ``row_number`` window partition cannot be
     split and must sort the whole hot key in one task). Grams come from
     the zero-exchange positioned :func:`..dedup.gram_hash_rows` build.
+
+    The first occurrence is picked from the id's type (see
+    :func:`_first_occurrence`): an integral id packs ``(id, pos)`` into
+    one BIGINT, so the aggregate is HashAggregate-eligible; any other id
+    type takes ``min(struct(id, pos))``, which plans as SortAggregate.
+    A ``LongType`` id outside int32 fails the job (the packed key would
+    no longer order like ``(id, pos)``).
 
     The gram stream feeds both the stats aggregate and the join probe;
     ``materialize_grams`` (default, the ``minhash_dedup_pairs``
     ``materialize_shingles`` pattern) persists it so the build runs
     once (~tokens x 16 bytes, memory-and-disk). Disable at extreme
     scale to trade a second gram build for zero cache footprint.
-
-    ``first_mode="packed"`` (round 16) tracks the first occurrence as
-    ``min((id << 32) + pos)`` instead of ``min(struct(id, pos))`` —
-    identical results whenever the id fits in int32 (``pos`` is a token
-    index and always fits; an id outside that range fails the job
-    rather than keep the wrong copy), and the stats aggregate becomes
-    HashAggregate-eligible instead of paying a SortAggregate's full sort
-    of the gram stream on both sides of the exchange. The default stays
-    ``"struct"``, which is exact for ANY id values.
     """
-    if first_mode not in ("struct", "packed"):
-        raise ValueError(
-            f"first_mode must be 'struct' or 'packed', got {first_mode!r}"
-        )
     grams = gram_hash_rows(
         df, id_col, text_col, span_tokens, hash_mode, positioned=True
     )
@@ -109,56 +108,56 @@ def duplicate_span_intervals(
         from patito_spark.functions.cache import tracked_persist
 
         grams = tracked_persist(grams)
-    if first_mode == "packed":
-        # (id << 32) + pos orders exactly like struct(id, pos) when id
-        # fits in int32 and 0 <= pos < 2^32 (pos is a token index, so
-        # only the id bound is a real precondition). An id outside it
-        # fails the job through raise_error inside the stats aggregate's
-        # input — no extra job, and never a silently wrong keep-first.
-        # The payoff: min() over a BIGINT keeps the whole stats
-        # aggregate HashAggregate-eligible, where min(struct(...))
-        # plans as SortAggregate and pays a full sort of the gram
-        # stream on BOTH sides of the exchange (guide §2.4).
-        # The cast to long is LOAD-BEARING: shiftleft on an IntegerType
-        # id is a Java int shift (distance masked mod 32 — a silent
-        # no-op) and packed keys would collide.
-        doc_id = F.col("__id").cast("long")
-        packed = F.shiftleft(doc_id, 32) + F.col("__pos")
-        checked = F.when(
-            ~doc_id.between(-(2**31), 2**31 - 1),
-            F.raise_error(
-                F.concat(
-                    F.lit("first_mode='packed' needs ids that fit in int32,"
-                          " got "),
-                    doc_id.cast("string"),
-                )
-            ),
-        ).otherwise(packed)
-        stats = grams.groupBy("__h").agg(
-            F.count(F.lit(1)).alias("__cnt"),
-            F.min(checked).alias("__first_pk"),
-        )
-        dup_stats = stats.filter(F.col("__cnt") >= min_count).select(
-            "__h", "__first_pk"
-        )
-        removable = grams.join(dup_stats, on="__h", how="inner")
-        if keep_first:
-            removable = removable.filter(packed != F.col("__first_pk"))
-    else:
-        stats = grams.groupBy("__h").agg(
-            F.count(F.lit(1)).alias("__cnt"),
-            F.min(F.struct(F.col("__id"), F.col("__pos"))).alias("__first"),
-        )
-        dup_stats = stats.filter(F.col("__cnt") >= min_count).select(
-            "__h", "__first"
-        )
-        removable = grams.join(dup_stats, on="__h", how="inner")
-        if keep_first:
-            removable = removable.filter(
-                (F.col("__id") != F.col("__first.__id"))
-                | (F.col("__pos") != F.col("__first.__pos"))
-            )
+    key, checked = _first_occurrence(df.schema[id_col].dataType)
+    stats = grams.groupBy("__h").agg(
+        F.count(F.lit(1)).alias("__cnt"),
+        F.min(checked).alias("__first"),
+    )
+    dup_stats = stats.filter(F.col("__cnt") >= min_count).select(
+        "__h", "__first"
+    )
+    removable = grams.join(dup_stats, on="__h", how="inner")
+    if keep_first:
+        removable = removable.filter(key != F.col("__first"))
     return _merge_islands(removable.select("__id", "__pos"), span_tokens, id_col)
+
+
+def _first_occurrence(id_type: DataType) -> tuple[Column, Column]:
+    """``(key, checked)`` over the gram stream's ``__id``/``__pos``:
+    ``min(checked)`` is the first occurrence of a gram, and a row is that
+    occurrence iff its ``key`` equals it.
+
+    Integral ids pack ``(id << 32) + pos``, which orders exactly like
+    ``(id, pos)`` when the id fits in int32 (``pos`` is a token index, so
+    0 <= pos < 2^31). ``min`` over a BIGINT keeps the stats aggregate
+    HashAggregate-eligible, where ``min(struct(...))`` plans as
+    SortAggregate and sorts the gram stream on both sides of the
+    exchange; the packed lane won the sf1 race on ``LongType`` ids
+    (docs/perf.md). A ``LongType`` id outside int32 fails the job through
+    ``raise_error`` inside the aggregate's input — no extra job, and
+    never a silently wrong keep-first. Narrower ids always fit.
+    """
+    if not isinstance(id_type, (ByteType, ShortType, IntegerType, LongType)):
+        key = F.struct(F.col("__id"), F.col("__pos"))
+        return key, key
+    # The cast to long is LOAD-BEARING: shiftleft on an IntegerType id
+    # is a Java int shift (distance masked mod 32 — a silent no-op) and
+    # packed keys would collide.
+    doc_id = F.col("__id").cast("long")
+    key = F.shiftleft(doc_id, 32) + F.col("__pos")
+    if not isinstance(id_type, LongType):
+        return key, key
+    checked = F.when(
+        ~doc_id.between(-(2**31), 2**31 - 1),
+        F.raise_error(
+            F.concat(
+                F.lit("duplicate_span_intervals needs LongType ids that fit"
+                      " in int32, got "),
+                doc_id.cast("string"),
+            )
+        ),
+    ).otherwise(key)
+    return key, checked
 
 
 def _merge_islands(occ: DataFrame, n: int, id_col: str) -> DataFrame:

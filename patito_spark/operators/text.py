@@ -630,7 +630,6 @@ def build_vocab(
     id_col: str = "doc_id",
     top_n: Optional[int] = None,
     min_count: int = 1,
-    engine: str = "auto",
 ) -> DataFrame:
     """Corpus token vocabulary: term counts, document frequencies, ranks.
 
@@ -639,43 +638,24 @@ def build_vocab(
     in a training-data pipeline.
 
     Scale shape: a document's tokens live entirely in its own input
-    row, so the (token, doc) aggregate is doc-local — ``engine="arrow"``
-    (what ``"auto"`` resolves to, the round-15 tf_idf/BM25 kernel
-    ``_doc_token_counts_arrow``) computes the per-doc counts as ONE
-    map-only Arrow stage with no exchange, then a single
-    map-side-combined aggregate reduces to one row per token. The
-    ``"sql"`` lane keeps the explode + two-stage hash-aggregate cascade
-    (no Python stages; its first exchange moves per-partition-distinct
-    (token, doc) rows — sf1 interleaved race: arrow 0.665 s vs sql
-    0.894 s median, wash at sf0.1). ``rank`` (dense by ``count`` desc,
+    row, so the (token, doc) aggregate is doc-local — the round-15
+    tf_idf/BM25 kernel ``_doc_token_counts_arrow`` computes the per-doc
+    counts as ONE map-only Arrow stage with no exchange, then a single
+    map-side-combined aggregate reduces to one row per token (the
+    explode + two-stage hash-aggregate cascade lost to it at sf1,
+    docs/perf.md). ``rank`` (dense by ``count`` desc,
     ``token`` asc — deterministic across engines) is only computed
     under ``top_n``, where the surviving vocabulary is small enough for
     the single-partition window it requires; an unbounded ranked vocab
     would serialize the sort.
 
     ``id_col`` must be unique per row (it identifies documents — the
-    ``_doc_token_counts_arrow`` contract): the arrow lane counts per
-    INPUT ROW, so duplicate ids would each contribute to ``doc_freq``,
-    where the sql lane would merge them globally into one document.
+    ``_doc_token_counts_arrow`` contract): counts are per INPUT ROW, so
+    duplicate ids would each contribute to ``doc_freq``.
     """
     from pyspark.sql import Window
 
-    if engine not in ("auto", "sql", "arrow"):
-        raise ValueError(
-            f"engine must be 'auto', 'sql' or 'arrow', got {engine!r}"
-        )
-    if engine == "sql":
-        pairs = df.select(
-            F.col(id_col).alias("__doc"),
-            F.explode(tokens(text_col)).alias("token"),
-        )
-        per_doc = pairs.groupBy("token", "__doc").agg(
-            F.count("*").alias("__n")
-        )
-    else:
-        per_doc = _doc_token_counts_arrow(
-            df, text_col, id_col, "__dl"
-        ).select(F.col(id_col).alias("__doc"), "token", "__n")
+    per_doc = _doc_token_counts_arrow(df, text_col, id_col, "__dl")
     vocab = per_doc.groupBy("token").agg(
         F.sum("__n").alias("count"),
         F.count("*").alias("doc_freq"),
@@ -777,7 +757,6 @@ def tf_idf(
     min_count: int = 1,
     n_docs: Optional[int] = None,
     max_broadcast_vocab: Optional[int] = 2_000_000,
-    engine: str = "auto",
 ) -> DataFrame:
     """Sparse TF-IDF document vectors.
 
@@ -789,11 +768,12 @@ def tf_idf(
     aggregate), ``idf = ln((N + 1) / (doc_freq + 1)) + 1`` (smoothed,
     scikit-learn convention, natural log on every engine).
 
-    Scale shape: ONE tokenize + explode + (doc, token) hash aggregate
-    over the corpus — the vocabulary's document frequencies are derived
-    from that same aggregate (count of docs per token), not from a
-    second :func:`build_vocab` scan (round 9: the second scan was ~half
-    the operator's wall at sf1). The per-doc counts are persisted so the
+    Scale shape: ONE map-only (doc, token) count stage over the corpus
+    (``_doc_token_counts_arrow``; the explode + hash-aggregate spelling
+    lost to it at sf1, docs/perf.md) — the vocabulary's document
+    frequencies are derived from those same counts (docs per token), not
+    from a second :func:`build_vocab` scan (round 9: the second scan was
+    ~half the operator's wall at sf1). The per-doc counts are persisted so the
     derivation, the broadcast-gate probe, and the final join all read
     one materialization; the cache is bounded to the most recent tf_idf
     call (a new call releases the previous one) and released early by
@@ -821,22 +801,10 @@ def tf_idf(
     next call, or pass ``max_broadcast_vocab=None`` to opt out of the
     shared cache entirely.
     """
-    if engine not in ("auto", "sql", "arrow"):
-        raise ValueError(f"engine must be 'auto', 'sql' or 'arrow', got {engine!r}")
     n = n_docs
-    if engine == "sql":
-        pairs = df.select(
-            F.col(id_col),
-            F.size(tokens(text_col)).alias("__total"),
-            F.explode(tokens(text_col)).alias("token"),
-        )
-        counts = pairs.groupBy(id_col, "token", "__total").agg(
-            F.count("*").alias("__n")
-        )
-    else:
-        # Map-only Arrow counts (round 15): the (doc, token) aggregate
-        # is doc-local, so the exchange it planned was pure overhead.
-        counts = _doc_token_counts_arrow(df, text_col, id_col, "__total")
+    # Map-only Arrow counts (round 15): the (doc, token) aggregate is
+    # doc-local, so an exchange for it would be pure overhead.
+    counts = _doc_token_counts_arrow(df, text_col, id_col, "__total")
     if max_broadcast_vocab is not None:
         # Persist BEFORE anything consumes counts: the vocab derivation
         # below, its probe count, and the final join are three branches
@@ -1098,10 +1066,12 @@ class Bm25Index:
 
     @classmethod
     def read(cls, spark, path: str, materialize: bool = True) -> "Bm25Index":
-        postings = spark.read.parquet(f"{path}/postings")
+        from patito_spark.sources.readers import read_inferred
+
+        postings = read_inferred(spark, "parquet", f"{path}/postings")
         if materialize:
             postings = postings.persist()
-        meta = spark.read.parquet(f"{path}/meta").first()
+        meta = read_inferred(spark, "parquet", f"{path}/meta").first()
         return cls(postings, meta["n_docs"], meta["avgdl"], meta["id_col"])
 
 
@@ -2230,7 +2200,6 @@ def cross_doc_repetition(
     ngram: int = 3,
     min_docs: int = 2,
     hash_mode: str = "xxhash64",
-    df_mode: str = "aggregate",
     materialize_grams: bool = True,
 ) -> DataFrame:
     """Per-document fraction of n-grams shared with OTHER documents.
@@ -2251,48 +2220,33 @@ def cross_doc_repetition(
     emits none.
 
     Scale shape: the corpus' distinct (doc, gram-hash) rows are built
-    shuffle-free (per-row distinct, so ids must be unique).
-    ``df_mode="aggregate"`` (the default, the 100x-safe shape) computes
-    each gram's doc-frequency as a MERGEABLE ``groupBy(hash).count()``
-    — a web-ubiquitous gram collapses to one row per map task before the
-    exchange — then joins the frequency back onto the gram stream (the probe side streams,
-    and AQE can split a skewed probe partition). ``df_mode="window"``
-    uses a single ``count() over (partition by hash)`` window instead:
-    one shuffle and one gram-build pass, measurably faster on
-    single-node corpora, but the window buffers each gram's partition
-    whole — a hot gram becomes an unsplittable straggler at scale.
+    shuffle-free (per-row distinct, so ids must be unique). Each gram's
+    doc-frequency is a MERGEABLE ``groupBy(hash).count()`` — a
+    web-ubiquitous gram collapses to one row per map task before the
+    exchange — joined back onto the gram stream (the probe side
+    streams, and AQE can split a skewed probe partition). A single
+    ``count() over (partition by hash)`` window, which buffers each
+    gram's partition whole, lost to it at sf1 and sf3 (docs/perf.md).
     Nothing is broadcast, so large corpora don't OOM the driver.
 
-    In aggregate mode the gram stream feeds both the doc-frequency
-    aggregate and the join probe; ``materialize_grams`` (default, the
+    The gram stream feeds both the doc-frequency aggregate and the join
+    probe; ``materialize_grams`` (default, the
     :func:`..spans.duplicate_span_intervals` pattern) persists it so
     the gram build runs once (~distinct grams x 16 bytes,
     memory-and-disk). Disable at extreme scale to trade a second gram
-    build for zero cache footprint. Window mode consumes the stream
-    once and ignores the flag.
+    build for zero cache footprint.
     """
     from patito_spark.operators.dedup import shingle_hash_rows
 
-    if df_mode not in ("aggregate", "window"):
-        raise ValueError(
-            f"df_mode must be 'aggregate' or 'window', got {df_mode!r}"
-        )
     grams = shingle_hash_rows(
         df, id_col=id_col, text_col=text_col, n=ngram, hash_mode=hash_mode
     )
-    if df_mode == "aggregate" and materialize_grams:
+    if materialize_grams:
         from patito_spark.functions.cache import tracked_persist
 
         grams = tracked_persist(grams)
-    if df_mode == "window":
-        from pyspark.sql import Window
-
-        scored = grams.withColumn(
-            "__n_docs", F.count(F.lit(1)).over(Window.partitionBy("__h"))
-        )
-    else:
-        freq = grams.groupBy("__h").agg(F.count(F.lit(1)).alias("__n_docs"))
-        scored = grams.join(freq, on="__h", how="inner")
+    freq = grams.groupBy("__h").agg(F.count(F.lit(1)).alias("__n_docs"))
+    scored = grams.join(freq, on="__h", how="inner")
     return (
         scored.groupBy("__id")
         .agg(

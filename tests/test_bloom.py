@@ -127,22 +127,22 @@ def bench_docs(spark):
 
 def test_bloom_strategy_matches_exact(corpus, bench_docs):
     """At this scale FPs are ~impossible (9.6 bits/gram, 7 grams), so the
-    bloom result must equal the exact join strategy exactly."""
-    exact = ngram_contamination(corpus, bench_docs, n=5, strategy="join")
-    bloom = ngram_contamination(corpus, bench_docs, n=5, strategy="bloom")
+    bloom result must equal the exact answer exactly."""
+    exact = ngram_contamination(corpus, bench_docs, n=5)
+    bloom = ngram_contamination(corpus, bench_docs, n=5, bloom_fpp=1e-4)
     as_map = lambda d: {r.doc_id: r.n_shared_grams for r in d.collect()}
     assert as_map(bloom) == as_map(exact)
 
 
 def test_bloom_min_shared_and_short_doc(corpus, bench_docs, spark):
     out = ngram_contamination(
-        corpus, bench_docs, n=5, min_shared=2, strategy="bloom"
+        corpus, bench_docs, n=5, min_shared=2, bloom_fpp=1e-4
     )
     assert {r.doc_id for r in out.collect()} == {100}
 
     tiny_c = spark.createDataFrame([(1, "tiny doc")], "doc_id long, text string")
     tiny_b = spark.createDataFrame([(2, "tiny doc")], "doc_id long, text string")
-    assert ngram_contamination(tiny_c, tiny_b, n=8, strategy="bloom").count() == 1
+    assert ngram_contamination(tiny_c, tiny_b, n=8, bloom_fpp=1e-4).count() == 1
 
 
 def test_bloom_no_missed_contamination_at_scale(spark):
@@ -160,6 +160,6 @@ def test_bloom_no_missed_contamination_at_scale(spark):
         "else concat_ws(' ', 'w1x', id, 'w2', id, 'w3', id, 'w4', id, "
         "'w5', id, 'w6', id, 'w7', id, 'w8', id, 'w9') end as text",
     )
-    out = ngram_contamination(corpus, bench, n=8, strategy="bloom")
+    out = ngram_contamination(corpus, bench, n=8, bloom_fpp=1e-4)
     flagged = {r.doc_id for r in out.collect()}
     assert set(range(0, 1000, 5)) <= flagged

@@ -52,26 +52,36 @@ def test_contamination_short_doc_whole_text(spark):
 
 
 def test_contamination_plan_broadcasts_benchmark(corpus, bench_docs):
-    out = ngram_contamination(corpus, bench_docs, n=5, strategy="join")
+    # past the set cap the benchmark's gram hashes are broadcast
+    out = ngram_contamination(corpus, bench_docs, n=5, max_broadcast_grams=0)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
 
 
+# The broadcast set (default), the join past the set cap, and the Bloom
+# filter (no false positive is possible at this size).
+SHAPES = {
+    "set": {},
+    "join": {"max_broadcast_grams": 0},
+    "bloom": {"bloom_fpp": 1e-4},
+}
+
+
 def test_contamination_strategies_agree(corpus, bench_docs):
-    """set (default), join and bloom must all agree."""
+    """The set, the join fallback and the Bloom filter must all agree."""
     results = [
         {
             r["doc_id"]: r["n_shared_grams"]
             for r in ngram_contamination(
-                corpus, bench_docs, n=5, strategy=strategy
+                corpus, bench_docs, n=5, **kwargs
             ).collect()
         }
-        for strategy in ("set", "join", "bloom")
+        for kwargs in SHAPES.values()
     ]
     assert results[0] == results[1] == results[2], results
 
 
-@pytest.mark.parametrize("strategy", ["set", "join", "bloom"])
+@pytest.mark.parametrize("strategy", sorted(SHAPES))
 def test_contamination_null_text_contributes_no_grams(spark, strategy):
     """NULL text is neither a crash (set) nor the "" gram (bloom): it
     contributes no grams on either side, so only doc 11 is flagged."""
@@ -81,38 +91,28 @@ def test_contamination_null_text_contributes_no_grams(spark, strategy):
     benchmark = spark.createDataFrame(
         [(1, "p q r"), (2, ""), (3, None)], "doc_id long, text string"
     )
-    out = ngram_contamination(corpus, benchmark, n=3, strategy=strategy)
+    out = ngram_contamination(corpus, benchmark, n=3, **SHAPES[strategy])
     assert sorted(tuple(r) for r in out.collect()) == [(11, 1)]
 
 
 def test_contamination_set_strategy_no_shuffle(corpus, bench_docs):
-    """strategy='set': the corpus plan is a single map-only Arrow stage —
+    """Under the set cap the corpus plan is a single map-only Arrow stage —
     no Exchange, no join, nothing but scan → mapInPandas."""
-    out = ngram_contamination(corpus, bench_docs, n=5, strategy="set")
+    out = ngram_contamination(corpus, bench_docs, n=5)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
     assert "MapInPandas" in plan, plan
 
 
 def test_contamination_set_strategy_cap(corpus, bench_docs):
-    """strategy='set' past the broadcast cap fails loudly; 'auto' falls
-    back to the join shape instead."""
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="max_broadcast_grams"):
-        ngram_contamination(
-            corpus, bench_docs, n=5, strategy="set", max_broadcast_grams=2
-        )
-    out = ngram_contamination(
-        corpus, bench_docs, n=5, strategy="auto", max_broadcast_grams=2
-    )
+    """Past the set cap the answer falls back to the join shape and is
+    unchanged."""
+    out = ngram_contamination(corpus, bench_docs, n=5, max_broadcast_grams=2)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan  # fell back to the join strategy
+    assert "BroadcastHashJoin" in plan  # fell back to the join
     got = {r["doc_id"]: r["n_shared_grams"] for r in out.collect()}
     want = {
         r["doc_id"]: r["n_shared_grams"]
-        for r in ngram_contamination(
-            corpus, bench_docs, n=5, strategy="set"
-        ).collect()
+        for r in ngram_contamination(corpus, bench_docs, n=5).collect()
     }
     assert got == want

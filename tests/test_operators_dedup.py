@@ -80,9 +80,10 @@ def test_simhash_pairs(docs):
 def test_minhash_arrow_sql_parity(spark):
     # The round-15 per-doc Arrow feature build (shingles + md5 + OPH
     # bins + densification + band keys + verify gram-sets in one
-    # map-only stage) must produce the identical verified pair set as
-    # the codegen lane, for both densify variants, across short docs,
-    # empty/null text and unicode.
+    # map-only stage, the hash_mode="portable" lane) must produce the
+    # identical verified pair set as the codegen lane (the xxhash64
+    # lane's building blocks over the same portable hashes), for both
+    # densify variants, across short docs, empty/null text and unicode.
     import random
 
     rnd = random.Random(7)
@@ -98,20 +99,38 @@ def test_minhash_arrow_sql_parity(spark):
             rows.append((1000 + d, " ".join(twin)))
     rows += [(5000, ""), (5001, None), (5002, "a"), (5003, "ü ü")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
+    shingled = dedup.shingle_hash_rows(
+        df, n=3, hash_mode="portable", distinct=False
+    )
+    toks = shingled.groupBy(F.col("__id").alias("__jid")).agg(
+        F.array_sort(F.collect_set("__h")).alias("__jtokens")
+    )
     for densify in (True, False):
-        got = {}
-        for engine in ("arrow", "sql"):
-            out = dedup.minhash_dedup_pairs(
-                df, threshold=0.5, hash_mode="portable",
-                engine=engine, densify=densify,
-            ).collect()
-            got[engine] = {
-                (r.id_a, r.id_b): round(r.jaccard, 12) for r in out
-            }
+        arrow = dedup.minhash_dedup_pairs(
+            df, threshold=0.5, hash_mode="portable", densify=densify
+        ).collect()
+        candidates = dedup.minhash_lsh_candidates(
+            df, shingle_rows=shingled, densify=densify
+        )
+        sql = (
+            candidates.join(
+                toks.withColumnsRenamed({"__jid": "id_a", "__jtokens": "a"}),
+                on="id_a",
+            )
+            .join(
+                toks.withColumnsRenamed({"__jid": "id_b", "__jtokens": "b"}),
+                on="id_b",
+            )
+            .withColumn("jaccard", dedup.jaccard(F.col("a"), F.col("b")))
+            .filter(F.col("jaccard") >= 0.5)
+            .collect()
+        )
+        got = {
+            lane: {(r.id_a, r.id_b): round(r.jaccard, 12) for r in out}
+            for lane, out in (("arrow", arrow), ("sql", sql))
+        }
         assert got["arrow"] == got["sql"]
         assert got["arrow"]  # the twins guarantee a non-empty pair set
-    with pytest.raises(ValueError, match="portable"):
-        dedup.minhash_dedup_pairs(df, hash_mode="xxhash64", engine="arrow")
 
 
 def test_simhash_arrow_sql_parity(spark):
@@ -136,31 +155,27 @@ def test_simhash_arrow_sql_parity(spark):
         arrow = {
             r["__id"]: r["__sig"]
             for r in dedup.simhash_signatures(
-                df, bits=bits, hash_mode="portable", engine="arrow"
+                df, bits=bits, hash_mode="portable"
             ).collect()
         }
         sql = {
             r["__id"]: r["__sig"]
-            for r in dedup.simhash_signatures(
-                df, bits=bits, hash_mode="portable", engine="sql"
+            for r in dedup._simhash_signatures_sql(
+                df, "doc_id", "text", bits, "portable"
             ).collect()
         }
         assert arrow == sql
         assert 3 not in arrow
-    with pytest.raises(ValueError, match="engine"):
-        dedup.simhash_signatures(df, engine="bogus")
-    with pytest.raises(ValueError, match="portable"):
-        dedup.simhash_signatures(df, hash_mode="xxhash64", engine="arrow")
 
 
 def test_simhash_arrow_plan_is_map_only(spark):
-    # engine='arrow' must add ZERO exchanges: the signature stage is a
-    # single mapInPandas over the scan.
+    # hash_mode='portable' must add ZERO exchanges: the signature stage
+    # is a single mapInPandas over the scan.
     df = spark.createDataFrame(
         [(1, "a b"), (2, "c d")], schema="doc_id long, text string"
     )
     plan = (
-        dedup.simhash_signatures(df, hash_mode="portable", engine="arrow")
+        dedup.simhash_signatures(df, hash_mode="portable")
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -390,12 +390,21 @@ class TestGopherRepetitionRules:
 
 
 def test_document_profile_engines_identical(spark):
-    """document_profile(engine='arrow') is value-identical — doubles
-    bit-exact included — to the codegen composition it replaces
-    (engine='sql'), across bullets, ellipses (ascii + unicode),
+    """document_profile (the Arrow kernel) is value-identical — doubles
+    bit-exact included — to the codegen composition of the public rule
+    operators (the JVM engine), across bullets, ellipses (ascii + unicode),
     numbered lists, braces, lorem, javascript, stop words, multi-space
     runs, marker-vote ties, terminal punctuation and null text."""
-    from patito_spark.operators.heuristics import document_profile
+    from patito_spark.operators.heuristics import (
+        c4_rules,
+        document_profile,
+        gopher_rules,
+    )
+    from patito_spark.operators.text import (
+        detect_language,
+        fingerprint,
+        quality_score,
+    )
 
     rows = [
         (1, "the quick brown fox . " * 30),
@@ -422,21 +431,23 @@ def test_document_profile_engines_identical(spark):
         (19, "\r\n"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    sql_rows = {
-        r[0]: tuple(r)
-        for r in document_profile(df, engine="sql").collect()
-    }
-    arrow_rows = {
-        r[0]: tuple(r)
-        for r in document_profile(df, engine="arrow").collect()
-    }
+    arrow = document_profile(df)
+    composed = c4_rules(gopher_rules(df)).select(
+        "doc_id",
+        quality_score("text").alias("quality"),
+        fingerprint("text").alias("fp"),
+        detect_language("text").alias("lang_pred"),
+        *arrow.columns[4:],
+    )
+    sql_rows = {r[0]: tuple(r) for r in composed.collect()}
+    arrow_rows = {r[0]: tuple(r) for r in arrow.collect()}
     assert set(sql_rows) == set(arrow_rows)
     for k in sql_rows:
         assert sql_rows[k] == arrow_rows[k], (k, sql_rows[k], arrow_rows[k])
 
 
 def test_document_profile_arrow_plan_map_only(spark):
-    """The arrow engine is ONE Arrow stage over the scan: no Exchange,
+    """The profile is ONE Arrow stage over the scan: no Exchange,
     no regexp expressions, map-only."""
     from patito_spark.operators.heuristics import document_profile
 
@@ -444,7 +455,7 @@ def test_document_profile_arrow_plan_map_only(spark):
         [(1, "the quick fox.")], "doc_id long, text string"
     )
     plan = (
-        document_profile(df, engine="arrow")
+        document_profile(df)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange" not in plan

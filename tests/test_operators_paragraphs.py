@@ -221,51 +221,3 @@ def test_paragraph_passes_extra_columns_and_keep_empty(spark):
     assert got[("boiler", 1)] == ("only in one", "u1")
     assert got[("dedup", 1)] == ("same\n\nonly in one", "u1")
     assert got[("dedup", 2)] == ("", "u2")
-
-
-def test_paragraph_passes_engines_agree(spark):
-    """engine='struct' (default) and engine='keys' produce identical
-    rows — both the (id, text)-only fast path and the extra-column
-    drop_empty=False path."""
-    from patito_spark.operators.paragraphs import paragraph_passes
-
-    rows = [
-        (
-            d,
-            f"Intro shared {d % 3}\n\nbody text unique {d} words\n\n"
-            "Common Footer",
-        )
-        for d in range(30)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    struct_rows = {
-        (r["mode"], r["doc_id"]): r["text"]
-        for r in paragraph_passes(df, min_docs=3).collect()
-    }
-    keys_rows = {
-        (r["mode"], r["doc_id"]): r["text"]
-        for r in paragraph_passes(df, min_docs=3, engine="keys").collect()
-    }
-    assert struct_rows == keys_rows
-
-    wide = spark.createDataFrame(
-        [
-            (1, "same\n\nonly in one", "u1"),
-            (2, "same", "u2"),
-            (3, "same", "u3"),
-            (4, "same", "u4"),
-        ],
-        "doc_id long, text string, url string",
-    )
-    for kwargs in ({"drop_empty": False}, {"drop_empty": True}):
-        a = {
-            (r["mode"], r["doc_id"]): (r["text"], r["url"])
-            for r in paragraph_passes(wide, min_docs=3, **kwargs).collect()
-        }
-        b = {
-            (r["mode"], r["doc_id"]): (r["text"], r["url"])
-            for r in paragraph_passes(
-                wide, min_docs=3, engine="keys", **kwargs
-            ).collect()
-        }
-        assert a == b

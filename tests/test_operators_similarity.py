@@ -1,7 +1,10 @@
 """Similarity search unit tests."""
 
+import math
+
 import numpy as np
 import pytest
+from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from patito_spark.functions.vector import cosine_similarity, dot_product, l2_norm
@@ -181,35 +184,78 @@ def test_unrolled_vector_functions_bit_exact(spark):
     assert (np_norm == got_norm).all()
 
 
-def test_ann_ivf_score_modes_bit_identical(emb):
-    """expr (codegen) and arrow (numpy) scoring must return identical
-    rows INCLUDING the cosine bits — the ranking ties depend on them."""
-    df, _ = emb
-    queries = df.filter(F.col("vec_id") < 10)
-    kw = dict(k=5, n_centroids=8, n_probe=3)
-    ex = similarity.ann_ivf_topk(df, queries, score_mode="expr", **kw)
-    ar = similarity.ann_ivf_topk(df, queries, score_mode="arrow", **kw)
-    ex_rows = {(r.query_id, r.rank): (r.neighbor_id, r.cosine) for r in ex.collect()}
-    ar_rows = {(r.query_id, r.rank): (r.neighbor_id, r.cosine) for r in ar.collect()}
-    assert ex_rows == ar_rows
+def _seq_cos(a, b):
+    """Cosine with sequential-fold sums in plain Python floats."""
+    dot = na = nb = 0.0
+    for x, y in zip(a, b):
+        dot += x * y
+    for x in a:
+        na += x * x
+    for y in b:
+        nb += y * y
+    return dot / (math.sqrt(na) * math.sqrt(nb))
 
 
-def test_ann_ivf_expr_mode_no_python_stage(emb):
-    """score_mode='expr' keeps candidate scoring JVM-side: the plan after
-    the probe join must contain no Python/Arrow eval stage."""
-    df, _ = emb
-    queries = df.filter(F.col("vec_id") < 3)
-    index = similarity.build_ivf_index(df, n_centroids=8)
-    out = similarity.ann_ivf_topk(
-        None, queries, k=5, n_probe=3, index=index, score_mode="expr"
+def _ivf_reference(vecs, n_cells, queries, k, n_probe):
+    """Cosine IVF over the first ``n_cells`` vectors as centroids: assign
+    (ties to the lowest cell), probe the ``n_probe`` best cells, rank
+    probed vectors by (cosine desc, id asc)."""
+    cents = vecs[:n_cells]
+
+    def affinities(v):
+        return [_seq_cos(v, c) for c in cents]
+
+    def best_cells(v):
+        scores = affinities(v)
+        return sorted(range(n_cells), key=lambda c: (-scores[c], c))
+
+    cell = {i: best_cells(v)[0] for i, v in enumerate(vecs)}
+    out = {}
+    for q in queries:
+        probed = set(best_cells(vecs[q])[:n_probe])
+        scored = sorted(
+            (-_seq_cos(vecs[q], v), i)
+            for i, v in enumerate(vecs)
+            if cell[i] in probed
+        )
+        for rank, (neg, i) in enumerate(scored[:k], start=1):
+            out[(q, rank)] = (i, -neg)
+    return out
+
+
+VEC = st.lists(st.integers(-2, 2), min_size=3, max_size=3).filter(any)
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    vecs=st.lists(VEC, min_size=4, max_size=12),
+    n_cells=st.integers(1, 3),
+    n_probe=st.integers(1, 3),
+    k=st.integers(1, 4),
+)
+def test_ann_ivf_topk_matches_python(spark, vecs, n_cells, n_probe, k):
+    """Small integer vectors make cosine ties common, so assignment,
+    probing and ranking tie-breaks are all exercised; cosines compare
+    bit-exactly."""
+    vecs = [[float(x) for x in v] for v in vecs]
+    n_probe = min(n_probe, n_cells)
+    df = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, embedding array<double>"
     )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # The QUERY path must be free of Python stages. The one MapInPandas
-    # allowed is the inverted-file ASSIGNMENT inside the cached index
-    # build (InMemoryRelation subtree) — the query reads it via
-    # InMemoryTableScan and scores with a codegen projection.
-    assert plan.count("MapInPandas") == 1, plan
-    assert plan.index("InMemoryRelation") < plan.index("MapInPandas"), plan
+    out = similarity.ann_ivf_topk(
+        df,
+        df.filter(F.col("vec_id") < 3),
+        k=k,
+        n_probe=n_probe,
+        centroids_df=df.filter(F.col("vec_id") < n_cells),
+        assign_metric="cosine",
+    )
+    got = {(r.query_id, r.rank): (r.neighbor_id, r.cosine) for r in out.collect()}
+    assert got == _ivf_reference(vecs, n_cells, range(3), k, n_probe)
 
 
 def test_multi_probe_raises_recall(spark, sf_dir):

@@ -298,10 +298,11 @@ class TestScrubSpans:
 
 
 def test_first_mode_packed_equals_struct(spark):
-    """first_mode='packed' (min over (id<<32)|pos, HashAggregate) must
-    produce exactly the intervals of first_mode='struct' for ids that
-    fit in int32, negatives included — with duplicate grams within one
-    doc, ties across docs, and keep_first=False."""
+    """Integral ids take the packed first occurrence (min over
+    (id<<32)+pos, HashAggregate); other id types take min(struct(id,
+    pos)). Both must produce the same intervals for ids that fit in
+    int32, negatives included — with duplicate grams within one doc,
+    ties across docs, and keep_first=False."""
     import random
 
     from patito_spark.operators.spans import duplicate_span_intervals
@@ -314,33 +315,28 @@ def test_first_mode_packed_equals_struct(spark):
         (d, " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 40))))
         for d in ids
     ]
-    # BOTH id types: an IntegerType id exercises the load-bearing
-    # cast-to-long in the packed expression (shiftleft on an int column
-    # is a Java int shift — distance masked mod 32, a silent no-op —
-    # and packed keys would collide).
-    for schema in ("doc_id long, text string", "doc_id int, text string"):
-        df = spark.createDataFrame(rows, schema)
-        for keep_first in (True, False):
-            a = sorted(
-                tuple(r)
+    # An IntegerType id exercises the load-bearing cast-to-long in the
+    # packed expression (shiftleft on an int column is a Java int shift
+    # — distance masked mod 32, a silent no-op — and packed keys would
+    # collide); decimal ids order like the integers but take the struct.
+    for keep_first in (True, False):
+        got = {}
+        for id_type in ("long", "int", "decimal(12,0)"):
+            df = spark.createDataFrame(
+                rows, "doc_id long, text string"
+            ).withColumn("doc_id", F.col("doc_id").cast(id_type))
+            got[id_type] = sorted(
+                tuple(int(x) for x in r)
                 for r in duplicate_span_intervals(
                     df, span_tokens=3, keep_first=keep_first
                 ).collect()
             )
-            b = sorted(
-                tuple(r)
-                for r in duplicate_span_intervals(
-                    df,
-                    span_tokens=3,
-                    keep_first=keep_first,
-                    first_mode="packed",
-                ).collect()
-            )
-            assert a == b and a
+        assert got["long"] == got["int"] == got["decimal(12,0)"]
+        assert got["long"]
 
 
 def test_first_mode_packed_plans_hash_aggregate(spark):
-    """The packed lane's stats aggregate must plan as HashAggregate —
+    """With integral ids the stats aggregate must plan as HashAggregate —
     no SortAggregate anywhere in the intervals plan (the whole point
     of the packing)."""
     from patito_spark.operators.spans import duplicate_span_intervals
@@ -350,7 +346,7 @@ def test_first_mode_packed_plans_hash_aggregate(spark):
         "doc_id long, text string",
     )
     plan = (
-        duplicate_span_intervals(df, span_tokens=3, first_mode="packed")
+        duplicate_span_intervals(df, span_tokens=3)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -361,8 +357,8 @@ def test_first_mode_packed_plans_hash_aggregate(spark):
 @pytest.mark.parametrize("bad_id", [2**31, -(2**31) - 1])
 def test_first_mode_packed_rejects_ids_outside_int32(spark, bad_id):
     """Outside int32 the packed key no longer orders like (id, pos) —
-    ids [1, 2^31 + 1] would keep the wrong copy — so the lane fails the
-    job instead of answering."""
+    ids [1, 2^31 + 1] would keep the wrong copy — so a LongType id
+    there fails the job instead of answering."""
     from pyspark.errors import PySparkException
     from py4j.protocol import Py4JJavaError
 
@@ -370,6 +366,4 @@ def test_first_mode_packed_rejects_ids_outside_int32(spark, bad_id):
         [(1, "a b c d"), (bad_id, "a b c d")], "doc_id long, text string"
     )
     with pytest.raises((PySparkException, Py4JJavaError), match="int32"):
-        duplicate_span_intervals(
-            df, span_tokens=3, first_mode="packed"
-        ).collect()
+        duplicate_span_intervals(df, span_tokens=3).collect()

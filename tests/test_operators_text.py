@@ -359,11 +359,12 @@ class TestTfIdf:
         assert got[(2, "c")] == (1 / 2, idf_c, (1 / 2) * idf_c)
         assert len(got) == 4
 
-    def test_arrow_sql_lane_parity(self, spark):
-        # The round-15 map-only Arrow counts stage must emit exactly
-        # the explode+groupBy rows, including empty-token and null-text
-        # edges; tf/idf are exact int ratios + the same JVM log, so the
-        # whole output must match bit-for-bit.
+    def test_empty_tokens_and_null_text(self, spark):
+        # Tokens are a split on single spaces with empty strings kept
+        # (the tokens() contract); null text yields no rows but still
+        # counts toward N.
+        import math
+
         from patito_spark.operators.text import tf_idf
 
         df = spark.createDataFrame(
@@ -376,14 +377,17 @@ class TestTfIdf:
             ],
             "doc_id long, text string",
         )
-        key = lambda r: (r["doc_id"], r["token"])
-        arrow = {key(r): (r["tf"], r["idf"], r["tf_idf"])
-                 for r in tf_idf(df, engine="arrow").collect()}
-        sql = {key(r): (r["tf"], r["idf"], r["tf_idf"])
-               for r in tf_idf(df, engine="sql").collect()}
-        assert arrow == sql
-        assert (2, "") in arrow and (4, "") in arrow
-        assert not any(d == 3 for d, _ in arrow)
+        got = {(r["doc_id"], r["token"]): (r["tf"], r["idf"])
+               for r in tf_idf(df).collect()}
+        tf = {
+            (1, "a"): 2 / 3, (1, "b"): 1 / 3, (2, ""): 1.0,
+            (4, "x"): 1 / 3, (4, ""): 1 / 3, (4, "y"): 1 / 3,
+            (5, "ü"): 3 / 4, (5, "a"): 1 / 4,
+        }
+        doc_freq = {"a": 2, "b": 1, "": 2, "x": 1, "y": 1, "ü": 1}
+        assert {k: v[0] for k, v in got.items()} == tf
+        for (_, tok), (_, idf) in got.items():
+            assert idf == pytest.approx(math.log(6 / (doc_freq[tok] + 1)) + 1)
 
     def test_arrow_counts_stage_is_map_only(self, spark):
         from patito_spark.operators.text import _doc_token_counts_arrow
@@ -1009,9 +1013,9 @@ def test_lm_quality_bigram_gate_counts_pairs_not_vocab(spark):
 
 
 def test_cross_doc_repetition_materializes_gram_stream(spark):
-    """df_mode='aggregate' feeds the gram stream to both the
-    doc-frequency aggregate and the join probe; materialize_grams
-    (default) persists it so the expensive gram build runs once."""
+    """The gram stream feeds both the doc-frequency aggregate and the
+    join probe; materialize_grams (default) persists it so the expensive
+    gram build runs once."""
     from patito_spark.functions.cache import release_caches
     from patito_spark.plans import executed_plan
 
@@ -1026,9 +1030,6 @@ def test_cross_doc_repetition_materializes_gram_stream(spark):
         # the InMemoryRelation into any later identical plan.
         off = ops.cross_doc_repetition(df, ngram=3, materialize_grams=False)
         assert "InMemoryTableScan" not in executed_plan(off)
-        # window mode consumes the stream once; the flag is a no-op there
-        win = ops.cross_doc_repetition(df, ngram=3, df_mode="window")
-        assert "InMemoryTableScan" not in executed_plan(win)
         out = ops.cross_doc_repetition(df, ngram=3)
         assert "InMemoryTableScan" in executed_plan(out)
         got = {r.doc_id: r.shared_gram_frac for r in out.collect()}

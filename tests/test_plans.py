@@ -176,9 +176,8 @@ def test_keep_first_is_mergeable_aggregate_not_window(spark):
 
 
 def test_cross_doc_repetition_mergeable_doc_frequency(spark):
-    """Default df_mode='aggregate': gram doc-frequency is a map-side
-    combined count (partial_count before the exchange), not a count()
-    window over the gram hash."""
+    """Gram doc-frequency is a map-side combined count (partial_count
+    before the exchange), not a count() window over the gram hash."""
     from patito_spark.operators.text import cross_doc_repetition
 
     docs = spark.range(64).selectExpr(

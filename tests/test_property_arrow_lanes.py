@@ -34,33 +34,22 @@ def _frame(spark, texts):
 @settings(**_SETTINGS)
 @given(texts=DOCS)
 def test_simhash_signature_lanes_agree(spark, texts):
-    from patito_spark.operators.dedup import simhash_signatures
+    from patito_spark.operators.dedup import (
+        _simhash_signatures_sql,
+        simhash_signatures,
+    )
 
     df = _frame(spark, texts)
     arrow = {
         r["__id"]: r["__sig"]
-        for r in simhash_signatures(
-            df, hash_mode="portable", engine="arrow"
-        ).collect()
+        for r in simhash_signatures(df, hash_mode="portable").collect()
     }
     sql = {
         r["__id"]: r["__sig"]
-        for r in simhash_signatures(
-            df, hash_mode="portable", engine="sql"
+        for r in _simhash_signatures_sql(
+            df, "doc_id", "text", 64, "portable"
         ).collect()
     }
-    assert arrow == sql
-
-
-@settings(**_SETTINGS)
-@given(texts=DOCS)
-def test_doc_token_count_lanes_agree(spark, texts):
-    from patito_spark.operators.text import tf_idf
-
-    df = _frame(spark, texts)
-    key = lambda r: (r["doc_id"], r["token"])
-    arrow = {key(r): (r["tf"], r["idf"]) for r in tf_idf(df, engine="arrow").collect()}
-    sql = {key(r): (r["tf"], r["idf"]) for r in tf_idf(df, engine="sql").collect()}
     assert arrow == sql
 
 

@@ -1,6 +1,8 @@
 """Property tests: build_vocab / tf_idf vs a naive Python recount, the
-n-gram hash builder and repetition_stats vs pure-Python references."""
+n-gram hash builder, repetition_stats and cross_doc_repetition vs
+pure-Python references."""
 
+import math
 from collections import Counter
 
 import pytest
@@ -67,6 +69,40 @@ def test_tf_sums_to_one_per_doc(spark, texts):
     assert set(per_doc) == set(range(len(texts)))
     for doc_id, total in per_doc.items():
         assert total == pytest.approx(1.0, abs=1e-9)
+
+
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(texts=GRAM_CORPUS)
+def test_tf_idf_matches_python(spark, texts):
+    """Tokens are single-space splits with empty strings kept; NULL text
+    yields no rows but counts toward N."""
+    from patito_spark.operators.text import tf_idf
+
+    df = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    got = {
+        (r["doc_id"], r["token"]): (r["tf"], r["idf"])
+        for r in tf_idf(df).collect()
+    }
+    per_doc = {
+        i: Counter(t.split(" ")) for i, t in enumerate(texts) if t is not None
+    }
+    doc_freq = Counter(tok for c in per_doc.values() for tok in c)
+    want_tf = {
+        (i, tok): n / sum(c.values())
+        for i, c in per_doc.items()
+        for tok, n in c.items()
+    }
+    assert {k: v[0] for k, v in got.items()} == want_tf
+    for (_, tok), (_, idf) in got.items():
+        assert idf == pytest.approx(
+            math.log((len(texts) + 1) / (doc_freq[tok] + 1)) + 1, rel=1e-12
+        )
 
 
 # --- n-gram hash builder / repetition_stats ---------------------------- #
@@ -153,6 +189,39 @@ def test_repetition_stats_matches_counter(spark, texts, n):
                 1.0 - len(counts) / total,
                 max(counts.values()) / total,
             )
+    assert got == want
+
+
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    texts=GRAM_CORPUS,
+    n=st.integers(min_value=1, max_value=3),
+    min_docs=st.integers(min_value=1, max_value=3),
+)
+def test_cross_doc_repetition_matches_python(spark, texts, n, min_docs):
+    from patito_spark.operators.text import cross_doc_repetition
+
+    df = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    got = {
+        r["doc_id"]: (r["n_distinct_grams"], r["shared_gram_frac"])
+        for r in cross_doc_repetition(df, ngram=n, min_docs=min_docs).collect()
+    }
+    grams = {
+        i: {g for _, g in _ref_grams(t, n, positioned=False)}
+        for i, t in enumerate(texts)
+        if t is not None
+    }
+    n_docs = Counter(g for gs in grams.values() for g in gs)
+    want = {
+        i: (len(gs), sum(n_docs[g] >= min_docs for g in gs) / len(gs))
+        for i, gs in grams.items()
+    }
     assert got == want
 
 

@@ -220,7 +220,7 @@ def test_bloom_contamination_1m_docs(spark):
         "else concat_ws(' ', 'c1x', id, 'c2', id, 'c3', id, 'c4', id, "
         "'c5', id, 'c6', id, 'c7', id, 'c8') end as text",
     )
-    out = ngram_contamination(corpus, bench, n=8, strategy="bloom")
+    out = ngram_contamination(corpus, bench, n=8, bloom_fpp=1e-4)
     assert out.count() >= 10_000  # all planted hits (FPs may add a few)
 
 
@@ -852,10 +852,10 @@ def test_arrow_portable_lanes_1m_docs(spark):
         "if(id % 1000 = 0, 'alpha beta gamma delta epsilon zeta', "
         "concat('w', id % 5000, ' x', id % 7000, ' y', id + 2)) as text",
     )
-    sigs = simhash_signatures(docs, hash_mode="portable", engine="arrow")
+    sigs = simhash_signatures(docs, hash_mode="portable")
     assert sigs.count() == 1_000_000
     pairs = minhash_dedup_pairs(
-        docs, threshold=0.9, hash_mode="portable", engine="arrow",
+        docs, threshold=0.9, hash_mode="portable",
         num_hashes=32, bands=8, max_bucket_size=2000,
         broadcast_verify_max_docs=2_000_000,
     )
