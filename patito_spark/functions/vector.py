@@ -42,53 +42,3 @@ def l2_norm(a: Union[str, Column]) -> Column:
 def cosine_similarity(a: Union[str, Column], b: Union[str, Column]) -> Column:
     """Cosine similarity of two array columns (double precision)."""
     return dot_product(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-# ---------------------------------------------------------------------- #
-# Unrolled (fixed-dimension) variants — true whole-stage codegen          #
-# ---------------------------------------------------------------------- #
-#
-# Spark's higher-order functions (zip_with/aggregate) evaluate their
-# lambda interpreted, outside whole-stage codegen. When the embedding
-# dimension is known and small (the common case: 64-1024), unrolling the
-# fold into a literal chain of element_at products compiles into the
-# generated Java of the enclosing stage — no lambda dispatch, no Python
-# worker. The addition chain is left-associated, i.e. the SAME sequential
-# fold order as the HOF variants above and the numpy seq_* helpers in
-# vector_numpy.py, so all three formulations are bit-identical in double
-# precision (addition order decides the bits).
-
-
-def dot_product_unrolled(
-    a: Union[str, Column], b: Union[str, Column], dim: int
-) -> Column:
-    """``a . b`` as a literal left-folded sum over ``dim`` elements."""
-    a, b = _as_col(a), _as_col(b)
-    acc = None
-    for i in range(1, dim + 1):
-        term = F.element_at(a, i).cast("double") * F.element_at(b, i).cast(
-            "double"
-        )
-        acc = term if acc is None else acc + term
-    return acc if acc is not None else F.lit(0.0)
-
-
-def l2_norm_unrolled(a: Union[str, Column], dim: int) -> Column:
-    """Euclidean norm via a literal left-folded sum of squares."""
-    a = _as_col(a)
-    acc = None
-    for i in range(1, dim + 1):
-        x = F.element_at(a, i).cast("double")
-        term = x * x
-        acc = term if acc is None else acc + term
-    return F.sqrt(acc if acc is not None else F.lit(0.0))
-
-
-def cosine_similarity_unrolled(
-    a: Union[str, Column], b: Union[str, Column], dim: int
-) -> Column:
-    """Cosine via the unrolled dot/norms — bit-identical to
-    :func:`cosine_similarity` and to ``vector_numpy.seq_dot``/``seq_norm``."""
-    return dot_product_unrolled(a, b, dim) / (
-        l2_norm_unrolled(a, dim) * l2_norm_unrolled(b, dim)
-    )

@@ -95,43 +95,6 @@ def shingles(text: Union[str, Column], n: int = 3) -> Column:
     )
 
 
-def _minhash_seeds(num_hashes: int, seed: int = 42) -> list[int]:
-    """Deterministic 63-bit xor constants for the permutation family."""
-    import random
-
-    rng = random.Random(seed)
-    return [rng.getrandbits(63) for _ in range(num_hashes)]
-
-
-def minhash_perms_expr(num_hashes: int = 64, seed: int = 42) -> Column:
-    """Literal array of (rotation, xor-constant) permutation params.
-
-    Materialized as its own column so the 64-element literal is built once
-    per row, not once per (hash, shingle) evaluation.
-    """
-    seeds = _minhash_seeds(num_hashes, seed)
-    entries = ", ".join(
-        f"named_struct('r', {(i * 7) % 63 + 1}, 'c', {c}L)"
-        for i, c in enumerate(seeds)
-    )
-    return F.expr(f"array({entries})")
-
-
-def minhash_signature_expr(base_col: str, perms_col: str = "__perms") -> Column:
-    """MinHash signature from a column of base hashes (``array<bigint>``).
-
-    Hash family: bijective rotate-then-xor permutations of the base
-    xxhash64 — one real hash evaluation per shingle total, then cheap
-    bit-op permutations (no multiply, so no ANSI overflow). One
-    higher-order expression; cost is |perms| × |shingles| bit-ops per row.
-    """
-    return F.expr(
-        f"transform({perms_col}, p -> array_min(transform("
-        f"{base_col}, h -> (shiftleft(h, p.r) | "
-        f"shiftrightunsigned(h, 64 - p.r)) ^ p.c)))"
-    )
-
-
 def gram_hash_rows(
     df: DataFrame,
     id_col: str,

@@ -1,58 +1,51 @@
 """Model-aware Structured Streaming helpers.
 
 Batch validation can scan; a stream cannot. So on streams the model's
-row-level checks compile to a *filter/annotate* projection (per-record,
-fused into the stream pipeline) instead of the batch single-pass aggregate:
-invalid rows are either dropped or routed by a ``__pt_valid`` flag, and
-schema checks happen once at stream definition (driver-side, free).
+row-level checks become a per-record predicate (fused into the stream
+pipeline) instead of the batch single-pass aggregate: invalid rows are
+either dropped or routed by a ``__pt_valid`` flag, and schema checks happen
+once at stream definition (driver-side, free). Both sides take their checks
+from the one compiler, :func:`patito_spark.validators.row_checks`, so a row
+the stream rejects is a row batch ``validate()`` counts, check by check.
 """
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Optional, TYPE_CHECKING
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
+
+from patito_spark.validators import row_checks
 
 if TYPE_CHECKING:
     from patito_spark.model import Model
 
 
 def row_validity_column(schema: type["Model"]) -> Column:
-    """Boolean Column: True where the row satisfies all model row checks.
+    """Boolean Column, never NULL: True where the row passes every row check.
 
-    Reuses the validators' check compiler so stream and batch semantics
-    can't drift. Uniqueness is inherently cross-row and is NOT included —
-    use :func:`stateful_dedup_stream` for streaming dedup.
+    The AND of ``NOT violation`` over :func:`~patito_spark.validators.row_checks`,
+    the compiler batch ``validate()`` counts with, so both apply the same
+    NULL rule: a check fails only where its predicate is FALSE, and a NULL
+    result passes. Bounds and enum skip a NULL field; constraints see every
+    row. Uniqueness is cross-row and is NOT included — use
+    :func:`stateful_dedup_stream` for streaming dedup.
+
+    Raises:
+        ValueError: a constraint reads ``_``, which batch binds by a
+            projection a row predicate cannot make.
     """
-    from patito_spark.validators import _bound_checks, _constraint_columns
-
-    predicate = F.lit(True)
-    for name, spec in schema.column_specs.items():
-        col = F.col(name)
-        if not spec.nullable:
-            predicate = predicate & col.isNotNull()
-        # Batch validate()'s "missing value in lists" check, per row.
-        if isinstance(spec.spark_type, T.ArrayType) and not (
-            spec.spark_type.containsNull
-        ):
-            predicate = predicate & (
-                col.isNull() | F.forall(col, lambda x: x.isNotNull())
-            )
-        if spec.enum_values is not None:
-            predicate = predicate & (col.isNull() | col.isin(spec.enum_values))
-        checks = _bound_checks(spec, col)
-        constraint_checks, needs_alias = _constraint_columns(spec)
-        if needs_alias:
+    checks = row_checks(schema)
+    for check in checks:
+        if check.kind == "constraints" and check.detail:
             raise ValueError(
-                f"Streaming validation of column {spec.name!r}: `_` self-"
+                f"Streaming validation of column {check.column!r}: `_` self-"
                 "references are not supported on streams; name the column "
                 "explicitly in the constraint."
             )
-        checks.extend(constraint_checks)
-        for check in checks:
-            predicate = predicate & (col.isNull() | F.coalesce(check, F.lit(False)))
-    return predicate
+    return reduce(lambda a, b: a & b, (~c.violation for c in checks), F.lit(True))
 
 
 def read_stream(
@@ -459,9 +452,9 @@ def write_stream_validated(
         # recompute the upstream batch.
         batch = batch.persist()
         batch.filter(valid).write.mode("append").format(format).save(path)
-        batch.filter(~F.coalesce(valid, F.lit(False))).write.mode(
-            "append"
-        ).format(format).save(dead_letter_path)
+        batch.filter(~valid).write.mode("append").format(format).save(
+            dead_letter_path
+        )
         batch.unpersist()
 
     writer = stream.writeStream.foreachBatch(route).option(

@@ -321,29 +321,6 @@ def test_embedding_dedup_lsh(spark):
     assert (0, 100) in found
 
 
-def test_minhash_signature_expr(spark):
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [(1, "a b c d e"), (2, "a b c d e"), (3, "z y x w v")],
-        schema="doc_id long, text string",
-    )
-    base = df.select(
-        "doc_id",
-        F.transform(dedup.shingles("text", 2), lambda s: F.xxhash64(s)).alias(
-            "__base"
-        ),
-        dedup.minhash_perms_expr(16).alias("__perms"),
-    )
-    sigs = base.select(
-        "doc_id", dedup.minhash_signature_expr("__base").alias("sig")
-    )
-    by_id = {r.doc_id: tuple(r.sig) for r in sigs.collect()}
-    assert by_id[1] == by_id[2]
-    assert by_id[1] != by_id[3]
-    assert len(by_id[1]) == 16
-
-
 def test_dedup_corpus_end_to_end(spark):
     from patito_spark.operators.dedup import dedup_corpus
 

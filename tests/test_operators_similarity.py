@@ -145,15 +145,9 @@ def test_ann_ivf_recall(emb):
         assert (q, q) in ivf_set  # self always lands in own probed cell
 
 
-def test_unrolled_vector_functions_bit_exact(spark):
-    """The unrolled (codegen) dot/norm/cosine must be BIT-identical to
-    the HOF formulation and to the numpy seq_* helpers — same
-    left-folded accumulation order in all three."""
-    from patito_spark.functions.vector import (
-        cosine_similarity_unrolled,
-        dot_product_unrolled,
-        l2_norm_unrolled,
-    )
+def test_vector_functions_match_numpy_fold_bit_exact(spark):
+    """The HOF dot/norm are BIT-identical to the numpy seq_* helpers (the
+    Arrow scoring path): both fold left to right in double precision."""
     from patito_spark.functions.vector_numpy import seq_dot_matrix, seq_norm
 
     rng = np.random.RandomState(7)
@@ -164,24 +158,11 @@ def test_unrolled_vector_functions_bit_exact(spark):
         schema="a array<double>, b array<double>",
     )
     rows = df.select(
-        dot_product("a", "b").alias("dot_hof"),
-        dot_product_unrolled("a", "b", 16).alias("dot_unr"),
-        l2_norm("a").alias("norm_hof"),
-        l2_norm_unrolled("a", 16).alias("norm_unr"),
-        cosine_similarity("a", "b").alias("cos_hof"),
-        cosine_similarity_unrolled("a", "b", 16).alias("cos_unr"),
+        dot_product("a", "b").alias("dot"), l2_norm("a").alias("norm")
     ).collect()
-    for i, r in enumerate(rows):
-        assert r.dot_hof == r.dot_unr  # bit-exact, no approx
-        assert r.norm_hof == r.norm_unr
-        assert r.cos_hof == r.cos_unr
-    # vs numpy sequential fold (the Arrow scoring path)
     np_dot = np.array([seq_dot_matrix(a[i : i + 1], b[i : i + 1])[0, 0] for i in range(20)])
-    np_norm = seq_norm(a)
-    got_dot = np.array([r.dot_unr for r in rows])
-    got_norm = np.array([r.norm_unr for r in rows])
-    assert (np_dot == got_dot).all()
-    assert (np_norm == got_norm).all()
+    assert (np_dot == np.array([r.dot for r in rows])).all()
+    assert (seq_norm(a) == np.array([r.norm for r in rows])).all()
 
 
 def _seq_cos(a, b):

@@ -78,35 +78,30 @@ def test_validation_is_single_scan(spark, sf_dir):
     """All row-level checks must collapse into ONE pass over the input.
 
     (Reference runs ~5 polars passes per column; at 100 TB each extra pass
-    is a full scan. We assert the compiled validation plan reads the source
-    exactly once.)
+    is a full scan. We assert the aggregate the validator builds reads the
+    source exactly once.)
     """
-    from typing import Literal, Optional
-
     import patito_spark as pt
-    from patito_spark.validators import _find_errors
+    from patito_spark.validators import _check_aggregate
 
     class Nation(pt.Model):
         n_nationkey: int = pt.Field(unique=True, ge=0)
-        n_name: str = pt.Field(min_length=1)
+        n_name: str = pt.Field(min_length=1, constraints="_ <> 'x'")
         n_regionkey: int = pt.Field(ge=0, le=4)
 
     df = spark.read.parquet(f"{sf_dir}/nation.parquet")
-
-    # Intercept the aggregation the validator builds by compiling the same
-    # checks: one agg over the scan must appear as exactly one FileScan.
-    from pyspark.sql import functions as F2
-
-    checks = df.agg(
-        F2.count(F2.when(F2.col("n_nationkey").isNull(), 1)),
-        F2.count(F2.col("n_nationkey")) - F2.count_distinct(F2.col("n_nationkey")),
-        F2.count(F2.when(F2.length("n_name") < 1, 1)),
-        F2.count(F2.when(~F2.col("n_regionkey").between(0, 4), 1)),
+    df = df.select(
+        F.col("n_nationkey").cast("long"),
+        "n_name",
+        F.col("n_regionkey").cast("long"),
     )
+    checks, keys = _check_aggregate(df, Nation)
+    assert {kind for kind, _ in keys} == {
+        "nulls", "bounds", "unique", "constraints",
+    }
     assert scan_count(checks) == 1
     # and the real validator passes cleanly on the real table
-    Nation.validate_df(df.withColumn("n_nationkey", F2.col("n_nationkey").cast("long"))
-                        .withColumn("n_regionkey", F2.col("n_regionkey").cast("long")))
+    Nation.validate_df(df)
 
 
 def test_rel_pipeline_pushdown_through_chain(spark, sf_dir):
@@ -194,11 +189,13 @@ def test_rank_limited_windows_plan_partial_window_group_limit(spark):
     the exchange — each map partition forwards at most k rows per key,
     so hot keys collapse map-side. If a Spark upgrade ever stops
     planning the partial limit, these operators join the keep-first
-    anti-pattern and need the min-struct-aggregate treatment."""
+    anti-pattern and need the min-struct-aggregate treatment. The inputs
+    have 4 splits at any core count: one split plans no exchange, and so no
+    partial limit."""
     from patito_spark.operators.dedup import dedup_exact
     from patito_spark.operators.sketch import kmv_distinct
 
-    df = spark.range(10_000).selectExpr(
+    df = spark.range(0, 10_000, 1, 4).selectExpr(
         "concat('l', id % 5) as lang",
         "concat('s', id % 7) as source",
         "id as doc_id",
@@ -206,7 +203,7 @@ def test_rank_limited_windows_plan_partial_window_group_limit(spark):
     p1 = executed_plan(dedup_exact(df, subset=["lang", "source"], id_col="doc_id"))
     assert "WindowGroupLimit" in p1 and "Partial" in p1
 
-    ev = spark.range(10_000).selectExpr(
+    ev = spark.range(0, 10_000, 1, 4).selectExpr(
         "concat('t', id % 3) as event_type",
         "concat('u', id % 1000) as user_id",
     )
@@ -222,7 +219,8 @@ def test_adc_topk_plan_partial_window_group_limit(spark):
     plans the Partial WindowGroupLimit before the exchange — each map
     task then forwards at most k rows per query_id, so the reduce-side
     window sees <= k x n_tasks rows per query no matter how many
-    batches scored it. Pin that plan shape for both ADC rankers."""
+    batches scored it. Pin that plan shape for both ADC rankers (on a
+    4-split input, so a single-core session plans the exchange too)."""
     from patito_spark.operators.quantize import (
         build_ivfadc_index,
         ann_ivfadc_topk,
@@ -231,7 +229,7 @@ def test_adc_topk_plan_partial_window_group_limit(spark):
         pq_encode,
     )
 
-    emb = spark.range(256).selectExpr(
+    emb = spark.range(0, 256, 1, 4).selectExpr(
         "id as vec_id",
         "array(cast(id % 7 as double), cast(id % 5 as double), "
         "cast(id % 3 as double), cast(id % 11 as double)) as embedding",

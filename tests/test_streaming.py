@@ -78,6 +78,41 @@ def test_row_validity_column(spark):
         Tagged.validate_df(lists.filter("tag_id = 2"))
 
 
+def test_row_validity_column_constraints(spark):
+    """Column constraints over snake_case names are not `_` self-references;
+    a real `_` is refused on streams."""
+
+    class Priced(pt.Model):
+        unit_price: float = pt.Field(constraints=F.col("unit_price") >= 0)
+
+    df = spark.createDataFrame([(1.0,), (-1.0,)], "unit_price double")
+    out = df.withColumn("ok", row_validity_column(Priced)).collect()
+    assert {r.unit_price: r.ok for r in out} == {1.0: True, -1.0: False}
+
+    class Odd(pt.Model):
+        odd_number: int = pt.Field(constraints=F.col("_") % 2 == 1)
+
+    with pytest.raises(ValueError, match="self-references are not supported"):
+        row_validity_column(Odd)
+
+
+def test_row_validity_column_null_rule_matches_batch(spark):
+    """A constraint that reads NULL passes, and constraints see rows whose
+    own field is NULL: the row (a=1, b=NULL) is valid and (a=NULL, b=-1)
+    is not, in batch and on the stream."""
+
+    class Pair(pt.Model):
+        a: Optional[int] = pt.Field(None, constraints="b > 0")
+        b: Optional[int] = None
+
+    df = spark.createDataFrame([(1, 1, None), (2, None, -1)], "id long, a long, b long")
+    out = df.withColumn("ok", row_validity_column(Pair)).collect()
+    assert {r.id: r.ok for r in out} == {1: True, 2: False}
+    Pair.validate_df(df.filter("id = 1").drop("id"))
+    with pytest.raises(pt.DataFrameValidationError, match="1 row does not match"):
+        Pair.validate_df(df.drop("id"))
+
+
 def test_read_stream_drop_invalid(spark, event_parquet):
     stream = read_stream(event_parquet, Event, spark=spark, drop_invalid=True)
     assert stream.isStreaming

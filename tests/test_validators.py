@@ -1,6 +1,6 @@
 """Validation engine tests (mirrors ref tests/test_validators.py).
 
-All row-level checks run in a single Spark aggregation job; these tests
+All row-level checks run in a single Spark aggregation; these tests
 assert each error class is raised with the right location.
 """
 
@@ -262,3 +262,46 @@ def test_valid_dataframe_passes(spark):
 
     df = spark.createDataFrame([(1, "x"), (2, None)], schema="a long, b string")
     M.validate_df(df)
+
+
+def _jobs(spark, group, fn):
+    """The number of Spark jobs ``fn()`` launches, by statusTracker job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_validate_job_count(spark):
+    """One aggregate: 2 jobs under AQE (the map stage, then the result),
+    one more for the exchange of a unique column's count-distinct. An input
+    that plans no exchange runs fewer."""
+
+    class Checked(pt.Model):
+        k: int = pt.Field(ge=0)
+        kind: Literal["x", "y"]
+        c: int = pt.Field(constraints="c < 100")
+
+    class CheckedUnique(pt.Model):
+        k: int = pt.Field(ge=0)
+        kind: Literal["x", "y"]
+        c: int = pt.Field(constraints="c < 100")
+        u: int = pt.Field(unique=True)
+
+    df = spark.range(0, 10_000, 1, 4).select(
+        F.col("id").alias("k"),
+        F.when(F.col("id") % 2 == 0, "x").otherwise("y").alias("kind"),
+        (F.col("id") % 100).alias("c"),
+        F.col("id").alias("u"),
+    )
+    plain = df.drop("u")
+    assert _jobs(spark, "validate-jobs", lambda: Checked.validate_df(plain)) <= 2
+    assert (
+        _jobs(spark, "validate-jobs-unique", lambda: CheckedUnique.validate_df(df))
+        <= 3
+    )
