@@ -1,8 +1,10 @@
 """Benchmark: run every headline query at $SPARK_GRAFT_SF_DIR and print one
-JSON line with per-query wall times.
+JSON line with per-query wall times and each query's layer split.
 
 Materialization uses the noop sink (full JVM-side execution, no driver
 collect), so timings measure the real plan, not Arrow/driver transfer.
+``time_entries`` is the one timing loop; ``tools/scaling_audit.py`` and
+``tools/ab_sf1.py`` call it too.
 """
 
 from __future__ import annotations
@@ -14,6 +16,7 @@ import time
 
 import __spark_entry__ as entry_mod
 from patito_spark.session import get_session
+from perfbench.tracing import Engine
 
 
 def load_floor(path: str) -> dict:
@@ -46,6 +49,136 @@ def _is_number(value) -> bool:
     return isinstance(value, (int, float)) and not isinstance(value, bool)
 
 
+class _Layers:
+    """Engine, Python-worker and JIT counters read around one run.
+
+    Every read happens before a run's clock starts or after it stops, so
+    the probes cost suite wall time but never an entry's time.
+    """
+
+    def __init__(self, spark) -> None:
+        self.engine = Engine(spark)
+        self._store = spark.sparkContext._jsc.sc().statusStore()
+        jvm = spark.sparkContext._jvm
+        # Total milliseconds the JIT threads spent compiling; a plain
+        # MXBean read over py4j, so it runs no job.
+        self._jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+
+    def before(self) -> tuple:
+        self.engine.new_stages()  # drop stages run since the last split
+        return (
+            self.engine.next_job(),
+            self.engine.worker_cpu_s(),
+            self._jit.getTotalCompilationTime(),
+            time.time(),
+        )
+
+    def split(self, before: tuple, build_s: float) -> dict:
+        """The run's layers, given ``before()``'s reading and its build time."""
+        job0, worker0, jit0, wall0 = before
+        jit_ms = self._jit.getTotalCompilationTime() - jit0
+        worker_s = self.engine.worker_cpu_s() - worker0
+        stages = self.engine.new_stages()  # waits for the listener bus
+        job1 = self.engine.next_job()
+        ran = [s for s in stages if s["status"] != "SKIPPED"]
+        # A job is eager when the entry submitted it before returning its
+        # frame; the status store keeps each job's submission time.
+        built_ms = (wall0 + build_s) * 1e3
+        build_jobs = sum(
+            1 for job in range(job0, job1) if self._submitted_ms(job) < built_ms
+        )
+
+        def total(*keys) -> float:
+            return sum(s[k] for s in ran for k in keys)
+
+        return {
+            "build_s": round(build_s, 3),
+            "build_jobs": build_jobs,
+            "jobs": job1 - job0,
+            "stages": len(ran),
+            "stages_skipped": len(stages) - len(ran),
+            "tasks": total("tasks"),
+            "executor_run_s": round(total("executorRunTime") / 1e3, 3),
+            "executor_cpu_s": round(total("executorCpuTime") / 1e9, 3),
+            "gc_s": round(total("jvmGcTime") / 1e3, 3),
+            "shuffle_read_mb": round(total("shuffleReadBytes") / 1e6, 3),
+            "shuffle_write_mb": round(total("shuffleWriteBytes") / 1e6, 3),
+            "spill_mb": round(total("memoryBytesSpilled", "diskBytesSpilled") / 1e6, 3),
+            "python_worker_cpu_s": round(worker_s, 3),
+            "jit_ms": int(jit_ms),
+        }
+
+    def _submitted_ms(self, job: int) -> float:
+        from py4j.protocol import Py4JJavaError
+
+        try:
+            sub = self._store.job(job).submissionTime()
+        except Py4JJavaError:  # an id the scheduler allocated but never posted
+            return float("inf")
+        return sub.get().getTime() if sub.isDefined() else float("inf")
+
+
+def time_entries(spark, queries: dict, sf_dir: str, runs: int, after_pass=None):
+    """Warm every entry once, then time ``runs`` interleaved noop-sink passes.
+
+    Returns ``(best, layers)``: each entry's best wall seconds, and per
+    entry the layer split (``_Layers.split``) of the run that set that
+    best, plus ``warm_build_s`` and ``warm_build_jobs`` from the warm
+    pass. ``after_pass``, if given, is called after each timed pass.
+
+    The warm pass fills the JVM, codegen cache and file index, and builds
+    every session-lived artifact (the ``_ANN_INDEX_CACHE`` indexes, the
+    tokenizer and ``.arpa`` models): its ``build_s`` and eager jobs
+    include those builds. The timed passes then measure steady state,
+    what a long-lived cluster session sees, and probe the prebuilt
+    artifacts.
+
+    Best-of-N runs over INTERLEAVED full passes (pass 1 runs every entry,
+    then pass 2, ...): an entry's attempts are spread minutes apart, so a
+    transient slow window (host throttling, GC storm) cannot poison all
+    of them. Single-shot and back-to-back timings produced phantom
+    regressions on untouched code in earlier rounds.
+
+    Operator-internal intermediates (tracked persists) are released after
+    every run: otherwise run N's persisted shingles or signatures satisfy
+    run N+1's identical plan from cache, and the best time is a cache
+    hit, not the operator. Session-lived artifacts live outside the
+    tracked registry and survive: build once, query many is their steady
+    state.
+    """
+    from patito_spark.functions.cache import release_caches
+
+    probe = _Layers(spark)
+
+    def run(fn) -> tuple:
+        before = probe.before()
+        start = time.perf_counter()
+        df = fn(spark, sf_dir)
+        built = time.perf_counter()
+        df.write.format("noop").mode("overwrite").save()
+        seconds = time.perf_counter() - start
+        split = probe.split(before, built - start)
+        release_caches()
+        return seconds, split
+
+    warm = {name: run(fn)[1] for name, fn in queries.items()}
+    best = {name: float("inf") for name in queries}
+    layers: dict = {}
+    for _ in range(runs):
+        for name, fn in queries.items():
+            seconds, split = run(fn)
+            if seconds < best[name]:
+                best[name] = seconds
+                layers[name] = {
+                    **split,
+                    "warm_build_s": warm[name]["build_s"],
+                    "warm_build_jobs": warm[name]["build_jobs"],
+                }
+        if after_pass is not None:
+            after_pass()
+    return best, layers
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
@@ -64,11 +197,7 @@ def main() -> None:
     spark = get_session("patito_spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Warm the JVM, codegen cache, and file-index for every query, then
-    # measure steady state (what a long-lived cluster session would see).
-    # Each query is timed best-of-N (default 3): single-shot timings at
-    # sub-second scale are dominated by scheduler jitter and produced
-    # phantom regressions on untouched code in earlier rounds.
+    # Best-of-N (default 3) over warm, interleaved passes; see time_entries.
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     queries = entry_mod.queries()
     # Comma-separated subset for development (profile one entry in the
@@ -78,40 +207,7 @@ def main() -> None:
         keep = set(only.split(","))
         queries = {k: v for k, v in queries.items() if k in keep}
 
-    # Session-lived _ANN_INDEX_CACHE artifacts are built in this warm
-    # pass and PROBED by the timed passes; their one-time build costs
-    # are published in BASELINE.md's "Session-lived artifact exemption
-    # table" (tools/artifact_build_costs.py) — read vs-oracle ratios
-    # for the artifact-backed entries together with that table.
-    #
-    # Operator-internal intermediates (tracked persists) are released
-    # after every run: without this, run N's persisted shingles/signatures
-    # satisfy run N+1's structurally identical plan from cache, and the
-    # "best of N" times a cache hit instead of the operator (this
-    # manufactured the round-5 dedup_minhash floor). Session-lived index
-    # artifacts (_ANN_INDEX_CACHE) are owned by the entries, live outside
-    # the tracked registry, and deliberately survive — build-once /
-    # query-many IS their steady state.
-    from patito_spark.functions.cache import release_caches
-
-    for fn in queries.values():
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        release_caches()
-
-    # Best-of-N over INTERLEAVED full passes (pass 1 runs every query,
-    # then pass 2, ...): a query's N attempts are spread minutes apart,
-    # so a transient slow window (host throttling, GC storm) cannot
-    # poison all attempts of any one query — consecutive per-query
-    # attempts did exactly that and produced phantom regressions on
-    # untouched code.
-    best: dict[str, float] = {name: float("inf") for name in queries}
-    for _ in range(runs):
-        for name, fn in queries.items():
-            start = time.perf_counter()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            best[name] = min(best[name], time.perf_counter() - start)
-            release_caches()
+    best, layers = time_entries(spark, queries, sf_dir, runs)
     timings = {name: round(t, 3) for name, t in best.items()}
 
     total = round(sum(timings.values()), 3)
@@ -172,24 +268,20 @@ def main() -> None:
     # same-process race before the numbers are reported — the one
     # instrument that has settled every perf dispute for three rounds
     # running (suite-context single-window numbers swing up to ~1.9x on
-    # unchanged code). The race re-times the flagged entry best-of-N in
-    # this same JVM minutes after its suite slot; a transient window
-    # clears, a real regression reproduces. Disable with
-    # SPARK_GRAFT_RACE_FLAGGED=0.
+    # unchanged code). The race re-times the flagged entries best-of-N
+    # (after one warm run) in this same JVM minutes after their suite
+    # slots; a transient window clears, a real regression reproduces.
+    # Disable with SPARK_GRAFT_RACE_FLAGGED=0.
     if regressions and os.environ.get("SPARK_GRAFT_RACE_FLAGGED", "1") != "0":
         race_runs = int(os.environ.get("SPARK_GRAFT_RACE_RUNS", "5"))
-        for name, info in list(regressions.items()):
-            fn = queries[name]
-            race_best = float("inf")
-            for _ in range(race_runs):
-                start = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                race_best = min(race_best, time.perf_counter() - start)
-                release_caches()
+        race, _ = time_entries(
+            spark, {name: queries[name] for name in regressions}, sf_dir, race_runs
+        )
+        for name, info in regressions.items():
             adj = info["drift_adjusted_floor"]
-            info["race_best"] = round(race_best, 3)
-            info["race_ratio"] = round(race_best / adj, 2)
-            if race_best <= adj * 1.3 or race_best - adj <= 0.2:
+            info["race_best"] = round(race[name], 3)
+            info["race_ratio"] = round(race[name] / adj, 2)
+            if race[name] <= adj * 1.3 or race[name] - adj <= 0.2:
                 info["verdict"] = "cleared-by-race"
             else:
                 info["verdict"] = "reproduced"
@@ -209,6 +301,7 @@ def main() -> None:
                 "cpus": int(cpus),
                 "host_drift": round(drift, 3),
                 "regressions": regressions,
+                "layers": layers,
             }
         )
     )

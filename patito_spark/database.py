@@ -377,7 +377,7 @@ class Relation:
     def all(self, *filters: str, **equalities: Any) -> bool:
         """True if all rows satisfy the given filters (ref duckdb.py:463).
 
-        One job: count rows violating the conjunction.
+        One job: look for a row violating the conjunction.
         """
         predicate = None
         for f_ in filters:
@@ -388,10 +388,7 @@ class Relation:
             predicate = this if predicate is None else predicate & this
         if predicate is None:
             return True
-        violations = self._df.filter(
-            ~F.coalesce(predicate, F.lit(False))
-        ).limit(1).count()
-        return violations == 0
+        return self._df.filter(~F.coalesce(predicate, F.lit(False))).isEmpty()
 
     def __iter__(self) -> Iterator[Any]:
         for row in self._df.toLocalIterator():
@@ -408,10 +405,7 @@ class Relation:
         if set(left.columns) != set(right.columns):
             return False
         right = right.select(*left.columns)
-        return (
-            left.exceptAll(right).limit(1).count() == 0
-            and right.exceptAll(left).limit(1).count() == 0
-        )
+        return left.exceptAll(right).isEmpty() and right.exceptAll(left).isEmpty()
 
     def __str__(self) -> str:
         return self._df._show_string(20, 20, False)

@@ -2,8 +2,15 @@
 
 Two families:
 
-* ``xxhash64`` — Spark's native 64-bit hash. Fastest (whole-stage codegen,
-  no cryptographic work) — the default for every operator.
+* ``xxhash64`` — Spark's native 64-bit hash, evaluated in whole-stage
+  codegen with no cryptographic work. It is the default ``hash_mode`` of
+  most operators, but not of all: the ``winnow_*`` functions default to
+  ``crc32poly`` and ``kmv_distinct`` to ``portable``. Neither mode is
+  always faster: xxhash64 wins on codegen gram hashing
+  (``shingle_hash_rows``, ``duplicate_span_intervals``,
+  ``deterministic_sample``), while the portable Arrow lanes of
+  ``minhash_dedup_pairs`` and ``simhash_dedup_pairs`` beat their
+  xxhash64 lanes.
 * ``portable`` — the top 60 bits of ``md5``, decoded from the hex digest.
   ~2-3× more hashing work, but *engine-independent*: DuckDB reproduces it
   exactly as ``('0x' || substring(md5(x), 1, 15))::BIGINT``, which lets the

@@ -423,7 +423,9 @@ class ModelMetaclass(PydanticModelMetaclass):
 
     @property
     def column_specs(cls) -> dict[str, ColumnSpec]:
-        specs = getattr(cls, "__patito_specs__", None)
+        # Read this class's own dict: ``getattr`` would find a parent's
+        # cache and hand a subclass its parent's specs.
+        specs = cls.__dict__.get("__patito_specs__")
         if specs is None:
             specs = {
                 name: _spec_from_field_info(name, fi)

@@ -227,3 +227,23 @@ def test_from_pandas_row():
     assert Product.from_row(series).name == "apple"
     with pytest.raises(ValueError):
         Product.from_row(pd.concat([row, row]))
+
+
+def test_column_specs_cache_is_per_class():
+    # A class's cached specs must not leak into a subclass defined later.
+    pt.Model.column_specs
+    class C(pt.Model):
+        c: int
+
+    assert C.spark_schema.fieldNames() == ["c"]
+
+    class A(pt.Model):
+        a: int
+
+    assert list(A.column_specs) == ["a"]
+
+    class B(A):
+        b: int
+
+    assert list(B.column_specs) == ["a", "b"]
+    assert list(A.column_specs) == ["a"]

@@ -192,6 +192,18 @@ def test_all(relation):
     assert relation.all(b="X") is False
 
 
+def test_repeated_all_compiles_no_code(spark, relation):
+    # The check's plan must hit Spark's codegen cache once warm; a
+    # ``limit(1).count()`` plan compiled anew on every call.
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source
+    compiles = metrics.CodegenMetrics.METRIC_COMPILATION_TIME()
+    assert not relation.all("c > 15")
+    before = compiles.getCount()
+    assert not relation.all("c > 15")
+    assert not relation.all("c > 15")
+    assert compiles.getCount() == before
+
+
 def test_equality(spark, db, relation):
     same = db.to_relation(
         spark.createDataFrame(

@@ -1,8 +1,10 @@
 """Full-suite sf1 A/B per the BASELINE.md live-contract protocol.
 
-Two full passes per engine in ONE process, interleaved
+Spark is timed by bench.py's ``time_entries`` (one warm pass, then
+``--passes`` timed passes); a DuckDB pass runs after each timed Spark
+pass in the same process, so the two engines interleave
 spark -> duck -> spark -> duck, per-entry min pooled. Prints one JSON
-line with both sides and the ratio.
+line with both sides, the ratio and Spark's per-entry layers.
 
 Usage: python tools/ab_sf1.py [--sf-dir /root/repo/.localdata/sf1]
        [--passes 2]
@@ -28,7 +30,7 @@ def main() -> None:
     import duckdb
 
     import __spark_entry__ as em
-    from patito_spark.functions.cache import release_caches
+    from bench import time_entries
     from patito_spark.session import get_session
 
     # The suite's session-lived ANN caches need bench.py's heap (see there).
@@ -47,30 +49,15 @@ def main() -> None:
     queries = em.queries()
     oracles = em.oracle_sql()
 
-    def spark_pass(best):
-        for name, fn in queries.items():
-            t0 = time.perf_counter()
-            fn(spark, a.sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            release_caches()
-            best[name] = min(best.get(name, float("inf")), dt)
+    db: dict = {}
 
-    def duck_pass(best):
+    def duck_pass():
         for name, sql in oracles.items():
             t0 = time.perf_counter()
             con.execute(sql).fetchall()
-            dt = time.perf_counter() - t0
-            best[name] = min(best.get(name, float("inf")), dt)
+            db[name] = min(db.get(name, float("inf")), time.perf_counter() - t0)
 
-    sb: dict = {}
-    db: dict = {}
-    # warm both engines once (page cache, codegen, catalogs) — the
-    # BASELINE methodology; warm timings still count toward the min.
-    for p in range(a.passes):
-        print(f"pass {p + 1}: spark", file=sys.stderr, flush=True)
-        spark_pass(sb)
-        print(f"pass {p + 1}: duck", file=sys.stderr, flush=True)
-        duck_pass(db)
+    sb, layers = time_entries(spark, queries, a.sf_dir, a.passes, after_pass=duck_pass)
 
     st = round(sum(sb.values()), 3)
     dt_ = round(sum(db.values()), 3)
@@ -84,6 +71,7 @@ def main() -> None:
                 "duck": {k: round(v, 4) for k, v in db.items()},
                 "sf_dir": a.sf_dir,
                 "passes": a.passes,
+                "layers": layers,
             }
         )
     )

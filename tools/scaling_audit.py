@@ -13,12 +13,11 @@ Run from the repo root: ``python tools/scaling_audit.py``
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
-from patito_spark.functions.cache import release_caches
+from bench import time_entries
 from patito_spark.session import get_session
 
 MANUAL_MARKER = "<!-- MANUAL SECTIONS BELOW: preserved by tools/scaling_audit.py -->"
@@ -42,25 +41,17 @@ def main() -> None:
     sfs = [sf for sf, d in SF_DIRS.items() if os.path.isdir(d)]
     timings: dict[str, dict[str, float]] = {name: {} for name in queries}
     for sf in sfs:
-        sf_dir = SF_DIRS[sf]
-        for fn in queries.values():  # warm pass per SF
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            release_caches()
-        for name, fn in queries.items():
-            best = float("inf")
-            for _ in range(RUNS):
-                start = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - start)
-                release_caches()
-            timings[name][sf] = best
+        best, _ = time_entries(spark, queries, SF_DIRS[sf], RUNS)
+        for name, t in best.items():
+            timings[name][sf] = t
 
     top, bottom = sfs[-1], sfs[-2]
     lines = [
         "# Scaling audit — per-query seconds across scale factors",
         "",
-        "Generated by `tools/scaling_audit.py` (warm, best-of-2, noop sink,",
-        "operator caches released per run). `marginal` =",
+        "Generated by `tools/scaling_audit.py` (bench.py's `time_entries`:",
+        "warm, best-of-2 interleaved passes, noop sink, operator caches",
+        "released per run). `marginal` =",
         f"t(sf{top}) / t(sf{bottom}) while the data grows 10×: values",
         "near 1 mean the query is fixed-cost-dominated at these sizes; the",
         "closer to 10, the more scan/shuffle-bound — those rows are where",
