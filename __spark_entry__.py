@@ -80,23 +80,29 @@ def _events_ts_to_ns(df: DataFrame) -> DataFrame:
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """A table of ``sf_dir``, read with its schema inferred once per file
+    version per session (``read_inferred``: later reads run no job)."""
+    from patito_spark.sources.readers import read_inferred
+
     if name == "events":
         # Harmless when ts is already micros/timestamp; required when the
         # file carries TIMESTAMP(NANOS), which Spark can't read natively.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return _events_ts_to_ns(spark.read.parquet(f"{sf_dir}/events.parquet"))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_inferred(spark, "parquet", f"{sf_dir}/{name}.parquet")
+    return _events_ts_to_ns(df) if name == "events" else df
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events table with ts normalized to epoch-nanos.
 
-    Streaming sources need an explicit schema — take it from a batch read
-    of the same file (one footer read, no data scan), then apply the same
+    Streaming sources need an explicit schema — take it from the batch
+    read's kept schema (inferred once per session), then apply the same
     ts normalization as the batch path.
     """
+    from patito_spark.sources.readers import read_inferred
+
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = read_inferred(spark, "parquet", f"{sf_dir}/events.parquet").schema
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
@@ -606,14 +612,16 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ExactSubstr span-dedup intervals (Lee et al. 2022), portable-hash
-    mode: the merged [start, end] token runs that would be cut from
-    every occurrence-after-the-first of any 4-token run repeated
-    corpus-wide. The oracle replays the FULL pipeline — positioned gram
-    hashes, the corpus-wide count + global first-occurrence rank
-    window, and the gaps-and-islands interval merge — value-for-value
-    in SQL (the text cut itself is the codegen-slice fold over these
-    exact intervals, brute-force-oracled in tests)."""
+    """ExactSubstr span-dedup intervals (Lee et al. 2022): the merged
+    [start, end] token runs that would be cut from every
+    occurrence-after-the-first of any 4-token run repeated corpus-wide.
+    The oracle replays the FULL pipeline — positioned gram hashes, the
+    corpus-wide count + global first-occurrence rank window, and the
+    gaps-and-islands interval merge — in SQL (the text cut itself is the
+    codegen-slice fold over these exact intervals, brute-force-oracled
+    in tests). It hashes grams with the portable md5 hash while the
+    library uses xxhash64; the intervals do not depend on the hash, up
+    to collisions, so the two must still match exactly."""
     from patito_spark.operators.spans import duplicate_span_intervals
 
     docs = _t(spark, sf_dir, "documents")
@@ -621,9 +629,7 @@ def dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # packs (id, pos) into one BIGINT and the stats aggregate stays
     # HashAggregate (no gram-stream sorts); an id outside int32 fails
     # the query instead.
-    return duplicate_span_intervals(
-        docs, span_tokens=4, hash_mode="portable"
-    ).select(
+    return duplicate_span_intervals(docs, span_tokens=4).select(
         "doc_id",
         F.col("span_start").cast("long"),
         F.col("span_end").cast("long"),
@@ -739,25 +745,24 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs, portable-hash mode: shingles are hashed
-    with an md5-derived 60-bit hash DuckDB reproduces exactly, so the
+    """MinHash+LSH near-dup pairs: shingles are hashed with the
+    md5-derived 60-bit portable hash DuckDB reproduces exactly, so the
     oracle replays the FULL pipeline (shingle → bin-min → band signature →
     bucket join → Jaccard verify) value-for-value in SQL."""
     from patito_spark.operators.dedup import minhash_dedup_pairs
 
     docs = _t(spark, sf_dir, "documents")
-    return minhash_dedup_pairs(
-        docs, threshold=0.6, num_hashes=64, bands=16, hash_mode="portable"
-    )
+    return minhash_dedup_pairs(docs, threshold=0.6, num_hashes=64, bands=16)
 
 
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs, portable-hash mode (oracle replays the bit
-    votes, signature packing, pigeonhole join and hamming verify in SQL)."""
+    """SimHash near-dup pairs over the portable token hash (oracle replays
+    the bit votes, signature packing, pigeonhole join and hamming verify
+    in SQL)."""
     from patito_spark.operators.dedup import simhash_dedup_pairs
 
     docs = _t(spark, sf_dir, "documents")
-    return simhash_dedup_pairs(docs, max_hamming=4, hash_mode="portable").select(
+    return simhash_dedup_pairs(docs, max_hamming=4).select(
         "id_a", "id_b", F.col("hamming").cast("long").alias("hamming")
     )
 
@@ -770,9 +775,7 @@ def dedup_corpus_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from patito_spark.operators.dedup import dedup_corpus
 
     docs = _t(spark, sf_dir, "documents")
-    out = dedup_corpus(
-        docs, threshold=0.6, num_hashes=64, bands=16, hash_mode="portable"
-    )
+    out = dedup_corpus(docs, threshold=0.6, num_hashes=64, bands=16)
     return out.select("doc_id", "lang", "source", "n_chars")
 
 
@@ -1856,16 +1859,15 @@ def text_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark-contamination scan: corpus docs sharing 5-grams with a
-    held-out 'benchmark' slice (doc_id < 20), broadcast overlap join in
-    portable-hash mode so the oracle replays gram hashing + counting."""
+    held-out 'benchmark' slice (doc_id < 20). The oracle replays gram
+    building + counting over portable gram hashes; the count does not
+    depend on the hash, up to collisions."""
     from patito_spark.operators.contamination import ngram_contamination
 
     docs = _t(spark, sf_dir, "documents")
     benchmark = docs.filter(F.col("doc_id") < 20)
     corpus = docs.filter(F.col("doc_id") >= 20)
-    return ngram_contamination(
-        corpus, benchmark, n=5, hash_mode="portable"
-    )
+    return ngram_contamination(corpus, benchmark, n=5)
 
 
 def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2711,9 +2713,10 @@ def _minhash_pairs_sql_body() -> str:
     """Shared CTE chain replaying minhash_dedup_pairs at threshold 0.6.
 
     Replays densified one-permutation hashing (Shrivastava & Li 2014)
-    exactly as banded_signatures does: each of the 64 bins takes its own
-    min hash when occupied, otherwise borrows from the next occupied bin
-    at-or-after it (wrapping to the first occupied bin overall)."""
+    exactly as dedup._minhash_doc_features_arrow does: each of the 64
+    bins takes its own min hash when occupied, otherwise borrows from
+    the next occupied bin at-or-after it (wrapping to the first occupied
+    bin overall)."""
     return f"""sh AS ({_SHINGLE_SQL}),
             bin_mins AS (
                 SELECT doc_id, h % 64 AS bin, min(h) AS mn
@@ -2820,8 +2823,9 @@ def _redact_sql(expr: str) -> str:
 
 
 def _shingle_sql(n: int = 3, source: str = "documents") -> str:
-    """Shingle rows replaying shingle_hash_rows: word n-grams with the
-    whole-text fallback for short docs, portable hash, distinct per doc."""
+    """Distinct per-doc shingle hashes: word n-grams with the whole-text
+    fallback for short docs (the shingle_hash_rows shape), portable
+    hash."""
     gram = " || ' ' || ".join(
         f"t[i + {j}]" if j else "t[i]" for j in range(n)
     )
@@ -3431,7 +3435,7 @@ def oracle_sql() -> dict[str, str]:
               ON a.bucket = c.bucket AND a.vec_id < c.vec_id
             WHERE list_dot_product(a.v, c.v) / (a.norm * c.norm) >= 0.35
         """,
-        # Replays the FULL MinHash pipeline in portable-hash mode:
+        # Replays the FULL MinHash pipeline over portable hashes:
         # shingle hashes -> one-permutation bin-mins (h mod 64) -> band key
         # (bins 4-per-band, '<bin>:<min>' joined in bin order) -> bucket
         # equi-join with the >1 / <=1000 size guard -> exact Jaccard over

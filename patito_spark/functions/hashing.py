@@ -1,22 +1,41 @@
 """Hash expressions for dedup/sampling pipelines.
 
-Two families:
+Two families, and each operator uses the one its answer needs:
 
+* ``portable`` — the top 60 bits of ``md5``, decoded from the hex
+  digest. *Engine-independent*: DuckDB reproduces it exactly as
+  ``('0x' || substring(md5(x), 1, 15))::BIGINT`` and Python as
+  :func:`portable_hash64_np`. 60 bits (15 hex chars) keeps the value
+  inside a signed 64-bit integer on every engine. Used, with no option,
+  where the hash DEFINES the answer and an oracle must replay it: the
+  MinHash family (``minhash_dedup_pairs``, ``minhash_lsh_candidates``,
+  ``dedup_corpus``, ``minhash_dedup_against``, ``update_corpus``,
+  ``streaming_dedup_lsh``) and SimHash (``simhash_signatures``,
+  ``simhash_dedup_pairs``), whose signatures, buckets and pairs are
+  functions of the hash. Their Arrow builds hash each distinct gram or
+  token once per batch, which beat the codegen ``xxhash64`` builds they
+  replaced: at sf1 (``tools/gen_sf_scale.py``, 4 cores, 10 alternating
+  pairs, median s) ``minhash_dedup_pairs`` 7.91 vs 11.22,
+  ``simhash_dedup_pairs`` 2.06 vs 2.99 and ``minhash_dedup_against``
+  5.12 vs 8.91, the new build winning every pair (docs/perf.md, "One
+  hash per dedup operator").
 * ``xxhash64`` — Spark's native 64-bit hash, evaluated in whole-stage
-  codegen with no cryptographic work. It is the default ``hash_mode`` of
-  most operators, but not of all: the ``winnow_*`` functions default to
-  ``crc32poly`` and ``kmv_distinct`` to ``portable``. Neither mode is
-  always faster: xxhash64 wins on codegen gram hashing
-  (``shingle_hash_rows``, ``duplicate_span_intervals``,
-  ``deterministic_sample``), while the portable Arrow lanes of
-  ``minhash_dedup_pairs`` and ``simhash_dedup_pairs`` beat their
-  xxhash64 lanes.
-* ``portable`` — the top 60 bits of ``md5``, decoded from the hex digest.
-  ~2-3× more hashing work, but *engine-independent*: DuckDB reproduces it
-  exactly as ``('0x' || substring(md5(x), 1, 15))::BIGINT``, which lets the
-  correctness oracles replay MinHash/SimHash/sampling pipelines value-for-
-  value in SQL. 60 bits (15 hex chars) keeps the value inside a signed
-  64-bit integer on every engine — no unsigned-overflow edge cases.
+  codegen with no cryptographic work. Used, with no option, where the
+  answer does not depend on the hash, up to collisions: the gram builds
+  (``gram_hash_rows``, ``shingle_hash_rows``), the spans
+  (``duplicate_span_intervals``, ``dedup_spans``, ``scrub_spans``),
+  ``ngram_contamination`` and ``cross_doc_repetition`` (a Bloom-filter
+  contamination scan's false positives are the exception: they depend
+  on the hash, as collisions do). The ``dedup_spans`` and
+  ``contamination_check`` oracles hash portably and still match
+  exactly; the sf1 races against the portable spelling returned equal
+  results, and ``xxhash64`` was faster on every path that hashes:
+  ``dedup_spans`` 5.18 vs 6.20 s, the contamination join 1.85 vs 4.19 s
+  (docs/perf.md).
+
+Where the hash picks WHICH rows an answer holds — sampling, mixing,
+selection, ``kmv_distinct`` and winnowing — the caller may want either,
+so those functions keep a ``hash_mode`` option (:func:`hash64`).
 """
 
 from __future__ import annotations
@@ -60,10 +79,12 @@ def portable_hash64_np(strings):
     """numpy int64 array of :func:`portable_hash64` over a sequence of
     strings — the Arrow-kernel twin of the Column/SQL spellings
     (``md5(utf8)[:8]`` big-endian ``>> 4`` == first 15 hex chars as
-    int). The round-15 Arrow lanes (simhash signatures, MinHash
-    features) call this on each batch's DISTINCT tokens/grams; all
-    three spellings must stay bit-identical forever — change one,
-    change all, and the oracle parity tests will catch a miss."""
+    int), and the one Python spelling: the Arrow signature builds
+    (SimHash, MinHash features) call it on each batch's DISTINCT
+    tokens/grams, the streaming MinHash and portable winnowing on each
+    document's grams. All three spellings must stay bit-identical
+    forever — change one, change all, and the oracle parity tests will
+    catch a miss."""
     import hashlib
 
     import numpy as np

@@ -29,7 +29,6 @@ def ngram_contamination(
     text_col: str = "text",
     n: int = 8,
     min_shared: int = 1,
-    hash_mode: str = "xxhash64",
     broadcast_benchmark: bool = True,
     max_broadcast_grams: int = 2_000_000,
     bloom_fpp: Optional[float] = None,
@@ -75,8 +74,11 @@ def ngram_contamination(
     Measured at 1M docs / 100k-gram benchmark: join 3.4 s, bloom ~4.5 s
     (docs/perf.md) — the filter buys a smaller broadcast, not speed.
 
-    ``hash_mode`` only affects the join and the Bloom filter (both
-    gram-hash JVM-side through :func:`shingle_hash_rows`).
+    The join and the Bloom filter gram-hash JVM-side through
+    :func:`shingle_hash_rows` (``xxhash64``). The join's answer is the
+    same under any 64-bit hash, up to collisions; which documents the
+    Bloom filter over-flags depends on the hash, its contaminated
+    documents do not.
     """
     if bloom_fpp is not None:
         return _bloom_contamination(
@@ -86,7 +88,6 @@ def ngram_contamination(
             text_col=text_col,
             n=n,
             min_shared=min_shared,
-            hash_mode=hash_mode,
             fpp=bloom_fpp,
         )
     # Distinct benchmark grams, bounded collect: an eval set is tiny by
@@ -139,12 +140,10 @@ def ngram_contamination(
     # the post-join count_distinct, and the benchmark side dedups on __h
     # alone below. The gram build itself never exchanges.
     corpus_grams = shingle_hash_rows(
-        corpus, id_col=id_col, text_col=text_col, n=n,
-        hash_mode=hash_mode, distinct=False,
+        corpus, id_col=id_col, text_col=text_col, n=n, distinct=False
     )
     bench_grams = shingle_hash_rows(
-        benchmark, id_col=id_col, text_col=text_col, n=n, hash_mode=hash_mode,
-        distinct=False,
+        benchmark, id_col=id_col, text_col=text_col, n=n, distinct=False
     ).select("__h").distinct()
     if broadcast_benchmark:
         bench_grams = F.broadcast(bench_grams)
@@ -163,13 +162,12 @@ def _bloom_contamination(
     text_col: str,
     n: int,
     min_shared: int,
-    hash_mode: str,
     fpp: float,
 ) -> DataFrame:
     """The ``bloom_fpp`` body of :func:`ngram_contamination`.
 
-    Both sides hash grams JVM-side (:func:`shingle_hash_rows`, the same
-    ``hash_mode`` the join uses), so the Python stage touches
+    Both sides hash grams JVM-side (:func:`shingle_hash_rows`, the
+    join's hash), so the Python stage touches
     only int64 hash columns — the membership test is pure vectorized
     numpy over Arrow batches, never per-gram string work.
     """
@@ -178,8 +176,7 @@ def _bloom_contamination(
     from patito_spark.functions.bloom import BloomBits
 
     bench_hashes = shingle_hash_rows(
-        benchmark, id_col=id_col, text_col=text_col, n=n,
-        hash_mode=hash_mode, distinct=False,
+        benchmark, id_col=id_col, text_col=text_col, n=n, distinct=False
     ).select("__h")
     bloom = BloomBits.build(bench_hashes, "__h", fpp=fpp)
     bc = corpus.sparkSession.sparkContext.broadcast(
@@ -190,7 +187,7 @@ def _bloom_contamination(
     # filter, so the per-doc tally is count(*) after ONE map-side-
     # combined shuffle.
     corpus_hashes = shingle_hash_rows(
-        corpus, id_col=id_col, text_col=text_col, n=n, hash_mode=hash_mode
+        corpus, id_col=id_col, text_col=text_col, n=n
     )
     out_schema = T.StructType(
         [T.StructField("__id", corpus.schema[id_col].dataType)]

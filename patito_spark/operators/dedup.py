@@ -5,13 +5,18 @@ Scale design (100 TB / 1000 executors):
 
 * exact: one shuffle on the dedup key (window row_number / hash agg with
   map-side combine).
-* MinHash: one-permutation hashing — shingle-hash rows through codegen
-  hash aggregates (per-bin mins, map-side combined), then a *band-bucket*
-  self-join: candidates only meet inside (band, bucket) groups, never the
-  O(n²) cross product. Oversized buckets are capped to bound skew.
-* SimHash: 64 bit-vote conditional sums in one codegen hash aggregate;
-  candidate pairs by pigeonhole on 16-bit chunks (hamming ≤ 3 guarantees
-  one equal chunk), verified with bit_count(xor).
+* MinHash: one-permutation hashing over the portable gram hash — the
+  per-document bin mins, band keys and verify arrays in one map-only
+  Arrow stage, then a *band-bucket* grouping: candidates only meet
+  inside (band, bucket) groups, never the O(n²) cross product.
+  Oversized buckets are capped to bound skew.
+* SimHash: per-document bit votes over the portable token hash in one
+  map-only Arrow stage; candidate pairs by pigeonhole on combination
+  keys (:func:`hamming_pairs`), verified with bit_count(xor).
+* MinHash and SimHash signatures are defined by the portable hash
+  (:mod:`patito_spark.functions.hashing`), so the SQL oracles and the
+  streaming dedup replay them exactly; the hash-invariant gram builds
+  (:func:`gram_hash_rows`) use the JVM's ``xxhash64``.
 * embeddings: exact pair verify as expressions, or LSH buckets + BLAS
   verification via Arrow batches for the full-table path.
 * Jaccard / cosine verification only ever runs on candidate pairs, in the
@@ -100,11 +105,10 @@ def gram_hash_rows(
     id_col: str,
     text_col: str,
     n: int,
-    hash_mode: str,
     positioned: bool = False,
     distinct: bool = False,
 ) -> DataFrame:
-    """The one word-``n``-gram hash build: 64-bit hashes of the grams of
+    """The one word-``n``-gram hash build: ``xxhash64`` of the grams of
     ``text_col`` split on single spaces, one row per gram.
 
     ``arrays_zip`` of ``n`` parallel token slices, exploded and hashed
@@ -124,10 +128,10 @@ def gram_hash_rows(
     per-row distinct equals the ``(__id, __h)`` distinct only when ids
     are unique, which is the caller's contract.
 
-    NULL text contributes no rows in every shape.
+    NULL text contributes no rows in every shape. Every caller's answer
+    is the same under any 64-bit gram hash, up to collisions, so the
+    hash is the JVM's codegen ``xxhash64``.
     """
-    from patito_spark.functions.hashing import hash64
-
     toks = F.split(F.col(text_col), " ")
     k = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0 if positioned else 1))
     zipped = F.arrays_zip(
@@ -135,9 +139,8 @@ def gram_hash_rows(
     )
 
     def gram_hash(g: Column) -> Column:
-        return hash64(
-            F.concat_ws(" ", *[g.getField(str(j)) for j in range(n)]),
-            mode=hash_mode,
+        return F.xxhash64(
+            F.concat_ws(" ", *[g.getField(str(j)) for j in range(n)])
         )
 
     doc_id = F.col(id_col).alias("__id")
@@ -158,24 +161,21 @@ def shingle_hash_rows(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    hash_mode: str = "xxhash64",
     distinct: bool = True,
 ) -> DataFrame:
-    """(``__id``, ``__h``) rows: 64-bit hash of each word n-gram.
+    """(``__id``, ``__h``) rows: ``xxhash64`` of each word n-gram.
 
     The shingle shape of :func:`gram_hash_rows`: documents shorter than
     ``n`` tokens hash their whole text as one gram, NULL text emits no
     rows, and no shape of it exchanges. ``distinct`` (default) keeps each
     hash once per row; ``distinct=False`` keeps repeats and skips the
     per-row hash lambda — use it with a duplicate-insensitive consumer
-    (bin-min signatures, ``collect_set`` verify arrays), which is how
-    the MinHash family calls it.
+    (a hash join followed by ``count_distinct``, a Bloom filter).
 
-    ``hash_mode="portable"`` (md5-derived, engine-reproducible — see
-    :mod:`patito_spark.functions.hashing`) lets a SQL oracle replay the
-    whole MinHash pipeline; the default ``xxhash64`` is the fast path.
+    The MinHash family does not use these rows: its signatures are
+    defined by the portable hash (:func:`_minhash_doc_features_arrow`).
     """
-    return gram_hash_rows(df, id_col, text_col, n, hash_mode, distinct=distinct)
+    return gram_hash_rows(df, id_col, text_col, n, distinct=distinct)
 
 
 def _minhash_doc_features_arrow(
@@ -187,29 +187,38 @@ def _minhash_doc_features_arrow(
     bands: int,
     densify: bool,
 ) -> DataFrame:
-    """Per-document MinHash features as ONE map-only Arrow stage.
+    """Per-document MinHash features as ONE map-only Arrow stage — the
+    one MinHash signature build.
 
     Emits one row per non-null-text document: ``__id``, ``__jtokens``
-    (the sorted DISTINCT portable gram hashes — exactly
-    ``array_sort(collect_set(__h))`` of the shingle rows) and
-    ``__bands`` (one ``{band, __key}`` struct per band, where
-    ``__key`` is the same ``'bin:min,bin:min'`` string
-    :func:`banded_signatures` builds — callers apply ``xxhash64`` to
-    it JVM-side so bucket values are bit-identical).
+    (the sorted DISTINCT portable gram hashes, the verify arrays) and
+    ``__bands`` (one ``{band, __key}`` struct per band, ``__key`` the
+    band's ``'bin:min,bin:min'`` string; :func:`_band_buckets` applies
+    ``xxhash64`` to it JVM-side). The signatures are defined by the
+    portable hash, so the DuckDB oracles and
+    :func:`patito_spark.streaming.dedup.streaming_dedup_lsh` replay
+    them value for value.
 
-    Round 15, the simhash/tf_idf precedent: every stage of the
-    signature build is doc-local — gram construction (the
+    Every stage is doc-local: gram construction (the
     :func:`gram_hash_rows` shingle shape: ``k = max(len - n + 1, 1)``
     grams, short docs contribute their whole text), the md5 gram hash
-    (memoized per distinct gram per batch via ``pd.factorize`` — the
-    JVM lane pays md5-hex + base-16 ``conv`` per gram occurrence), the
-    OPH bin mins, rotation densification (Shrivastava & Li 2014: an
-    empty bin borrows the next occupied bin's value, circularly —
-    ``np.searchsorted`` over the occupied bins) and the band keys. The exploded gram stream,
-    its persist, and BOTH per-doc aggregates (bin-min + collect_set)
-    disappear; the only exchange left in the LSH pipeline is the
+    (memoized per distinct gram per batch via ``pd.factorize``),
+    one-permutation hashing (Li/Owen/Zhang 2012: each gram is hashed
+    once and routed to bin ``h mod num_hashes``, which keeps its min),
+    and the band keys. No gram stream is exploded, persisted or
+    aggregated; the only exchange left in the LSH pipeline is the
     (band, bucket) stage, which is inherent. Rows are documents:
-    duplicate ids are the caller's contract, as with the groupBy lane.
+    duplicate ids are the caller's contract.
+
+    ``densify`` applies rotation densification (Shrivastava & Li 2014:
+    an empty bin borrows the next occupied bin's value, circularly —
+    ``np.searchsorted`` over the occupied bins). Without it a band
+    whose key holds only one or two occupied bins has effective
+    signature length below rows-per-band, and its false-positive rate
+    degrades from j^r towards j: at sf0.1 -> sf1 (10x docs, a 31-word
+    vocabulary) non-densified candidates grew 88x while true
+    duplicates stayed flat; densified growth is ~linear
+    (docs/scaling.md, "Densification").
     """
     from pyspark.sql.types import (
         ArrayType,
@@ -369,171 +378,32 @@ def _minhash_doc_features_arrow(
     return df.select(id_col, text_col).mapInPandas(kernel, out_schema)
 
 
-def banded_signatures(
-    shingle_rows: DataFrame,
-    num_hashes: int = 64,
-    bands: int = 16,
-    densify: bool = True,
-) -> DataFrame:
-    """``(__id, band, bucket)`` banded OPH keys from shingle-hash rows.
-
-    One-permutation hashing (Li/Owen/Zhang 2012): instead of k permutation
-    passes per shingle (O(k·|shingles|) interpreted higher-order-function
-    evals — the slow path), hash each shingle ONCE, route it to bin
-    h mod k, and take the per-bin min via a codegen hash aggregate.
-    Map-side combine reduces each partition to ≤ k rows per doc before the
-    shuffle, so at 100 TB the exchanged data is ~k·n_docs longs, not the
-    shingle stream.
-
-    ``densify=True`` (default) applies rotation densification
-    (Shrivastava & Li 2014): empty bins borrow the value of the next
-    occupied bin, circularly. Without it a band whose key holds only one
-    or two occupied bins has effective signature length r < rows-per-band,
-    and its false-positive collision rate degrades from j^r to ~j^1-j^2.
-    On a corpus whose n-gram space saturates (boilerplate-heavy web text,
-    or any fixed-vocabulary synthetic set), those weak bands dominate:
-    measured at sf0.1→sf1 (10× docs, 31-word vocabulary), non-densified
-    candidates grew 88× (5.9k → 519k) while true duplicates stayed flat;
-    densified growth is ~linear — see docs/scaling.md §Densification.
-
-    Densification is computed IN PLACE on the one row per document that
-    the per-doc aggregate already produces: a single right-to-left
-    ``aggregate`` scan over a fixed ``num_hashes``-slot array (seeded
-    with the wrap value — the first occupied bin's min, which is just
-    the first entry of the bin-sorted map), then ``bands`` band keys are
-    emitted directly. No 64-row explode, no window sort, nothing extra
-    shuffled: the whole fill is a map-side expression over
-    ``n_docs`` rows.
-    """
-    assert num_hashes % bands == 0
-    rows_per_band = num_hashes // bands
-    bin_mins = (
-        shingle_rows.withColumn(
-            "__bin", F.pmod(F.col("__h"), F.lit(num_hashes))
-        )
-        .groupBy("__id", "__bin")
-        .agg(F.min("__h").alias("__min"))
-    )
-    if densify:
-        k, r = num_hashes, rows_per_band
-        per_doc = bin_mins.groupBy("__id").agg(
-            F.map_from_entries(
-                F.sort_array(F.collect_list(F.struct("__bin", "__min")))
-            ).alias("__m")
-        )
-        # Dense 64-slot array: scan the reversed raw grid left-to-right so
-        # each empty slot takes the value of the next occupied bin; the
-        # accumulator starts at the wrap value (first occupied bin's min =
-        # first value of the bin-sorted map), which is exactly the
-        # circular borrow for trailing empty bins. O(k) per doc.
-        dense = (
-            "reverse(aggregate("
-            f" reverse(transform(sequence(0, {k - 1}),"
-            "   i -> element_at(__m, cast(i as bigint)))),"
-            " struct(cast(array() as array<bigint>) as out,"
-            "        element_at(map_values(__m), 1) as last),"
-            " (acc, x) -> struct(array_append(acc.out, coalesce(x, acc.last)),"
-            "                    coalesce(x, acc.last)),"
-            " acc -> acc.out))"
-        )
-        # One (band, bucket) row per band, keyed by the same
-        # 'bin:min,bin:min' string the sparse path builds — so bucket
-        # equality (all the LSH join sees) is identical by construction.
-        band_rows = (
-            f"transform(sequence(0, {bands - 1}), b -> struct("
-            " cast(b as int) as band,"
-            " xxhash64(array_join(transform("
-            f"  sequence(cast(b*{r} as bigint), cast(b*{r}+{r - 1} as bigint)),"
-            "  i -> concat(i, ':', element_at(__d, cast(i+1 as int)))), ','))"
-            " as bucket))"
-        )
-        return (
-            per_doc.withColumn("__d", F.expr(dense))
-            .select("__id", F.explode(F.expr(band_rows)).alias("__bb"))
-            .select("__id", "__bb.band", "__bb.bucket")
-        )
-    return (
-        bin_mins.withColumn(
-            "band", (F.col("__bin") / F.lit(rows_per_band)).cast("int")
-        )
-        .groupBy("__id", "band")
-        .agg(
-            F.sort_array(F.collect_list(F.struct("__bin", "__min"))).alias(
-                "__pairs"
-            )
-        )
-        .select(
-            "__id",
-            "band",
-            F.xxhash64(
-                F.expr(
-                    "array_join(transform(__pairs, "
-                    "p -> concat(p.__bin, ':', p.__min)), ',')"
-                )
-            ).alias("bucket"),
-        )
+def _band_buckets(feats: DataFrame) -> DataFrame:
+    """``(__id, band, bucket)`` rows of :func:`_minhash_doc_features_arrow`
+    output: ``bucket`` is ``xxhash64`` of the band key."""
+    return feats.select("__id", F.explode("__bands").alias("__b")).select(
+        "__id",
+        F.col("__b.band").alias("band"),
+        F.xxhash64(F.col("__b.__key")).alias("bucket"),
     )
 
 
-def minhash_lsh_candidates(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_size: int = 3,
-    max_bucket_size: int = 1000,
-    shingle_rows: Optional[DataFrame] = None,
-    hash_mode: str = "xxhash64",
-    densify: bool = True,
-    banded_rows: Optional[DataFrame] = None,
-) -> DataFrame:
-    """Candidate duplicate pairs via banded MinHash LSH.
+def _bucket_pairs(banded: DataFrame, max_bucket_size: int) -> DataFrame:
+    """``id_a < id_b`` pairs sharing a ``(band, bucket)`` of ``banded``.
 
-    Returns ``id_a < id_b`` pairs that share at least one band bucket.
-    ``max_bucket_size`` drops degenerate buckets (e.g. empty documents) to
-    bound the quadratic blow-up inside a single bucket at scale.
-    ``shingle_rows`` lets callers reuse a precomputed
-    :func:`shingle_hash_rows` output (avoids re-shingling the corpus);
-    ``banded_rows`` a precomputed ``(__id, band, bucket)`` frame (the
-    round-15 Arrow feature path), which skips the signature build here
-    entirely.
-    ``densify`` — see :func:`banded_signatures`; the default keeps the
-    band collision probability on the designed j^r curve, which is what
-    bounds candidate growth on gram-dense corpora.
+    The skew guard runs BEFORE any member list materializes, fused into
+    the bucket stage's ONE exchange: a window count over
+    ``partitionBy(band, bucket)`` (WindowExec buffers spillably) keeps
+    ``1 < n <= max_bucket_size``, and the ``collect_list`` aggregate
+    rides the window's own partitioning and sort as a streaming
+    sort-aggregate. A degenerate hot bucket (thousands of empty or
+    identical docs sharing a band key) is dropped by a counter, never
+    buffered whole in one aggregation buffer (``collect_list`` buffers
+    cannot spill), and every collected array is bounded at
+    ``max_bucket_size``. Pairs expand by a codegen double explode over
+    the sorted arrays (``a < b`` keeps each in-bucket pair once); the
+    cross-band distinct stays (a pair shares up to ``bands`` buckets).
     """
-    if banded_rows is not None:
-        banded = banded_rows
-    else:
-        exploded = (
-            shingle_rows
-            if shingle_rows is not None
-            else shingle_hash_rows(
-                df, id_col=id_col, text_col=text_col, n=shingle_size,
-                hash_mode=hash_mode,
-            )
-        )
-        banded = banded_signatures(
-            exploded, num_hashes=num_hashes, bands=bands, densify=densify
-        )
-    # The skew guard runs BEFORE any member list materializes, fused
-    # into the bucket stage's ONE exchange (round 14, the
-    # hamming_pairs discipline): a window count over
-    # partitionBy(band, bucket) — WindowExec buffers spillably —
-    # filters to 1 < n <= max_bucket_size, and the collect_list
-    # aggregate rides the window's own partitioning and sort as a
-    # streaming sort-aggregate. A degenerate hot bucket (thousands of
-    # empty/identical docs sharing a banded signature) is therefore
-    # dropped by a counter, never buffered whole in one aggregation
-    # buffer (collect_list buffers cannot spill — round-10 advice),
-    # and the guard bounds every collected array at max_bucket_size.
-    # The old count + semi-join spelling cost two extra exchanges and
-    # needed `banded` persisted for its two branches; this shape has
-    # one consumer and no cache. Pair expansion is a codegen double
-    # explode over the sorted arrays (a < b keeps each in-bucket pair
-    # once) — the interpreted transform/slice lambda it replaces ran
-    # per bucket element; the cross-band distinct stays (a pair shares
-    # up to `bands` buckets).
     from pyspark.sql import Window
 
     w = Window.partitionBy("band", "bucket")
@@ -553,6 +423,31 @@ def minhash_lsh_candidates(
     return pairs.distinct()
 
 
+def minhash_lsh_candidates(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    num_hashes: int = 64,
+    bands: int = 16,
+    shingle_size: int = 3,
+    max_bucket_size: int = 1000,
+    densify: bool = True,
+) -> DataFrame:
+    """Candidate duplicate pairs via banded MinHash LSH.
+
+    Returns ``id_a < id_b`` pairs that share at least one band bucket of
+    the portable-hash signatures (:func:`_minhash_doc_features_arrow`,
+    which documents ``densify``). ``max_bucket_size`` drops degenerate
+    buckets (e.g. empty documents) to bound the quadratic blow-up inside
+    a single bucket at scale.
+    """
+    feats = _minhash_doc_features_arrow(
+        df, id_col, text_col, n=shingle_size, num_hashes=num_hashes,
+        bands=bands, densify=densify,
+    )
+    return _bucket_pairs(_band_buckets(feats), max_bucket_size)
+
+
 def jaccard(tokens_a: Column, tokens_b: Column) -> Column:
     """Jaccard similarity of two (deduplicated) token-array columns."""
     intersection = F.size(F.array_intersect(tokens_a, tokens_b)).cast("double")
@@ -568,93 +463,55 @@ def minhash_dedup_pairs(
     text_col: str = "text",
     threshold: float = 0.7,
     shingle_size: int = 3,
-    hash_mode: str = "xxhash64",
     materialize_shingles: bool = True,
     broadcast_verify_max_docs: Optional[int] = 100_000,
-    **lsh_kwargs,
+    num_hashes: int = 64,
+    bands: int = 16,
+    max_bucket_size: int = 1000,
+    densify: bool = True,
 ) -> DataFrame:
     """Verified duplicate pairs: LSH candidates filtered by true Jaccard.
 
-    The lane follows ``hash_mode``. With ``"portable"`` the per-document
-    feature build — shingles, gram hashes, OPH bin mins, densification,
-    band keys AND the verify gram-sets — is ONE map-only Arrow stage
-    (:func:`_minhash_doc_features_arrow`; the JVM md5 + base-16 conv per
-    gram occurrence was the pipeline's dominant cost, and every one of
-    those stages is doc-local), and the cached frame is one row per
-    document instead of the exploded gram stream. It beat the codegen
-    spelling of the same features at sf1 (docs/perf.md). ``"xxhash64"``
-    keeps the codegen spelling: numpy has no xxhash64, and the JVM hash
-    is already fast.
+    The per-document feature build — shingles, portable gram hashes,
+    OPH bin mins, densification, band keys AND the verify gram-sets —
+    is ONE map-only Arrow stage (:func:`_minhash_doc_features_arrow`),
+    so the frame both branches read is one row per document, not the
+    exploded gram stream. At sf1 it beat the codegen ``xxhash64`` build
+    of the same pipeline, which it replaced (docs/perf.md).
 
     Verification uses the SAME shingle space as the signatures (so the
-    threshold means what the MinHash collision probability estimates), and
-    only touches candidate pairs — cost proportional to the number of
-    near-duplicates, not n². Both stages share one shingle-hash pipeline:
-    verification intersects the per-doc hash-gram arrays (sorted bigint
-    arrays, cheap JVM set ops) instead of re-shingling text per pair.
+    threshold means what the MinHash collision probability estimates),
+    and only touches candidate pairs — cost proportional to the number
+    of near-duplicates, not n². It intersects the per-doc sorted
+    bigint gram-hash arrays (cheap JVM set ops) instead of re-shingling
+    text per pair.
 
-    The shared shingle rows feed BOTH branches, and Catalyst does not
-    share common subplans — without materialization the corpus is
-    re-shingled per branch. ``materialize_shingles`` (default) caches
-    them (memory-and-disk, ~tokens × 16 bytes); disable it to trade
-    recomputation for zero cache footprint.
+    The feature rows feed BOTH branches, and Catalyst does not share
+    common subplans — without materialization the Arrow stage runs
+    once per branch. ``materialize_shingles`` (default) caches them
+    (memory-and-disk); disable it to trade recomputation for zero cache
+    footprint.
 
-    The verify join attaches each doc's hash-gram array to its candidate
+    The verify join attaches each doc's gram-hash array to its candidate
     pairs. While the per-doc array table has ≤
     ``broadcast_verify_max_docs`` rows (default 100k ≈ 50 MB of sorted
     bigint arrays) it is BROADCAST, so candidate pairs never shuffle —
     the whole verify is map-side against the (Spark-reused) broadcast.
     Above the bound it falls back to two shuffle joins, the only shape
     that scales to web-corpus doc counts; the probe count runs on the
-    persisted array table so the aggregate is not paid twice. Pass
-    ``broadcast_verify_max_docs=None`` to force the shuffle shape.
+    persisted array table. Pass ``broadcast_verify_max_docs=None`` to
+    force the shuffle shape. ``num_hashes``, ``bands``,
+    ``max_bucket_size`` and ``densify`` are
+    :func:`minhash_lsh_candidates`'.
     """
-    if hash_mode == "portable":
-        feats = _minhash_doc_features_arrow(
-            df, id_col, text_col, n=shingle_size,
-            num_hashes=lsh_kwargs.get("num_hashes", 64),
-            bands=lsh_kwargs.get("bands", 16),
-            densify=lsh_kwargs.get("densify", True),
-        )
-        if materialize_shingles:
-            feats = tracked_persist(feats)
-        banded = (
-            feats.select("__id", F.explode("__bands").alias("__b"))
-            .select(
-                "__id",
-                F.col("__b.band").alias("band"),
-                F.xxhash64(F.col("__b.__key")).alias("bucket"),
-            )
-        )
-        candidates = minhash_lsh_candidates(
-            df, id_col=id_col, text_col=text_col,
-            shingle_size=shingle_size, banded_rows=banded, **lsh_kwargs,
-        )
-        toks = feats.select(
-            F.col("__id").alias("__jid"), "__jtokens"
-        )
-    else:
-        # distinct=False: every consumer is duplicate-insensitive — the
-        # bin-min signature aggregate is idempotent under repeats, and
-        # the verify arrays below use collect_set — so the per-row hash
-        # lambda the distinct would cost is skipped entirely.
-        shingle_rows = shingle_hash_rows(
-            df, id_col=id_col, text_col=text_col, n=shingle_size,
-            hash_mode=hash_mode, distinct=False,
-        )
-        if materialize_shingles:
-            shingle_rows = tracked_persist(shingle_rows)
-        candidates = minhash_lsh_candidates(
-            df,
-            id_col=id_col,
-            text_col=text_col,
-            shingle_size=shingle_size,
-            shingle_rows=shingle_rows,
-            **lsh_kwargs,
-        )
-        toks = shingle_rows.groupBy(F.col("__id").alias("__jid")).agg(
-            F.array_sort(F.collect_set("__h")).alias("__jtokens")
-        )
+    feats = _minhash_doc_features_arrow(
+        df, id_col, text_col, n=shingle_size, num_hashes=num_hashes,
+        bands=bands, densify=densify,
+    )
+    if materialize_shingles:
+        feats = tracked_persist(feats)
+    candidates = _bucket_pairs(_band_buckets(feats), max_bucket_size)
+    toks = feats.select(F.col("__id").alias("__jid"), "__jtokens")
     if broadcast_verify_max_docs is not None:
         toks = tracked_persist(toks)
         if toks.count() <= broadcast_verify_max_docs:
@@ -717,20 +574,31 @@ def ngram_jaccard_pairs(
 # ---------------------------------------------------------------------- #
 
 
-def _simhash_signatures_arrow(
-    df: DataFrame, id_col: str, text_col: str, bits: int
+def simhash_signatures(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    bits: int = 64,
 ) -> DataFrame:
-    """Map-only Arrow lane for portable-mode SimHash signatures.
+    """SimHash signatures (``__id``, ``__sig`` bigint) over the portable
+    token hash, as ONE map-only Arrow stage with ZERO exchanges.
 
-    Bit-identical to the sql lane: tokens are ``split(text, ' ')`` with
-    empty strings kept (pandas ``str.split(' ')`` matches Java
-    ``split(re, -1)`` for the single-space pattern), null text yields
-    no row (split(null) explodes to nothing), the hash is the first 15
-    md5 hex chars as an int (= digest[:8] big-endian >> 4), and bit i
-    votes positive iff ``2*ones_i > n`` (ties excluded, exactly the
-    sql lane's predicate). Only bits 0-59 can ever set (the portable
-    hash's top 4 bits are constant 0), so the loop stops at
-    ``min(bits, 60)`` — identical output for any ``bits``.
+    Each batch tokenizes in pandas, ``pd.factorize``s the tokens and
+    runs md5 ONCE PER DISTINCT token in the batch, then computes the
+    per-doc bit votes with C-speed numpy ``reduceat`` over the
+    doc-contiguous token stream and packs the signature in-kernel.
+    Per-batch memoization degrades gracefully with vocabulary size (a
+    web-scale batch still amortizes natural-text token repetition); the
+    stage stays map-only at any scale. At sf1 it beat the codegen
+    ``xxhash64`` vote aggregate it replaced (docs/perf.md).
+
+    Tokens are ``split(text, ' ')`` with empty strings kept (pandas
+    ``str.split(' ')`` matches Java ``split(re, -1)`` for the
+    single-space pattern); null text yields no row. Bit i votes
+    positive iff ``2*ones_i > n`` (ties excluded). The portable hash is
+    60 bits (:mod:`patito_spark.functions.hashing`), so only bits 0-59
+    can ever set and the loop stops at ``min(bits, 60)``; a SQL oracle
+    replays every signature.
     """
     from pyspark.sql.types import LongType, StructField, StructType
 
@@ -779,96 +647,12 @@ def _simhash_signatures_arrow(
     return df.select(id_col, text_col).mapInPandas(kernel, out_schema)
 
 
-def simhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 64,
-    hash_mode: str = "xxhash64",
-) -> DataFrame:
-    """SimHash signatures (``__id``, ``__sig`` bigint).
-
-    Two execution lanes with identical output, picked by ``hash_mode``:
-
-    - ``"xxhash64"`` — codegen hash agg: explode token hashes to
-      rows, then ONE hash aggregate with ``ceil(bits/2)`` packed vote
-      counters (two 32-bit ones-count lanes per 64-bit sum; each
-      token's hash votes per bit). Everything stays in whole-stage
-      codegen — higher-order array functions are interpreted in Spark
-      and ~1000× slower per op. Map-side combine reduces each
-      partition to one partial-vote row per doc before the shuffle.
-    - ``"portable"`` — ONE map-only
-      Arrow-batched stage, ZERO exchanges (round 15; the
-      repetition_stats/document_profile precedent): each batch
-      tokenizes in pandas, `pd.factorize`s the tokens and runs md5
-      ONCE PER DISTINCT token in the batch (the JVM lane pays
-      md5 + base-16 `conv` per token OCCURRENCE — measured 6× the
-      oracle's vectorized md5 at sf1), then computes the per-doc bit
-      votes with C-speed numpy `reduceat` over the doc-contiguous
-      token stream and packs the signature in-kernel. Per-batch
-      memoization degrades gracefully with vocabulary size (a
-      web-scale batch still amortizes natural-text token repetition);
-      the stage stays map-only at any scale. It beat the codegen lane
-      over the same md5 hashes at sf1 (docs/perf.md).
-
-    xxhash64 stays in the JVM: it is already vectorized there, and numpy
-    has no xxhash64.
-
-    ``hash_mode="portable"`` (60-bit md5-derived) makes signatures
-    engine-reproducible for SQL oracles; its top 4 bits are constant 0 so
-    the effective signature is 60 bits — fine for near-dup voting.
-    """
-    if hash_mode == "portable":
-        return _simhash_signatures_arrow(df, id_col, text_col, bits)
-    return _simhash_signatures_sql(df, id_col, text_col, bits, hash_mode)
-
-
-def _simhash_signatures_sql(
-    df: DataFrame, id_col: str, text_col: str, bits: int, hash_mode: str
-) -> DataFrame:
-    """The codegen lane of :func:`simhash_signatures`."""
-    from patito_spark.functions.hashing import hash64
-
-    exploded = df.select(
-        F.col(id_col).alias("__id"),
-        F.explode(F.split(F.col(text_col), " ")).alias("__tok"),
-    ).select("__id", hash64("__tok", mode=hash_mode).alias("__h"))
-    # Packed vote counters: two 32-bit lanes per 64-bit accumulator —
-    # lane k of accumulator j counts the tokens whose hash bit 2j+k is
-    # set. Halves the aggregation-buffer updates of the naive
-    # one-sum-per-bit shape (measured ~25% off the signature stage at
-    # sf1) and replaces the ±1 branch with straight-line bit
-    # arithmetic. Bit i then votes positive iff ones_i > n/2, i.e.
-    # 2*ones_i > n — identical (ties included) to sum(±1) > 0. The
-    # binding overflow is the odd lane's (<<32) contributions saturating
-    # the signed int64 SUM at 2^31 tokens in ONE document — still far
-    # beyond Spark's 2 GiB string limit, so the packing is safe at any
-    # reachable document size.
-    n_acc = (bits + 1) // 2
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for j in range(n_acc):
-        b0, b1 = 2 * j, 2 * j + 1
-        if b1 < bits:
-            lane_expr = f"((__h >> {b0}) & 1L) + (((__h >> {b1}) & 1L) << 32)"
-        else:
-            lane_expr = f"((__h >> {b0}) & 1L)"
-        aggs.append(F.sum(F.expr(lane_expr)).alias(f"__p{j}"))
-    votes = exploded.groupBy("__id").agg(*aggs)
-    terms = []
-    for i in range(bits):
-        j, k = divmod(i, 2)
-        lane = f"((__p{j} >> {32 * k}) & 4294967295L)"
-        terms.append(f"if(({lane} * 2) > __n, shiftleft(1L, {i}), 0L)")
-    return votes.select("__id", F.expr(" | ".join(terms)).alias("__sig"))
-
-
 def simhash_dedup_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
     chunks: Union[int, str] = "auto",
-    hash_mode: str = "xxhash64",
     max_bucket_size: Optional[int] = 100_000,
     expand: str = "full",
 ) -> DataFrame:
@@ -893,12 +677,10 @@ def simhash_dedup_pairs(
     buckets, e.g. massively templated corpora; raise or disable the
     guard (``None``) if those pairs matter.
     """
-    sigs = simhash_signatures(
-        df, id_col=id_col, text_col=text_col, hash_mode=hash_mode
-    )
+    sigs = simhash_signatures(df, id_col=id_col, text_col=text_col)
     # The signature table feeds the distinct-signature collapse AND the
-    # pair expansion; Catalyst would otherwise run the 64-sum
-    # aggregation twice.
+    # pair expansion; Catalyst would otherwise run the Arrow stage
+    # twice.
     sigs = tracked_persist(sigs)
     return hamming_pairs(
         sigs, max_hamming=max_hamming, chunks=chunks,
@@ -1536,7 +1318,6 @@ def dedup_corpus(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.7,
-    hash_mode: str = "xxhash64",
     **minhash_kwargs,
 ) -> DataFrame:
     """The user-facing operation: near-duplicate-free corpus, one call.
@@ -1564,7 +1345,6 @@ def dedup_corpus(
             id_col=id_col,
             text_col=text_col,
             threshold=threshold,
-            hash_mode=hash_mode,
             **minhash_kwargs,
         )
         components = connected_components(pairs, id_a="id_a", id_b="id_b")
@@ -1586,7 +1366,6 @@ def minhash_dedup_against(
     shingle_size: int = 3,
     num_hashes: int = 64,
     bands: int = 16,
-    hash_mode: str = "xxhash64",
     broadcast_reference: bool = True,
     densify: bool = True,
 ) -> DataFrame:
@@ -1601,47 +1380,33 @@ def minhash_dedup_against(
     ``id_col``.
 
     Scale shape: the corpus side is never self-joined — each side's
-    banded bucket keys are computed independently (the same
-    OPH-bin-min pipeline as :func:`minhash_lsh_candidates`, so one
-    shuffle each), and candidates come from the corpus⋈reference bucket
-    equi-join. With ``broadcast_reference`` (the common case: benchmarks
-    are tiny next to a 100 TB corpus) the reference's buckets AND its
-    verification token arrays broadcast, so the bucket join never
-    shuffles the corpus. Verification aggregates per-doc token arrays
-    from the shared (persisted) shingle rows — one map-side-combined
-    shuffle of the corpus shingle stream, same cost class as the
-    signature pipeline itself.
+    per-document features (:func:`_minhash_doc_features_arrow`, the
+    :func:`minhash_dedup_pairs` build: band keys and verify arrays in
+    one map-only Arrow stage, persisted because both the bucket join
+    and the verify read it) are computed independently, and candidates
+    come from the corpus⋈reference bucket equi-join. With
+    ``broadcast_reference`` (the common case: benchmarks are tiny next
+    to a 100 TB corpus) the reference's buckets AND its verification
+    token arrays broadcast, so the bucket join never shuffles the
+    corpus.
     """
     ref_id_col = ref_id_col or id_col
     ref_text_col = ref_text_col or text_col
-    assert num_hashes % bands == 0
 
-    corpus_sh = tracked_persist(
-        shingle_hash_rows(
-            df, id_col=id_col, text_col=text_col, n=shingle_size,
-            hash_mode=hash_mode, distinct=False,
-        )
-    )
-    ref_sh = tracked_persist(
-        shingle_hash_rows(
-            reference, id_col=ref_id_col, text_col=ref_text_col,
-            n=shingle_size, hash_mode=hash_mode, distinct=False,
-        )
-    )
-
-    def banded(sh: DataFrame) -> DataFrame:
-        return banded_signatures(
-            sh, num_hashes=num_hashes, bands=bands, densify=densify
+    def features(frame: DataFrame, id_c: str, text_c: str) -> DataFrame:
+        return tracked_persist(
+            _minhash_doc_features_arrow(
+                frame, id_c, text_c, n=shingle_size, num_hashes=num_hashes,
+                bands=bands, densify=densify,
+            )
         )
 
-    left = banded(corpus_sh).select(
-        F.col("__id").alias("__cid"), "band", "bucket"
-    )
-    right = banded(ref_sh).select(
-        F.col("__id").alias("__rid"), "band", "bucket"
-    )
-    ref_toks = ref_sh.groupBy(F.col("__id").alias("__rtid")).agg(
-        F.array_sort(F.collect_set("__h")).alias("__rtokens")
+    corpus_f = features(df, id_col, text_col)
+    ref_f = features(reference, ref_id_col, ref_text_col)
+    left = _band_buckets(corpus_f).withColumnRenamed("__id", "__cid")
+    right = _band_buckets(ref_f).withColumnRenamed("__id", "__rid")
+    ref_toks = ref_f.select(
+        F.col("__id").alias("__rtid"), F.col("__jtokens").alias("__rtokens")
     )
     if broadcast_reference:
         right = F.broadcast(right)
@@ -1652,8 +1417,8 @@ def minhash_dedup_against(
         .select("__cid", "__rid")
         .distinct()
     )
-    corpus_toks = corpus_sh.groupBy(F.col("__id").alias("__ctid")).agg(
-        F.array_sort(F.collect_set("__h")).alias("__ctokens")
+    corpus_toks = corpus_f.select(
+        F.col("__id").alias("__ctid"), F.col("__jtokens").alias("__ctokens")
     )
     return (
         candidates.join(

@@ -43,7 +43,6 @@ def update_corpus(
     url_col: Optional[str] = None,
     neardup_threshold: Optional[float] = 0.7,
     within_batch_threshold: Optional[float] = 0.7,
-    hash_mode: str = "xxhash64",
     broadcast_history: bool = False,
 ) -> dict:
     """Admit the ``incoming`` snapshot against ``history``.
@@ -100,7 +99,6 @@ def update_corpus(
             id_col=id_col,
             text_col=text_col,
             threshold=neardup_threshold,
-            hash_mode=hash_mode,
             broadcast_reference=broadcast_history,
         ).select(id_col)
         batch = batch.join(near, on=id_col, how="left_anti")
@@ -114,7 +112,6 @@ def update_corpus(
             id_col=id_col,
             text_col=text_col,
             threshold=within_batch_threshold,
-            hash_mode=hash_mode,
         )
         stages.append(
             ("within_batch_dedup", {"threshold": within_batch_threshold})

@@ -72,7 +72,6 @@ def prepare_training_corpus(
     domain_col: Optional[str] = None,
     max_docs_per_domain: Optional[int] = None,
     domain_cap_order_col: Optional[str] = None,
-    hash_mode: str = "xxhash64",
 ) -> dict:
     """Run the standard pretraining-data pipeline over a document table.
 
@@ -167,7 +166,6 @@ def prepare_training_corpus(
             id_col=id_col,
             text_col=text_col,
             span_tokens=dedup_span_tokens,
-            hash_mode=hash_mode,
         )
         stages["span_dedup"] = cleaned
     gated = filter_corpus(
@@ -347,7 +345,6 @@ def prepare_training_corpus(
             id_col=id_col,
             text_col=text_col,
             threshold=dedup_threshold,
-            hash_mode=hash_mode,
         )
         stages["near_dedup"] = gated
     if image_blob_col is not None:
@@ -434,9 +431,6 @@ def prepare_training_corpus(
             k=wk,
             w=ww,
             min_shared=1,
-            hash_mode=hash_mode
-            if hash_mode in ("crc32poly", "portable")
-            else "crc32poly",
         ).select(id_col)
         gated = gated.join(hit, on=id_col, how="left_anti")
         if contamination_neardup_threshold is not None:
@@ -446,7 +440,6 @@ def prepare_training_corpus(
                 id_col=id_col,
                 text_col=text_col,
                 threshold=contamination_neardup_threshold,
-                hash_mode=hash_mode,
             ).select(id_col)
             gated = gated.join(near, on=id_col, how="left_anti")
     elif benchmark is not None and contamination_action == "scrub":
@@ -463,7 +456,6 @@ def prepare_training_corpus(
             id_col=id_col,
             text_col=text_col,
             span_tokens=contamination_ngram,
-            hash_mode=hash_mode,
         )
         if contamination_neardup_threshold is not None:
             near = minhash_dedup_against(
@@ -472,7 +464,6 @@ def prepare_training_corpus(
                 id_col=id_col,
                 text_col=text_col,
                 threshold=contamination_neardup_threshold,
-                hash_mode=hash_mode,
             ).select(id_col)
             gated = gated.join(near, on=id_col, how="left_anti")
     elif benchmark is not None:
@@ -482,7 +473,6 @@ def prepare_training_corpus(
             id_col=id_col,
             text_col=text_col,
             n=contamination_ngram,
-            hash_mode=hash_mode,
         ).select(id_col)
         gated = gated.join(contaminated, on=id_col, how="left_anti")
         if contamination_neardup_threshold is not None:
@@ -495,7 +485,6 @@ def prepare_training_corpus(
                 id_col=id_col,
                 text_col=text_col,
                 threshold=contamination_neardup_threshold,
-                hash_mode=hash_mode,
             ).select(id_col)
             gated = gated.join(near, on=id_col, how="left_anti")
     if benchmark is not None:

@@ -16,22 +16,26 @@ from patito_spark.functions.cache import tracked_persist
 _BUCKETS = 1_000_000
 
 
-def _hash_fraction(key: Column, seed: int, hash_mode: str = "xxhash64") -> Column:
-    """Uniform [0, 1) value derived from a key column (deterministic).
+def _seeded_hash(key: Column, seed: int, hash_mode: str) -> Column:
+    """Deterministic 64-bit hash of a key column under ``seed``.
 
-    ``hash_mode="portable"`` derives the fraction from an md5-based hash of
-    ``"<key>:<seed>"`` that other engines reproduce exactly (see
+    ``hash_mode="portable"`` is the md5-based hash of ``"<key>:<seed>"``
+    that other engines reproduce exactly (see
     :mod:`patito_spark.functions.hashing`) — used by correctness oracles;
-    ``xxhash64`` is the fast default.
+    ``xxhash64`` (seeded) is the fast default.
     """
     if hash_mode == "portable":
         from patito_spark.functions.hashing import portable_hash64
 
-        h = portable_hash64(
+        return portable_hash64(
             F.concat(key.cast("string"), F.lit(":"), F.lit(str(seed)))
         )
-    else:
-        h = F.xxhash64(key, F.lit(seed))
+    return F.xxhash64(key, F.lit(seed))
+
+
+def _hash_fraction(key: Column, seed: int, hash_mode: str = "xxhash64") -> Column:
+    """Uniform [0, 1) value derived from a key column (deterministic)."""
+    h = _seeded_hash(key, seed, hash_mode)
     return F.pmod(h, F.lit(_BUCKETS)) / F.lit(_BUCKETS)
 
 
@@ -94,15 +98,7 @@ def sample_exact_n(
     """
     if n < 0:
         raise ValueError(f"n must be >= 0, got {n}")
-    if hash_mode == "portable":
-        from patito_spark.functions.hashing import portable_hash64
-
-        h = portable_hash64(
-            F.concat(F.col(key_col).cast("string"), F.lit(":"),
-                     F.lit(str(seed)))
-        )
-    else:
-        h = F.xxhash64(F.col(key_col), F.lit(seed))
+    h = _seeded_hash(F.col(key_col), seed, hash_mode)
     return (
         df.withColumn("__sx_h", h)
         .orderBy(F.col("__sx_h").asc(), F.col(key_col).asc())
@@ -156,7 +152,8 @@ def leakage_safe_split(
     and the split itself is the usual map-only hash filter. Expected
     test mass is ``test_fraction`` of CLUSTERS, which converges to
     ``test_fraction`` of documents when duplicate families are small
-    relative to the corpus.
+    relative to the corpus. ``hash_mode`` picks the split hash only; the
+    MinHash pairs always use the portable hash.
     """
     from patito_spark.operators.dedup import minhash_dedup_pairs
     from patito_spark.operators.graph import connected_components
@@ -167,7 +164,6 @@ def leakage_safe_split(
             id_col=id_col,
             text_col=text_col,
             threshold=threshold,
-            hash_mode=hash_mode,
             **minhash_kwargs,
         )
     labels = connected_components(pairs, id_a="id_a", id_b="id_b").select(
@@ -278,20 +274,8 @@ def cap_per_group(
         # Tie-break on a hash of the full row instead: identical rows
         # are interchangeable, distinct tied rows resolve stably.
         order.append(F.xxhash64(*df.columns, F.lit(seed)).asc())
-    elif key_col is not None:
-        if hash_mode == "portable":
-            from patito_spark.functions.hashing import portable_hash64
-
-            tie = portable_hash64(
-                F.concat(
-                    F.col(key_col).cast("string"),
-                    F.lit(":"),
-                    F.lit(str(seed)),
-                )
-            )
-        else:
-            tie = F.xxhash64(F.col(key_col), F.lit(seed))
-        order.append(tie.asc())
+    else:
+        order.append(_seeded_hash(F.col(key_col), seed, hash_mode).asc())
     w = Window.partitionBy(*groups).orderBy(*order)
     return (
         df.withColumn("__cap_rn", F.row_number().over(w))

@@ -37,8 +37,8 @@ of islands, not the per-gram hot path (which stays codegen).
 False positives: two distinct n-grams colliding under xxhash64 would
 cut a non-duplicated span; the expected number of collisions is
 ~G^2 / 2^65 for G distinct grams (< 1 at 100 TB-scale G ~ 10^12,
-~0.03 at G = 10^9). ``hash_mode="portable"`` (60-bit) trades a
-little more collision head-room for engine-reproducible replay.
+~0.03 at G = 10^9). Up to those collisions the answer is the same
+under any 64-bit hash, which is why the spans take no hash option.
 """
 
 from __future__ import annotations
@@ -66,7 +66,6 @@ def duplicate_span_intervals(
     span_tokens: int = 20,
     min_count: int = 2,
     keep_first: bool = True,
-    hash_mode: str = "xxhash64",
     materialize_grams: bool = True,
 ) -> DataFrame:
     """Merged duplicated-run intervals per document.
@@ -101,9 +100,7 @@ def duplicate_span_intervals(
     once (~tokens x 16 bytes, memory-and-disk). Disable at extreme
     scale to trade a second gram build for zero cache footprint.
     """
-    grams = gram_hash_rows(
-        df, id_col, text_col, span_tokens, hash_mode, positioned=True
-    )
+    grams = gram_hash_rows(df, id_col, text_col, span_tokens, positioned=True)
     if materialize_grams:
         from patito_spark.functions.cache import tracked_persist
 
@@ -265,7 +262,6 @@ def dedup_spans(
     min_count: int = 2,
     keep_first: bool = True,
     min_remaining_tokens: Optional[int] = 1,
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Cut duplicated >= ``span_tokens``-token runs out of every document.
 
@@ -295,7 +291,6 @@ def dedup_spans(
         span_tokens=span_tokens,
         min_count=min_count,
         keep_first=keep_first,
-        hash_mode=hash_mode,
     )
     return _apply_cut(df, intervals, id_col, text_col, min_remaining_tokens)
 
@@ -308,7 +303,6 @@ def scrub_spans(
     ref_text_col: Optional[str] = None,
     span_tokens: int = 8,
     min_remaining_tokens: Optional[int] = 1,
-    hash_mode: str = "xxhash64",
     max_broadcast_grams: Optional[int] = 5_000_000,
 ) -> DataFrame:
     """Cut every token run that appears verbatim in ``reference``.
@@ -330,15 +324,13 @@ def scrub_spans(
     only matched candidates reach the islands windows and the cut.
     Above the bound the match falls back to a shuffle join (AQE
     decides). ``keep_first`` does not apply: every copy is leaked by
-    definition. The reference side is read once; pass the same
-    ``hash_mode`` the corpus uses.
+    definition. The reference side is read once.
     """
     ref_text = ref_text_col or text_col
     ref_grams = (
         # the text doubles as the id: only the hash set is needed
         gram_hash_rows(
-            reference, ref_text, ref_text, span_tokens, hash_mode,
-            positioned=True,
+            reference, ref_text, ref_text, span_tokens, positioned=True
         )
         .select("__h")
         .distinct()
@@ -355,9 +347,7 @@ def scrub_spans(
             ref_grams = F.broadcast(ref_grams)
     else:
         ref_grams = F.broadcast(ref_grams)
-    grams = gram_hash_rows(
-        df, id_col, text_col, span_tokens, hash_mode, positioned=True
-    )
+    grams = gram_hash_rows(df, id_col, text_col, span_tokens, positioned=True)
     matched = grams.join(ref_grams, on="__h", how="left_semi")
     intervals = _merge_islands(matched, span_tokens, id_col)
     return _apply_cut(df, intervals, id_col, text_col, min_remaining_tokens)

@@ -2199,7 +2199,6 @@ def cross_doc_repetition(
     text_col: str = "text",
     ngram: int = 3,
     min_docs: int = 2,
-    hash_mode: str = "xxhash64",
     materialize_grams: bool = True,
 ) -> DataFrame:
     """Per-document fraction of n-grams shared with OTHER documents.
@@ -2238,9 +2237,7 @@ def cross_doc_repetition(
     """
     from patito_spark.operators.dedup import shingle_hash_rows
 
-    grams = shingle_hash_rows(
-        df, id_col=id_col, text_col=text_col, n=ngram, hash_mode=hash_mode
-    )
+    grams = shingle_hash_rows(df, id_col=id_col, text_col=text_col, n=ngram)
     if materialize_grams:
         from patito_spark.functions.cache import tracked_persist
 

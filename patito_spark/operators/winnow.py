@@ -29,39 +29,25 @@ from pyspark.sql import types as T
 # deterministic per-token value (PYTHONHASHSEED-independent).
 _BASE = 1_000_003
 
-#: hex chars of md5 used by the portable gram hash (60 bits < 2^63 —
-#: the ``functions.hashing.portable_hash64`` convention, so DuckDB
-#: replays it as ('0x' || substring(md5(gram), 1, 15))::BIGINT).
-_PORTABLE_HEX = 15
-
 
 def _gram_hashes(tokens, k: int, hash_mode: str):
     """uint64 gram-hash array for one document (``len(tokens) ≥ k``).
 
     ``crc32poly`` (default): crc32 token hashes combined by the mod-2^64
-    polynomial — vectorized, the production path. ``portable``: 60-bit
-    md5 of the space-joined gram string — slower, but engine-independent
-    so the correctness oracles replay selection value-for-value in SQL
-    (the ``functions.hashing`` portable convention).
+    polynomial — vectorized, the production path. ``portable``:
+    :func:`patito_spark.functions.hashing.portable_hash64_np` of the
+    space-joined gram string — slower, but engine-independent so the
+    correctness oracles replay selection value-for-value in SQL.
     """
     import numpy as np
 
     n_grams = len(tokens) - k + 1
     if hash_mode == "portable":
-        import hashlib
+        from patito_spark.functions.hashing import portable_hash64_np
 
-        return np.array(
-            [
-                int(
-                    hashlib.md5(
-                        " ".join(tokens[i : i + k]).encode("utf-8")
-                    ).hexdigest()[:_PORTABLE_HEX],
-                    16,
-                )
-                for i in range(n_grams)
-            ],
-            dtype="uint64",
-        )
+        return portable_hash64_np(
+            [" ".join(tokens[i : i + k]) for i in range(n_grams)]
+        ).astype("uint64")
     if hash_mode != "crc32poly":
         raise ValueError(
             f"unknown hash mode {hash_mode!r}; use 'crc32poly' or 'portable'"

@@ -12,11 +12,11 @@ Two stages, both scale-shaped:
 
 1. **Stateless signature stage** (``mapInPandas``, Arrow-batched): each
    document's one-permutation-hashing banded bucket keys are computed
-   in-batch from the *portable* 60-bit md5 hash — byte-identical to the
-   batch pipeline's ``hash_mode="portable"`` values
-   (``functions/hashing.py``), so batch and stream agree on every bucket
-   and the equivalence is testable value-for-value. Map-only: no
-   shuffle, no state.
+   in-batch from the *portable* 60-bit md5 hash
+   (:func:`patito_spark.functions.hashing.portable_hash64_np`), the hash
+   that defines the batch MinHash signatures too, so batch and stream
+   agree on every bucket and the equivalence is testable value-for-value.
+   Map-only: no shuffle, no state.
 2. **Stateful flag stage** (``applyInPandasWithState`` on
    ``(band, bucket)``): state holds ONE representative id per occupied
    bucket — O(occupied buckets) memory, independent of stream length.
@@ -35,19 +35,12 @@ scale, drop candidates unverified.
 
 from __future__ import annotations
 
-import hashlib
 from typing import Iterator, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from patito_spark.functions.hashing import PORTABLE_HEX_CHARS
-
-
-def _portable_hash_py(s: str) -> int:
-    """Python replica of functions.hashing.portable_hash64 (top 60 md5
-    bits; non-negative, inside signed int64 on every engine)."""
-    return int(hashlib.md5(s.encode()).hexdigest()[:PORTABLE_HEX_CHARS], 16)
+from patito_spark.functions.hashing import portable_hash64_np
 
 
 def _banded_buckets(
@@ -64,10 +57,10 @@ def _banded_buckets(
     the single shingle), OPH bin-mins (``hash % num_hashes`` routing),
     rotation densification of empty bins (borrow from the next occupied
     bin, circularly — matching
-    :func:`patito_spark.operators.dedup.banded_signatures`), bucket key
-    = the sorted ``bin:min`` pairs of the band. The batch side
-    xxhash64-compresses this string JVM-side; the string itself IS the
-    grouping key here — identical collision structure, no JVM hash
+    :func:`patito_spark.operators.dedup._minhash_doc_features_arrow`),
+    bucket key = the sorted ``bin:min`` pairs of the band. The batch
+    side xxhash64-compresses this string JVM-side; the string itself IS
+    the grouping key here — identical collision structure, no JVM hash
     needed in Python.
     """
     import bisect
@@ -82,8 +75,7 @@ def _banded_buckets(
         grams = {text}
     rows_per_band = num_hashes // bands
     mins: dict[int, int] = {}
-    for g in grams:
-        h = _portable_hash_py(g)
+    for h in portable_hash64_np(grams).tolist():
         b = h % num_hashes
         if b not in mins or h < mins[b]:
             mins[b] = h

@@ -77,14 +77,25 @@ def test_simhash_pairs(docs):
     assert found[(1, 2)] == 0
 
 
+def _md5_hash(s):
+    """The portable hash, spelled independently of the library."""
+    import hashlib
+
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
+
+
 def test_minhash_arrow_sql_parity(spark):
-    # The round-15 per-doc Arrow feature build (shingles + md5 + OPH
-    # bins + densification + band keys + verify gram-sets in one
-    # map-only stage, the hash_mode="portable" lane) must produce the
-    # identical verified pair set as the codegen lane (the xxhash64
-    # lane's building blocks over the same portable hashes), for both
-    # densify variants, across short docs, empty/null text and unicode.
+    # The per-doc Arrow feature build (shingles + md5 + OPH bins +
+    # densification + band keys + verify gram-sets in one map-only
+    # stage) must give the verified pair set of a pure-Python pipeline:
+    # streaming.dedup._banded_buckets band keys, the 1 < n <= 1000
+    # bucket guard, and Jaccard over sorted distinct portable gram
+    # hashes — for both densify variants, across short docs, empty/null
+    # text and unicode.
     import random
+    from collections import defaultdict
+
+    from patito_spark.streaming.dedup import _banded_buckets
 
     rnd = random.Random(7)
     words = [f"w{i}" for i in range(30)] + ["ü", ""]
@@ -99,83 +110,92 @@ def test_minhash_arrow_sql_parity(spark):
             rows.append((1000 + d, " ".join(twin)))
     rows += [(5000, ""), (5001, None), (5002, "a"), (5003, "ü ü")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    shingled = dedup.shingle_hash_rows(
-        df, n=3, hash_mode="portable", distinct=False
-    )
-    toks = shingled.groupBy(F.col("__id").alias("__jid")).agg(
-        F.array_sort(F.collect_set("__h")).alias("__jtokens")
-    )
+
+    toks = {}
+    for i, text in rows:
+        if text is None:
+            continue
+        t = text.split(" ")
+        grams = (
+            {" ".join(t[j : j + 3]) for j in range(len(t) - 2)}
+            if len(t) >= 3
+            else {text}
+        )
+        toks[i] = {_md5_hash(g) for g in grams}
+
+    def jac(a, b):
+        inter = len(toks[a] & toks[b])
+        union = len(toks[a]) + len(toks[b]) - inter
+        return 1.0 if union == 0 else inter / union
+
     for densify in (True, False):
         arrow = dedup.minhash_dedup_pairs(
-            df, threshold=0.5, hash_mode="portable", densify=densify
+            df, threshold=0.5, densify=densify
         ).collect()
-        candidates = dedup.minhash_lsh_candidates(
-            df, shingle_rows=shingled, densify=densify
-        )
-        sql = (
-            candidates.join(
-                toks.withColumnsRenamed({"__jid": "id_a", "__jtokens": "a"}),
-                on="id_a",
-            )
-            .join(
-                toks.withColumnsRenamed({"__jid": "id_b", "__jtokens": "b"}),
-                on="id_b",
-            )
-            .withColumn("jaccard", dedup.jaccard(F.col("a"), F.col("b")))
-            .filter(F.col("jaccard") >= 0.5)
-            .collect()
-        )
-        got = {
-            lane: {(r.id_a, r.id_b): round(r.jaccard, 12) for r in out}
-            for lane, out in (("arrow", arrow), ("sql", sql))
+        buckets = defaultdict(list)
+        for i, text in rows:
+            if text is not None:
+                for key in _banded_buckets(text, 3, 64, 16, densify=densify):
+                    buckets[key].append(i)
+        candidates = {
+            (a, b)
+            for ids in buckets.values()
+            if 1 < len(ids) <= 1000
+            for a in ids
+            for b in ids
+            if a < b
         }
-        assert got["arrow"] == got["sql"]
-        assert got["arrow"]  # the twins guarantee a non-empty pair set
+        got = {(r.id_a, r.id_b): round(r.jaccard, 12) for r in arrow}
+        want = {
+            p: round(jac(*p), 12) for p in candidates if jac(*p) >= 0.5
+        }
+        assert got == want
+        assert got  # the twins guarantee a non-empty pair set
 
 
 def test_simhash_arrow_sql_parity(spark):
-    # The round-15 map-only Arrow lane must be bit-identical to the
-    # codegen sql lane, including the tokenization edge cases: empty
-    # text (one empty token), null text (no output row), consecutive/
-    # trailing spaces (empty tokens kept, Java split(re, -1)), and
-    # non-ASCII (md5 over UTF-8 bytes).
-    df = spark.createDataFrame(
-        [
-            (1, "hello world hello spark"),
-            (2, ""),
-            (3, None),
-            (4, "a  b"),
-            (5, "héllo wörld ünïcode"),
-            (6, "x "),
-            (7, "the quick brown fox jumps over the lazy dog " * 50),
-        ],
-        schema="doc_id long, text string",
-    )
+    # The map-only Arrow build must match a pure-Python SimHash over the
+    # same md5 token hashes, including the tokenization edge cases:
+    # empty text (one empty token), null text (no output row),
+    # consecutive/trailing spaces (empty tokens kept, Java
+    # split(re, -1)), and non-ASCII (md5 over UTF-8 bytes).
+    rows = [
+        (1, "hello world hello spark"),
+        (2, ""),
+        (3, None),
+        (4, "a  b"),
+        (5, "héllo wörld ünïcode"),
+        (6, "x "),
+        (7, "the quick brown fox jumps over the lazy dog " * 50),
+    ]
+    df = spark.createDataFrame(rows, schema="doc_id long, text string")
     for bits in (64, 32):
         arrow = {
             r["__id"]: r["__sig"]
-            for r in dedup.simhash_signatures(
-                df, bits=bits, hash_mode="portable"
-            ).collect()
+            for r in dedup.simhash_signatures(df, bits=bits).collect()
         }
-        sql = {
-            r["__id"]: r["__sig"]
-            for r in dedup._simhash_signatures_sql(
-                df, "doc_id", "text", bits, "portable"
-            ).collect()
-        }
-        assert arrow == sql
+        want = {}
+        for i, text in rows:
+            if text is None:
+                continue
+            hashes = [_md5_hash(t) for t in text.split(" ")]
+            want[i] = sum(
+                1 << b
+                for b in range(min(bits, 60))
+                if 2 * sum((h >> b) & 1 for h in hashes) > len(hashes)
+            )
+        assert arrow == want
         assert 3 not in arrow
 
 
 def test_simhash_arrow_plan_is_map_only(spark):
-    # hash_mode='portable' must add ZERO exchanges: the signature stage
-    # is a single mapInPandas over the scan.
+    # The signature build adds ZERO exchanges: a single mapInPandas
+    # over the scan.
     df = spark.createDataFrame(
         [(1, "a b"), (2, "c d")], schema="doc_id long, text string"
     )
     plan = (
-        dedup.simhash_signatures(df, hash_mode="portable")
+        dedup.simhash_signatures(df)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -102,7 +102,7 @@ def test_plan_only_until_materialized(spark, history):
 
 def test_update_corpus_matches_duckdb_replay(spark):
     """Round-10 (verdict item 6): the full admission chain value-oracled
-    end to end in portable-hash mode — refetch anti-join, fingerprint
+    end to end over portable MinHash hashes — refetch anti-join, fingerprint
     anti-join, cross-corpus banded-minhash near-dup drop, and the
     within-batch LSH -> components -> min-id-representative self-dedup,
     all replayed in one DuckDB statement over the same two snapshots."""
@@ -142,7 +142,6 @@ def test_update_corpus_matches_duckdb_replay(spark):
     out = update_corpus(
         history, incoming, url_col="url",
         neardup_threshold=0.6, within_batch_threshold=0.6,
-        hash_mode="portable",
     )
     got = ids(out["admitted"])
 

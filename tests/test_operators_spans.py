@@ -172,12 +172,6 @@ def test_min_count_three(spark):
     assert out4 == {1: "a b c d", 2: "a b c z", 3: "a b c q"}
 
 
-def test_portable_hash_mode_agrees(docs):
-    fast = by_id(dedup_spans(docs, span_tokens=3))
-    portable = by_id(dedup_spans(docs, span_tokens=3, hash_mode="portable"))
-    assert fast == portable
-
-
 # -------------------------------------------------------------------- plans
 
 def test_gram_stream_shuffles_once(docs):

@@ -852,10 +852,10 @@ def test_arrow_portable_lanes_1m_docs(spark):
         "if(id % 1000 = 0, 'alpha beta gamma delta epsilon zeta', "
         "concat('w', id % 5000, ' x', id % 7000, ' y', id + 2)) as text",
     )
-    sigs = simhash_signatures(docs, hash_mode="portable")
+    sigs = simhash_signatures(docs)
     assert sigs.count() == 1_000_000
     pairs = minhash_dedup_pairs(
-        docs, threshold=0.9, hash_mode="portable",
+        docs, threshold=0.9,
         num_hashes=32, bands=8, max_bucket_size=2000,
         broadcast_verify_max_docs=2_000_000,
     )

@@ -4,11 +4,8 @@ import uuid
 
 from pyspark.sql import functions as F
 
-from patito_spark.streaming.dedup import (
-    _banded_buckets,
-    _portable_hash_py,
-    streaming_dedup_lsh,
-)
+from patito_spark.functions.hashing import portable_hash64_np
+from patito_spark.streaming.dedup import _banded_buckets, streaming_dedup_lsh
 
 PARAMS = dict(num_hashes=16, bands=4, shingle_size=2)
 
@@ -38,8 +35,7 @@ def test_portable_hash_matches_spark(spark):
     words = ["alpha beta", "gamma", "x y z"]
     df = spark.createDataFrame([(w,) for w in words], "s string")
     got = {r["s"]: r["h"] for r in df.select("s", portable_hash64("s").alias("h")).collect()}
-    for w in words:
-        assert _portable_hash_py(w) == got[w]
+    assert portable_hash64_np(words).tolist() == [got[w] for w in words]
 
 
 def test_short_doc_single_shingle():
@@ -47,7 +43,7 @@ def test_short_doc_single_shingle():
     # densification the single occupied bin's value fills ALL 16 bins,
     # so every band gets a full 4-entry key derived from that one hash
     buckets = _banded_buckets("solo", 3, 16, 4)
-    h = _portable_hash_py("solo")
+    h = int(portable_hash64_np(["solo"])[0])
     assert buckets == [
         (band, ",".join(f"{4 * band + j}:{h}" for j in range(4)))
         for band in range(4)
@@ -83,7 +79,6 @@ def test_flags_match_batch_lsh_candidates(spark, tmp_path):
         num_hashes=PARAMS["num_hashes"],
         bands=PARAMS["bands"],
         shingle_size=PARAMS["shingle_size"],
-        hash_mode="portable",
         max_bucket_size=10**6,
     )
     expected = {r["id_b"] for r in pairs.select("id_b").distinct().collect()}
